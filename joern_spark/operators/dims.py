@@ -10,10 +10,10 @@ otherwise return the frame unhinted so Catalyst plans a shuffle join — with
 AQE skew handling enabled in the session conf, the job degrades instead of
 dying.
 
-The pipeline computes the corpus vocabulary size ONCE per run (a side product
-of the recovery-dictionary job) and installs it with :func:`dim_fits_hint`,
-so the hot path pays zero extra probe jobs; standalone calls (tests, DSL,
-the over-budget DataFrame fallback) probe per-site with an early-stopping
+The pipeline bounds the corpus vocabulary size ONCE per run from one per-kind
+node count job: the fused kernel gets an explicit ``fits`` for its fact joins,
+the linkers get :func:`dim_fits_hint`, so the hot path pays zero extra probe
+jobs; standalone calls (tests, DSL) probe per-site with an early-stopping
 ``limit(budget+1).count()``.
 """
 
@@ -24,8 +24,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# matches the reference-derived 2M-row dictionary budget used by the fused
-# kernel (method_kernels.MAX_BROADCAST_NAMES, type_recovery.RECOVERY_DICT_BUDGET)
+# rows per broadcast dimension (the reference-derived 2M-row dictionary budget)
 MAX_BROADCAST_DIM = 2_000_000
 
 _FITS_HINT: bool | None = None

@@ -1,22 +1,23 @@
-"""Fused per-method kernel pass: CFG + dominators/CDG + reaching-def in ONE
-shuffle-free ``mapInArrow`` over the doc-partitioned parse output.
+"""Fused per-method kernel pass: CFG + dominators/CDG + reaching-def + type
+recovery in ONE ``mapInArrow`` over the doc-partitioned parse output.
 
 Why: the separate ``applyInPandas`` passes are semantically right but
 physically wasteful — each one shuffles every node row by ``method_id`` and
 pays per-group pandas overhead on ~30-row groups (measured ~88 ms CPU/doc at
 sf0.1, dominated by group plumbing, not kernel math). Methods never span
 documents, and a document's rows never span partitions (they are emitted by
-one parse call), so all three kernels can run partition-locally with a
-python-side groupby: zero shuffles, one Arrow pass, same kernel functions
-(`cfg_edges_for_method`, `dominator_edges_for_method`,
-`reaching_def_edges_for_method`) — the individual passes remain available
-and tested for API parity.
+one parse call), so all kernels can run partition-locally with a python-side
+groupby: one Arrow pass, same kernel functions (`cfg_edges_for_method`,
+`dominator_edges_for_method`, `reaching_def_edges_for_method`,
+`recover_types_for_method`) — the cogrouped per-pass implementations remain
+as the parity references the tests compare against.
 
-The reaching-def EdgeValidator needs to know whether a CALL's callee is an
-internal method — a cross-document fact. It ships as a broadcast set of
-internal full_names (the north rule's broadcast alias-dictionary pattern);
-above ``MAX_BROADCAST_NAMES`` the pipeline falls back to the join+cogroup
-implementation.
+Cross-document facts (is a callee internal, its return types, a method's
+enclosing class, the member types per field name) arrive as ordinary columns
+on the input rows, filled by :func:`_kernel_input`'s budgeted left joins.
+Under the broadcast budget those are broadcast hash joins and the node stream
+is never shuffled; over it they are shuffle joins and the stream is
+re-clustered by ``doc_id`` — the same kernel, degraded, never a second path.
 """
 
 from __future__ import annotations
@@ -30,23 +31,76 @@ from pyspark.sql import functions as F
 from ..ids import stub_id
 from ..schema import EDGES_SCHEMA_DDL, arrow_schema
 from .cfg_pass import cfg_edges_for_method
+from .dims import budgeted_broadcast
 from .dominators import dominator_edges_for_method
 from .reaching_def import reaching_def_edges_for_method
+from .type_recovery import recover_types_for_method
 
-MAX_BROADCAST_NAMES = 2_000_000
 _YIELD_EVERY = 50_000  # output edge rows per yielded Arrow frame
 
+_COLS = ["node_id", "doc_id", "kind", "name", "full_name", "code",
+         "signature", "dispatch_type", "order", "argument_index", "line",
+         "span_offset", "type_full_name", "is_external", "parent_id",
+         "method_id", "ctrl_type"]
 
-def internal_method_names(nodes: DataFrame) -> set[str] | None:
-    """Distinct internal METHOD full_names (the broadcast dictionary), or
-    None if the dictionary exceeds the broadcast budget."""
-    rows = (
-        nodes.filter((F.col("kind") == "METHOD") & (~F.col("is_external")))
-        .select("full_name").distinct().limit(MAX_BROADCAST_NAMES + 1).collect()
+
+def _kernel_input(nodes: DataFrame, fits: bool) -> DataFrame:
+    """Method-scoped node rows plus the cross-document fact columns:
+
+    - CALL rows: ``callee_internal`` (true when any METHOD of that full_name
+      is internal, else null — the EdgeValidator flag) and
+      ``callee_ret_types`` (sorted non-ANY METHOD_RETURN types);
+    - METHOD rows: ``class_full``, the TYPE_DECL that parents the method;
+    - FIELD_IDENTIFIER rows: ``member_types``, class full name → sorted
+      declared types of that class's members with the row's name.
+
+    ``fits``: the three dimensions are bounded by the METHOD, TYPE_DECL and
+    MEMBER counts; when those fit the broadcast budget the joins broadcast
+    and keep the stream's doc-contiguous order, otherwise they shuffle and
+    the rows are re-clustered by doc."""
+    def dim(df):
+        return budgeted_broadcast(df, fits=fits)
+
+    typed = F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
+    rets = nodes.filter(
+        (F.col("kind") == "METHOD_RETURN") & typed
+        & (F.col("type_full_name") != "ANY")
+    ).select(F.col("method_id").alias("node_id"),
+             F.col("type_full_name").alias("ret_type"))
+    callees = (
+        nodes.filter(F.col("kind") == "METHOD")
+        .select("node_id", "full_name", "is_external")
+        .join(dim(rets), "node_id", "left")
+        .groupBy(F.col("full_name").alias("callee_full"))
+        .agg(F.max(F.when(~F.col("is_external"), True)).alias("callee_internal"),
+             F.array_sort(F.collect_set("ret_type")).alias("callee_ret_types"))
     )
-    if len(rows) > MAX_BROADCAST_NAMES:
-        return None
-    return {r["full_name"] for r in rows}
+    classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
+        F.col("node_id").alias("class_id"), F.col("full_name").alias("class_full"))
+    members = (
+        nodes.filter((F.col("kind") == "MEMBER") & typed)
+        .join(dim(classes), F.col("parent_id") == F.col("class_id"))
+        .filter(F.col("class_full").isNotNull())
+        .groupBy(F.col("name").alias("field"), "class_full")
+        .agg(F.array_sort(F.collect_set("type_full_name")).alias("types"))
+        .groupBy("field")
+        .agg(F.map_from_entries(F.collect_list(F.struct("class_full", "types")))
+             .alias("member_types"))
+    )
+
+    src = nodes.filter(F.col("method_id").isNotNull()).select(*_COLS)
+    out = (
+        src.join(dim(callees), (src["kind"] == "CALL")
+                 & (src["full_name"] == F.col("callee_full")), "left")
+        .join(dim(classes), (src["kind"] == "METHOD")
+              & (src["parent_id"] == F.col("class_id")), "left")
+        .join(dim(members), (src["kind"] == "FIELD_IDENTIFIER")
+              & (src["name"] == F.col("field")), "left")
+        .drop("callee_full", "class_id", "field")
+    )
+    if not fits:
+        out = out.repartition("doc_id").sortWithinPartitions("doc_id")
+    return out
 
 
 def _synth_param_outs(rows: list[dict]) -> list[dict]:
@@ -66,42 +120,25 @@ def _synth_param_outs(rows: list[dict]) -> list[dict]:
 
 def fused_method_kernels(
     nodes: DataFrame,
-    internal_names: set[str],
+    fits: bool,
     with_dominators: bool = True,
     with_dataflow: bool = True,
-    recovery_dicts: tuple | None = None,
 ) -> DataFrame:
     """parse-output nodes → CFG (+DOMINATE/POST_DOMINATE/CDG) (+REACHING_DEF)
-    edge rows, partition-locally.
-
-    When ``recovery_dicts`` (ret_types, members, class_by_id — from
-    ``type_recovery.collect_recovery_dicts``) is given, also runs the
-    per-method type-recovery mirror and emits its events as rows with
-    ``kind='_TYPE_HINT'`` (src=identifier id, variable=recovered type,
-    dst=0) — the pipeline filters these out of the edge stream and feeds
-    them to the field-access/hint linkers, replacing the DataFrame
-    ``type_recovery_events`` join DAG on the hot path."""
-    cols = ["node_id", "doc_id", "kind", "name", "full_name", "code",
-            "signature", "dispatch_type", "order", "argument_index", "line",
-            "span_offset", "type_full_name", "is_external", "parent_id",
-            "method_id", "ctrl_type"]
-    src = nodes.filter(F.col("method_id").isNotNull()).select(*cols)
-    names_local = internal_names  # closure-captured; Spark broadcasts the task
-    if recovery_dicts is not None:
-        from .type_recovery import recover_types_for_method
-
-        ret_types, members, class_by_id = recovery_dicts
-    else:
-        ret_types = members = class_by_id = None
-
+    edge rows, partition-locally, plus the per-method type-recovery events as
+    rows with ``kind='_TYPE_HINT'`` (src=identifier id, variable=recovered
+    type, dst=0) — the pipeline filters these out of the edge stream and
+    feeds them to the field-access/hint linkers. ``fits`` picks broadcast or
+    shuffle joins for the cross-document facts (:func:`_kernel_input`)."""
     import pyarrow as pa
 
     out_schema = arrow_schema(EDGES_SCHEMA_DDL)
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        # STREAMING group-by: a document's rows are contiguous in the parse
-        # output (one parse call emits the whole doc, and this pass sits
-        # shuffle-free on top of it), so methods complete at doc boundaries.
+        # STREAMING group-by: a document's rows are contiguous in the input
+        # (one parse call emits the whole doc, and _kernel_input either keeps
+        # that order or re-clusters by doc), so methods complete at doc
+        # boundaries.
         # Peak memory = one document + the output buffer — O(doc), not
         # O(partition) — restoring Arrow streaming semantics. A reappearing
         # doc_id would mean the contiguity assumption broke: fail loudly.
@@ -126,21 +163,10 @@ def fused_method_kernels(
                 if with_dominators and cfg:
                     for s, d, k in dominator_edges_for_method(rows, cfg):
                         emit(s, d, k)
-                if recovery_dicts is not None:
-                    for nid, rtype in recover_types_for_method(
-                            rows, ret_types, members, class_by_id):
-                        out_rows.append({
-                            "src": nid, "dst": 0, "kind": "_TYPE_HINT",
-                            "variable": rtype, "doc_id": doc_id,
-                            "method_id": mid,
-                        })
+                for nid, rtype in recover_types_for_method(rows):
+                    emit(nid, 0, "_TYPE_HINT", rtype)
                 if with_dataflow and cfg:
                     krows = rows + _synth_param_outs(rows)
-                    for r in krows:
-                        if r["kind"] == "CALL":
-                            r["callee_internal"] = (
-                                True if r["full_name"] in names_local else None
-                            )
                     for s, d, v in reaching_def_edges_for_method(krows, cfg):
                         emit(s, d, "REACHING_DEF", v)
 
@@ -161,12 +187,12 @@ def fused_method_kernels(
                     if d in seen_docs:
                         raise ValueError(
                             f"non-contiguous rows for doc {d!r}: fused kernel "
-                            "requires the unshuffled parse output (use the "
-                            "cogrouped per-pass path instead)")
+                            "requires doc-contiguous input (the parse output, "
+                            "or _kernel_input's re-clustered shuffle join)")
                     seen_docs.add(d)
                     cur_doc = d
                 buf[r["method_id"]].append(r)
         process(buf)
         yield from pa.Table.from_pylist(out_rows, schema=out_schema).to_batches()
 
-    return src.mapInArrow(run, schema=EDGES_SCHEMA_DDL)
+    return _kernel_input(nodes, fits).mapInArrow(run, schema=EDGES_SCHEMA_DDL)

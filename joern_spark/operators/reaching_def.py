@@ -392,7 +392,7 @@ def reaching_def_edges_for_method(
     gen, kill, extra = _gen_kill(m, fg)
     n_defs = sum(bin(g).count("1") for g in gen.values())
     if n_defs > MAX_NUMBER_OF_DEFINITIONS:
-        return []  # bail-out (ReachingDefPass.scala:40-52); lineage row upstream
+        return []  # bail-out (ReachingDefPass.scala:40-52); no edges, not yet counted
     in_ = _solve(fg, gen, kill)
     num, rev = fg["node_num"], {v: k for k, v in fg["node_num"].items()}
     edges: list[tuple[int, int, str]] = []

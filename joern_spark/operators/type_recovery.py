@@ -221,133 +221,30 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
 # ---------------------------------------------------------------------------
 # In-kernel (per-method, Python) mirror of type_recovery_events.
 #
-# Rationale (round-3 scaling work): the DataFrame implementation above is a
-# ~30-stage join DAG re-scanning the cached parse output ~12 times; profiled
-# at 14 s (8 cores) -> 33 s (32 cores) — the pipeline's worst anti-scaling
-# stage. Every join keys on ids within one method except three
-# vocabulary-sized dimensions (method return types, members, class names),
-# which ship as broadcast dicts — the same pattern as the fused kernel's
-# internal-name dictionary. The DF implementation stays as the over-budget
-# fallback and the parity oracle (tests/test_fused_recovery.py asserts exact
-# event-set equality between the two).
+# The DataFrame implementation above is a ~30-stage join DAG re-scanning the
+# parse output ~12 times (profiled at 14 s on 8 cores -> 33 s on 32, round 3).
+# Every join keys on ids within one method except three vocabulary-sized
+# dimensions — callee return types, members, enclosing classes — which the
+# fused kernel's input carries as columns (method_kernels._kernel_input). The
+# DataFrame version stays as the parity reference
+# (tests/test_fused_recovery.py asserts exact event-set equality).
 # ---------------------------------------------------------------------------
-
-RECOVERY_DICT_BUDGET = 2_000_000  # rows across all dictionaries
-
-
-def collect_recovery_dicts(nodes: DataFrame, budget: int = RECOVERY_DICT_BUDGET,
-                           with_counts: bool = False):
-    """Collect the vocabulary-sized global dictionaries the fused kernel
-    needs, in ONE Spark job. Returns (internal_names, ret_types, members,
-    class_by_id) or None when the union exceeds ``budget`` rows (caller
-    falls back to the DataFrame implementation).
-
-    - internal_names: set of internal METHOD full_names (EdgeValidator dim)
-    - ret_types: method full_name -> tuple of METHOD_RETURN types (non-ANY)
-    - members:   (class full_name, member name) -> tuple of member types
-    - class_by_id: TYPE_DECL node_id -> full_name (only decls that parent a
-      METHOD — the `this` rule's lookup set; empty for C corpora)
-    Ids travel as strings end-to-end (never through pandas float64).
-
-    With ``with_counts=True`` the same single job also returns per-kind node
-    counts (appended as ``tag='n'`` rows) as a 5th element — the pipeline's
-    input to the run-wide broadcast-budget decision (``dims.dim_fits_hint``),
-    so no dim join pays its own probe job on the hot path.
-    """
-    methods = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("mm_id"), F.col("full_name").alias("mm_full"),
-        F.col("parent_id").alias("m_parent"), F.col("is_external").alias("m_ext"),
-    )
-    name_rows = methods.filter(~F.col("m_ext")).select(
-        F.lit("name").alias("tag"), F.col("mm_full").alias("a"),
-        F.lit("").alias("b"), F.lit("").alias("c"),
-    ).distinct()
-    rets = nodes.filter(
-        (F.col("kind") == "METHOD_RETURN")
-        & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        & (F.col("type_full_name") != "ANY")
-    ).select(F.col("method_id").alias("mm_id"),
-             F.col("type_full_name").alias("ret_type"))
-    ret_rows = methods.join(rets, "mm_id").select(
-        F.lit("ret").alias("tag"), F.col("mm_full").alias("a"),
-        F.col("ret_type").alias("b"), F.lit("").alias("c"),
-    ).distinct()
-
-    classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
-        F.col("node_id").alias("c_id"), F.col("full_name").alias("c_full")
-    )
-    member_rows = (
-        nodes.filter(
-            (F.col("kind") == "MEMBER")
-            & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        )
-        .join(classes, F.col("parent_id") == F.col("c_id"))
-        .select(F.lit("member").alias("tag"), F.col("c_full").alias("a"),
-                F.col("name").alias("b"), F.col("type_full_name").alias("c"))
-        .distinct()
-    )
-
-    method_parents = methods.select(F.col("m_parent").alias("c_id")).distinct()
-    class_rows = (
-        classes.join(method_parents, "c_id", "left_semi")
-        .select(F.lit("class").alias("tag"),
-                F.col("c_id").cast("string").alias("a"),
-                F.col("c_full").alias("b"), F.lit("").alias("c"))
-    )
-
-    union = (
-        name_rows.unionByName(ret_rows).unionByName(member_rows)
-        .unionByName(class_rows)
-        .limit(budget + 1)
-    )
-    if with_counts:
-        kind_counts = nodes.groupBy("kind").count().select(
-            F.lit("n").alias("tag"), F.col("kind").alias("a"),
-            F.col("count").cast("string").alias("b"), F.lit("").alias("c"))
-        union = union.unionByName(kind_counts)
-    pdf = union.toPandas()
-    counts: dict[str, int] = {}
-    if with_counts:
-        mask = pdf["tag"] == "n"
-        counts = {a: int(b) for a, b in zip(pdf["a"][mask], pdf["b"][mask])}
-        pdf = pdf[~mask]
-    if len(pdf) > budget:
-        return None
-    internal_names: set[str] = set()
-    ret_types: dict[str, set] = {}
-    members: dict[tuple, set] = {}
-    class_by_id: dict[int, str] = {}
-    for tag, a, b, c in zip(pdf["tag"], pdf["a"], pdf["b"], pdf["c"]):
-        if tag == "name":
-            internal_names.add(a)
-        elif tag == "ret":
-            ret_types.setdefault(a, set()).add(b)
-        elif tag == "member":
-            members.setdefault((a, b), set()).add(c)
-        else:
-            class_by_id[int(a)] = b
-    out = (
-        internal_names,
-        {k: tuple(sorted(v)) for k, v in ret_types.items()},
-        {k: tuple(sorted(v)) for k, v in members.items()},
-        class_by_id,
-    )
-    return out + (counts,) if with_counts else out
-
 
 def _str_or_none(v):
     """pandas record values: None/NaN -> None (NaN is truthy!)."""
     return v if isinstance(v, str) else None
 
 
-def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
-                             class_by_id: dict,
+def recover_types_for_method(rows: list[dict],
                              iterations: int = ITERATIONS) -> list[tuple[int, str]]:
     """Exact per-method mirror of ``type_recovery_events``: returns the sorted
     distinct (identifier node_id, recovered_type) events for one method's
     rows. Rules and round structure match the DataFrame version line-for-line
     (declared types, `this`, then ``iterations-1`` assignment-propagation
-    rounds with variable-level hint distribution)."""
+    rounds with variable-level hint distribution). The cross-document lookups
+    read the fact columns of ``method_kernels._kernel_input``: CALL
+    ``callee_ret_types``, METHOD ``class_full``, FIELD_IDENTIFIER
+    ``member_types``."""
     idents = [r for r in rows if r["kind"] == "IDENTIFIER"]
     if not idents:
         return []
@@ -369,7 +266,7 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
 
     # round 0b: `this` -> enclosing class
     meth = next((r for r in rows if r["kind"] == "METHOD"), None)
-    cls = class_by_id.get(meth["parent_id"]) if meth is not None else None
+    cls = meth.get("class_full") if meth is not None else None
     if cls:
         for i in idents:
             if i["name"] == "this":
@@ -384,14 +281,16 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
               if r["kind"] == "CALL"
               and _str_or_none(r.get("name")) in _FIELD_ACCESS_OPS}
     fa_recv: dict[int, list[int]] = {}
-    fa_fields: dict[int, list[str]] = {}
+    fa_fields: dict[int, list[dict]] = {}  # fa -> per-field class -> types
     for r in rows:
         p = r.get("parent_id")
         if p in fa_ids:
             if r["kind"] == "IDENTIFIER" and r.get("argument_index") == 1:
                 fa_recv.setdefault(p, []).append(r["node_id"])
             elif r["kind"] == "FIELD_IDENTIFIER":
-                fa_fields.setdefault(p, []).append(r["name"])
+                # Arrow hands map columns over as (key, value) pairs
+                fa_fields.setdefault(p, []).append(
+                    dict(r.get("member_types") or ()))
 
     targets: list[tuple[int, int]] = []       # (a_id, target ident node)
     rhs_static: dict[int, set] = {}           # a_id -> typed-RHS types
@@ -410,8 +309,7 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
                         rhs_static.setdefault(a_id, set()).add(tfn)
                     nm = _str_or_none(k.get("name")) or ""
                     if not nm.startswith("<operator>"):
-                        for rt in ret_types.get(
-                                _str_or_none(k.get("full_name")) or "", ()):
+                        for rt in k.get("callee_ret_types") or ():
                             rhs_static.setdefault(a_id, set()).add(rt)
                     if nm in _FIELD_ACCESS_OPS:
                         rhs_fa_ids.setdefault(a_id, []).append(k["node_id"])
@@ -433,8 +331,8 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
         # member-load RHS: fa call result types via recovered receiver
         fa_types: dict[int, set] = {}
         for fa in fa_ids:
-            fnames = fa_fields.get(fa)
-            if not fnames:
+            fields = fa_fields.get(fa)
+            if not fields:
                 continue
             for rid in fa_recv.get(fa, ()):
                 nm = ident_names.get(rid)
@@ -442,8 +340,8 @@ def recover_types_for_method(rows: list[dict], ret_types: dict, members: dict,
                     continue
                 for t in var_hints.get(nm, ()):
                     rt = t.replace("*", "").strip()
-                    for f in fnames:
-                        for mt in members.get((rt, f), ()):
+                    for by_class in fields:
+                        for mt in by_class.get(rt, ()):
                             fa_types.setdefault(fa, set()).add(mt)
         new: list[tuple[int, str]] = []
         for a_id, t_id in targets:

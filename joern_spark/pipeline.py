@@ -4,22 +4,17 @@ docs → [ast] parse (mapInPandas) → [base] type/stub/paramOut passes (joins)
      → [kernel] per-doc fused CFG/dominators/reaching-def/type-recovery
      → [callgraph] static/CHA/naive linkers → [triples] materialization.
 
-Two physical paths share the logical stage order:
-
-- **fused** (default): everything document-local runs inside ONE shuffle-free
-  ``mapInPandas`` over the parse partitions (CFG, dominators/CDG,
-  reaching-def, and — round 3 — type recovery), fed by vocabulary-sized
-  broadcast dictionaries collected in a single job. Stage boundaries spill
-  to parquet (``spill.py``): columnar, atomic-rename, column-pruned
-  downstream — the barriers that were measured FLAT at 8→32 cores as
-  deserialized localCheckpoint blocks. Small vocabulary frames (TYPE rows,
-  stubs, namespaces) materialize individually and concurrently with the
-  kernel job; the wide 5-way nodes union is never copied — it stays a lazy
-  union over materialized leaves.
-- **DataFrame fallback**: when the broadcast dictionaries exceed their
-  budget (100×-scale corpora), the same passes run as distributed
-  join/cogroup DataFrame implementations (cfg_pass, dominator_pass,
-  reaching_def_pass, type_recovery_events) — degrade, don't die.
+Everything document-local runs inside ONE ``mapInArrow`` over the parse
+partitions (CFG, dominators/CDG, reaching-def, type recovery); its
+cross-document facts arrive as columns filled by budgeted joins
+(``method_kernels._kernel_input``): broadcast and shuffle-free under the
+budget, shuffle joins re-clustered by doc over it — degrade, don't die, on
+the same path. Stage boundaries spill to parquet (``spill.py``): columnar,
+atomic-rename, column-pruned downstream — the barriers that were measured
+FLAT at 8→32 cores as deserialized localCheckpoint blocks. Small vocabulary
+frames (TYPE rows, stubs, namespaces) materialize individually and
+concurrently with the kernel job; the wide 5-way nodes union is never copied
+— it stays a lazy union over materialized leaves.
 
 With ``out_dir`` every stage boundary is a durable parquet snapshot with
 lineage rows and a resume manifest, so any failed partition range resumes
@@ -76,7 +71,6 @@ def run_pipeline(
     n_parts: int = 32,
     with_dataflow: bool = True,
     with_dominators: bool = True,
-    fuse_kernels: bool | None = None,
 ) -> CpgResult:
     stats: dict = {}
 
@@ -134,54 +128,31 @@ def run_pipeline(
 
     nodes0, edges0, spans = split_rows(cpg_rows)
 
-    if fuse_kernels is not False:
-        # the broadcast dictionaries are collected INSIDE the fused path's
-        # job pool (overlapped with the vocabulary-frame materializations);
-        # a None result there falls through to the DataFrame path
-        res = _run_fused(spark, cpg_rows, nodes0, edges0, spans,
-                         out_dir, n_parts, with_dataflow, with_dominators,
-                         stats, t0)
-        if res is not None:
-            return res
-    return _run_dataframe(spark, cpg_rows, nodes0, edges0, spans,
-                          out_dir, n_parts, with_dataflow, with_dominators,
-                          stats, t0)
-
-
-# ---------------------------------------------------------------------------
-# fused fast path
-# ---------------------------------------------------------------------------
-
-def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
-               out_dir, n_parts, with_dataflow, with_dominators,
-               stats, t0) -> CpgResult | None:
-    from .operators.dims import MAX_BROADCAST_DIM, dim_fits_hint
+    from .operators.callgraph import candidate_pool, link_calls
+    from .operators.dims import MAX_BROADCAST_DIM, budgeted_broadcast, dim_fits_hint
     from .operators.method_kernels import fused_method_kernels
-    from .operators.type_recovery import (
-        collect_recovery_dicts,
-        field_access_linker,
-    )
+    from .operators.type_recovery import field_access_linker
 
     spill = SpillDir(out_dir)
 
-    # ---- dicts + kernel job (python-heavy, scales with cores) — the
-    # dictionary collect is chained in front of the kernel INSIDE the pool so
-    # it overlaps the vocabulary-frame materializations instead of serializing
-    # the whole pipeline behind it (the round-2 profile's flat ~5 s barrier)
-    def dicts_job():
-        return collect_recovery_dicts(nodes0, with_counts=True)
-
-    def kernel_job() -> DataFrame | None:
-        dicts = dicts_f.result()
-        if dicts is None:
-            return None
-        internal_names, ret_types, members, class_by_id, counts = dicts
+    # ---- per-kind node counts: one small job whose counts bound every
+    # dimension the kernel and the linkers join, so the broadcast-or-shuffle
+    # decisions cost no per-join probe jobs
+    def counts_job():
+        counts = {r["kind"]: r["count"]
+                  for r in nodes0.groupBy("kind").count().collect()}
         stats["kind_counts"] = counts
-        k = fused_method_kernels(
-            nodes0, internal_names,
-            with_dominators=with_dominators, with_dataflow=with_dataflow,
-            recovery_dicts=(ret_types, members, class_by_id),
-        )
+        return counts
+
+    # ---- kernel job (python-heavy, scales with cores): the METHOD, TYPE_DECL
+    # and MEMBER counts bound its three fact dimensions
+    def kernel_job() -> DataFrame:
+        counts = counts_f.result()
+        fits = sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER")) \
+            <= MAX_BROADCAST_DIM
+        stats["kernel_fits"] = fits
+        k = fused_method_kernels(nodes0, fits, with_dominators=with_dominators,
+                                 with_dataflow=with_dataflow)
         return spill.write(k, "kernel_rows")
 
     # ---- base vocabulary frames: each is small (type/stub/namespace
@@ -218,9 +189,6 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
             return out
         return run
 
-    from .operators.callgraph import candidate_pool, link_calls
-    from .operators.dims import budgeted_broadcast
-
     # ---- kernel-independent edges: everything except the field-access and
     # hint linkers (which consume the kernel's _TYPE_HINT rows) depends only
     # on the vocabulary frames — materialize those branches INSIDE the pool,
@@ -228,10 +196,7 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
     # (the kernel's JVM task threads mostly wait on worker sockets; FAIR
     # scheduling shares the slots)
     def base_job():
-        dicts = dicts_f.result()
-        if dicts is None:
-            return None
-        counts = dicts[4]
+        counts = counts_f.result()
         types, decl_stubs = types_f.result()
         m_stubs = stubs_f.result()
         param_outs = params_f.result()
@@ -323,13 +288,12 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
                 "call_candidates")))
             base_norec = base_norec_f.result()
             cand = cand_f.result()
-        return (types, decl_stubs, m_stubs, param_outs, ns_nodes, dep_nodes,
-                nodes, fits, base_norec, cand)
+        return nodes, fits, base_norec, cand
 
     # 8 top-level jobs + base_job's 2 nested spill submissions (nested
     # submits need free workers or they queue behind their own parent)
     with ThreadPoolExecutor(max_workers=10) as pool:
-        dicts_f = pool.submit(timed("dicts", dicts_job))
+        counts_f = pool.submit(timed("counts", counts_job))
         kernel_f = pool.submit(timed("kernel", kernel_job))
         types_f = pool.submit(timed("types", types_job))
         stubs_f = pool.submit(timed("stubs", stubs_job))
@@ -340,10 +304,7 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
         kernel_out = kernel_f.result()
         base_res = base_f.result()
     stats["t_pool"] = round(time.time() - t_pool, 2)
-    if kernel_out is None or base_res is None:
-        return None  # dictionaries over budget → DataFrame fallback
-    (types, decl_stubs, m_stubs, param_outs, ns_nodes, dep_nodes,
-     nodes, fits, base_norec, cand) = base_res
+    nodes, fits, base_norec, cand = base_res
 
     # recovery events came out of the kernel as _TYPE_HINT rows
     recovered = kernel_out.filter(F.col("kind") == "_TYPE_HINT").select(
@@ -394,120 +355,3 @@ def _run_fused(spark, cpg_rows, nodes0, edges0, spans,
     return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
                      link_misses=misses, stats=stats)
 
-
-# ---------------------------------------------------------------------------
-# distributed DataFrame fallback (dictionaries over budget, or fuse_kernels
-# explicitly disabled for parity testing)
-# ---------------------------------------------------------------------------
-
-def _run_dataframe(spark, cpg_rows, nodes0, edges0, spans,
-                   out_dir, n_parts, with_dataflow, with_dominators,
-                   stats, t0) -> CpgResult:
-    from .operators.reaching_def import reaching_def_pass
-
-    # ---- stage: base (types, stubs, paramOuts, type linking) ---------------
-    types = type_nodes(nodes0)
-    decl_stubs = type_decl_stubs(types, nodes0)
-    m_stubs, m_stub_edges = method_stubs(nodes0, edges0)
-    param_outs, param_edges = parameter_out_pass(nodes0)
-    ns_nodes, ns_edges = namespace_pass(nodes0)
-    dep_nodes = dependency_pass(nodes0)
-    if not out_dir:
-        m_stubs = m_stubs.persist()
-        param_outs = param_outs.persist()
-        dep_nodes = dep_nodes.persist()
-
-    nodes = (
-        nodes0.unionByName(types).unionByName(decl_stubs)
-        .unionByName(m_stubs).unionByName(param_outs).unionByName(ns_nodes)
-        .unionByName(dep_nodes)
-    )
-
-    if out_dir:
-        t1 = time.time()
-        nodes = _materialize(spark, nodes, os.path.join(out_dir, "nodes"))
-        append_lineage(spark, out_dir,
-                       nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                       "base_nodes", t1)
-        write_manifest(out_dir, "base", list(range(n_parts)), complete=True)
-    else:
-        # eager barrier + lineage truncation: many downstream consumers; see
-        # round-2 notes (plan-tree growth OOMs the driver without this)
-        nodes = nodes.localCheckpoint(eager=True)
-
-    from .operators.type_recovery import (
-        field_access_linker,
-        type_recovery_events,
-    )
-
-    recovered = type_recovery_events(nodes0).localCheckpoint(eager=True)
-    base_edges = (
-        edges0.unionByName(m_stub_edges).unionByName(param_edges)
-        .unionByName(type_ref_pass(types, nodes0))
-        .unionByName(eval_type_pass(nodes, types))
-        .unionByName(field_access_linker(nodes0, edges0, recovered=recovered))
-        .unionByName(method_ref_linker(nodes))
-        .unionByName(macro_ref_linker(nodes0))
-        .unionByName(imports_linker(nodes0, dep_nodes))
-        .unionByName(ns_edges)
-    )
-
-    # ---- stage: controlflow kernels (cogrouped per-pass implementations)
-    from .operators.cfg_pass import cfg_pass
-
-    kernel_edges = cfg_pass(nodes0)
-    if with_dominators:
-        if not out_dir:
-            kernel_edges = kernel_edges.persist()
-        from .operators.dominators import dominator_pass
-
-        kernel_edges = kernel_edges.unionByName(
-            dominator_pass(nodes0, kernel_edges))
-
-    # ---- stage: callgraph ----------------------------------------------------
-    # One-pass arbitration, same as the fused path: candidate_pool runs the
-    # naive name join on LEFTOVER calls only (anti-join before the quadratic
-    # join, NaiveCallLinker.scala:13-28), and link_calls arbitrates with a
-    # map-side-combined aggregate instead of Window(partitionBy src) — this
-    # fallback is exactly the path taken when dictionaries exceed the
-    # broadcast budget, i.e. at scale, so it must carry the same plan fixes
-    # (VERDICT r3 "What's wrong" #2).
-    from .operators.callgraph import link_calls
-
-    call_edges = link_calls(nodes, edges0, recovered=recovered)
-
-    edges = base_edges.unionByName(kernel_edges).unionByName(call_edges)
-
-    if out_dir:
-        t2 = time.time()
-        edges = _materialize(spark, edges, os.path.join(out_dir, "edges_pre_ddg"))
-        append_lineage(spark, out_dir,
-                       edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                       "edges_pre_ddg", t2)
-    else:
-        edges = edges.localCheckpoint(eager=True)
-
-    # ---- stage: dataflow (cogrouped reaching-def) ----------------------------
-    if with_dataflow:
-        rd_edges = reaching_def_pass(nodes, edges)
-        edges = edges.unionByName(rd_edges)
-        if not out_dir:
-            edges = edges.persist()
-
-    misses = link_misses(nodes, call_edges)
-
-    # ---- stage: triples --------------------------------------------------------
-    triples = build_triples(nodes, edges, spans, n_parts=n_parts)
-    if out_dir:
-        t3 = time.time()
-        triples = commit_snapshot(spark, triples, out_dir, "triples",
-                                  list(range(n_parts)), partition_by="part_id")
-        append_lineage(spark, out_dir, triples, "triples", t3)
-
-    return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
-                     link_misses=misses, stats=stats)
-
-
-def _materialize(spark: SparkSession, df: DataFrame, path: str, *_part_cols) -> DataFrame:
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)

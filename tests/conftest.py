@@ -8,6 +8,8 @@ helper (succ_of / reaching / call-edge views by code string).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -16,15 +18,36 @@ from joern_spark.pipeline import run_pipeline
 from joern_spark.session import get_spark
 
 
+def _driver_heap_gb() -> int:
+    """min(20g, 0.6 x MemTotal): the session accumulates pipeline caches,
+    localCheckpoint blocks (flow stitching) and broadcasts across every test
+    module, so it wants a large heap — but a heap near physical memory gets
+    the JVM killed by the host's OOM killer mid-suite."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return max(1, min(20, int(0.6 * kb / 2**20)))
+
+
 @pytest.fixture(scope="session")
 def spark():
-    # 20g heap: the session accumulates pipeline caches, localCheckpoint
-    # blocks (flow stitching), and broadcasts across every test module — the
-    # 8g default dies mid-suite under host memory pressure
-    s = get_spark(app_name="joern_spark_tests", cpus=8, shuffle_partitions=8,
-                  extra_conf={"spark.driver.memory": "20g",
+    s = get_spark(app_name="joern_spark_tests",
+                  cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+                  shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": f"{_driver_heap_gb()}g",
                               "spark.ui.showConsoleProgress": "false"})
     yield s
+
+
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Catalyst auto-broadcasts any dim under the session threshold from size
+    stats alone — disable that so tests observe OUR dispatch decision, which
+    is what survives at 100x scale (where stats exceed the threshold anyway)."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 @pytest.fixture(scope="session")

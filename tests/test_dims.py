@@ -19,17 +19,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.fixture
-def no_auto_broadcast(spark):
-    """Catalyst auto-broadcasts any dim under 10 MB from size stats alone —
-    disable that so the tests observe OUR dispatch decision, which is what
-    survives at 100× scale (where stats exceed the threshold anyway)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_budgeted_broadcast_probe_flips(spark, no_auto_broadcast):
     dim = spark.range(100).select(F.col("id").alias("k"), F.lit("v").alias("v"))
     fact = spark.range(1000).select(F.col("id").alias("k"))

@@ -15,18 +15,12 @@ from pyspark.sql import functions as F
 from joern_spark.corpus import fixture_docs_df
 from joern_spark.operators.ast_pass import parse_docs, split_rows
 from joern_spark.operators.method_kernels import fused_method_kernels
-from joern_spark.operators.type_recovery import (
-    collect_recovery_dicts,
-    type_recovery_events,
-)
+from joern_spark.operators.type_recovery import type_recovery_events
 
 
-def _events_from_kernel(nodes0, dicts):
-    _names, ret_types, members, class_by_id = dicts
-    out = fused_method_kernels(
-        nodes0, _names, with_dominators=False, with_dataflow=False,
-        recovery_dicts=(ret_types, members, class_by_id),
-    )
+def _events_from_kernel(nodes0):
+    out = fused_method_kernels(nodes0, fits=True, with_dominators=False,
+                               with_dataflow=False)
     hints = out.filter(F.col("kind") == "_TYPE_HINT").select(
         F.col("src").alias("node_id"), F.col("variable").alias("recovered_type")
     )
@@ -44,9 +38,7 @@ def test_fixture_corpus_parity(spark):
     rows = parse_docs(fixture_docs_df(spark).repartition(2, "doc_id")).persist()
     rows.count()
     nodes0, _, _ = split_rows(rows)
-    dicts = collect_recovery_dicts(nodes0)
-    assert dicts is not None
-    kernel_events = _events_from_kernel(nodes0, dicts)
+    kernel_events = _events_from_kernel(nodes0)
     df_events = _events_from_df(nodes0)
     # DF events for identifiers outside any method (method_id null) are
     # dropped by _distribute's (method_id, name) join — the kernel never
@@ -66,7 +58,5 @@ def test_synth_sample_parity(spark):
     rows = parse_docs(docs.repartition(4, "doc_id")).persist()
     rows.count()
     nodes0, _, _ = split_rows(rows)
-    dicts = collect_recovery_dicts(nodes0)
-    assert dicts is not None
-    assert _events_from_kernel(nodes0, dicts) == _events_from_df(nodes0)
+    assert _events_from_kernel(nodes0) == _events_from_df(nodes0)
     rows.unpersist()

