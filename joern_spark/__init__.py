@@ -7,10 +7,15 @@ engine; this package re-expresses what it *computes* as idiomatic Spark:
 - per-document parse/AST construction = vectorized ``mapInPandas`` over an
   interleaved-span document table (reference: per-file ConcurrentWriterCpgPass,
   ``x2cpg/.../passes/AstCreationPass.scala``),
-- linking passes = DataFrame joins (broadcast for dimension-sized symbol tables,
-  salted/AQE for hot keys; reference: ``x2cpg/.../utils/LinkingUtil.scala``),
-- per-method CFG / reaching-definitions = ``applyInPandas`` group kernels
-  (reference: ``CfgCreator.scala``, ``ReachingDefProblem.scala``),
+- linking passes = DataFrame joins (budgeted broadcast for dimension-sized
+  symbol tables, shuffle joins with AQE skew-join over budget; reference:
+  ``x2cpg/.../utils/LinkingUtil.scala``),
+- per-method CFG / dominators / reaching-definitions / type recovery = one
+  fused, doc-contiguous ``mapInArrow`` kernel (reference: ``CfgCreator.scala``,
+  ``ReachingDefProblem.scala``),
+- transitive closures (``repeat``, ``dominatedBy``, ``reachableBy``,
+  ``callee*``, the type hierarchy) = one bounded semi-naive frontier loop,
+  ``operators/frontier.expand``,
 - materialization = partitioned parquet tables (``nodes``/``edges``/``triples``)
   with per-partition lineage rows and resumable stage manifests.
 """

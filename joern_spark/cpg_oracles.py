@@ -1938,7 +1938,9 @@ GROUP BY 1, 2
 # ---- transitive type hierarchy (TypeHierarchyPass / derivedTypeDecl) ------
 # mirrors operators/callgraph.inheritance_closure: INHERITS_FROM base pairs
 # (TYPE_DECL full_name → TYPE full_name), name-keyed transitive closure, plus
-# the reflexive pair for every TYPE_DECL.
+# the reflexive pair for every TYPE_DECL. The recursion runs to fixpoint;
+# the Spark side's round cap (frontier.MAX_ROUNDS) is a safety valve that
+# warns when hit, not a semantic bound.
 
 _TYPE_HIERARCHY_SQL = f"""
 WITH RECURSIVE

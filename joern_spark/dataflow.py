@@ -9,8 +9,9 @@ arguments) and at call sites (into callee returns), k-limited at
 ``maxCallDepth = 4`` (``Engine.scala:322``).
 
 Spark shape: instead of per-sink tasks on a thread pool, ONE frontier
-DataFrame carries every sink's wavefront simultaneously; each round is
-  frontier ⋈ reversed REACHING_DEF  ∪  param→arg hop  ∪  call→return hop
+DataFrame carries every sink's wavefront simultaneously; each round of
+``frontier.expand`` is
+  frontier ⋈ (reversed REACHING_DEF  ∪  param→arg hop  ∪  call→return hop)
 with a visited-set anti-join. Rounds are bounded by the graph diameter ×
 call depth; every sink shares the same joins, which is exactly the path-cache
 sharing the reference implements by hand (``EngineConfig.shareCacheBetweenTasks``).
@@ -21,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.frontier import MAX_ROUNDS, expand
+
 MAX_CALL_DEPTH = 4  # Engine.scala:322
-MAX_ROUNDS = 128
 
 
 def _edges_of(edges: DataFrame, kind: str) -> DataFrame:
@@ -102,8 +104,9 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
     Returns (source_id, sink_id) pairs.
 
     The frontier is (node_id, sink_id, depth): every node whose value flows
-    into sink_id, reached backwards. depth counts interprocedural hops only,
-    mirroring the reference's k-limit semantics.
+    into sink_id, reached backwards (``frontier.expand`` keyed by sink_id).
+    depth counts interprocedural hops only, mirroring the reference's
+    k-limit semantics.
 
     ``rd_back`` / ``inter_back`` accept pre-computed (and ideally persisted)
     backward relations so a bundle of queries over the same graph (FlowEngine)
@@ -117,43 +120,21 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
     if own_inter:
         inter_back = interproc_back_edges(nodes, edges).persist()
 
-    frontier = sinks.select(
-        F.col("node_id"), F.col("node_id").alias("sink_id"), F.lit(0).alias("depth")
-    ).distinct()
-    visited = frontier.select("node_id", "sink_id", "depth").localCheckpoint(eager=True)
-    frontier = visited
+    # intra-procedural hops are free, interprocedural ones cost one call level
+    step = rd_back.select("node_id", F.col("prev_id").alias("next_id"),
+                          F.lit(0).alias("cost")).unionByName(
+        inter_back.select("node_id", F.col("prev_id").alias("next_id"),
+                          F.lit(1).alias("cost")))
+    seed = sinks.select("node_id", F.col("node_id").alias("sink_id"),
+                        F.lit(0).alias("depth"))
+    visited = expand(seed, step, ["sink_id"], max_depth=max_call_depth)
 
-    for _ in range(MAX_ROUNDS):
-        intra = frontier.join(rd_back, "node_id").select(
-            F.col("prev_id").alias("node_id"), "sink_id", "depth"
-        )
-        inter = (
-            frontier.filter(F.col("depth") < max_call_depth)
-            .join(inter_back, "node_id")
-            .select(F.col("prev_id").alias("node_id"), "sink_id",
-                    (F.col("depth") + 1).alias("depth"))
-        )
-        nxt = intra.unionByName(inter).groupBy("node_id", "sink_id").agg(
-            F.min("depth").alias("depth")
-        )
-        nxt = nxt.join(
-            visited.select("node_id", "sink_id"), ["node_id", "sink_id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-
-    hits = visited.join(
-        sources.select(F.col("node_id").alias("source_probe")).distinct(),
-        visited["node_id"] == F.col("source_probe"),
-    )
-    out = hits.select(
-        F.col("node_id").alias("source_id"), F.col("sink_id").alias("sink_id")
-    ).distinct()
+    # visited holds each (sink_id, node_id) once, so the pairs are distinct
+    out = visited.join(sources.select("node_id").distinct(), "node_id").select(
+        F.col("node_id").alias("source_id"), "sink_id")
     if own_inter:
-        # visited is eagerly localCheckpointed each round, so the relation is
-        # no longer needed once the loop has converged
+        # expand checkpoints every round, so the relation is no longer
+        # needed once the loop has converged
         inter_back.unpersist()
     return out
 

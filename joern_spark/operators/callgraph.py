@@ -11,8 +11,8 @@ Reference passes (SURVEY.md §2.A #21-24):
 - DynamicCallLinker (``DynamicCallLinker.scala:25-229``): CHA/SAFEDISPATCH —
   resolve each DYNAMIC_DISPATCH call ``T.m`` against every implementor of
   ``m`` in the subclass closure of ``T``, with super-class fallback and
-  internal-preferred pruning. The inheritance transitive closure is a bounded
-  iterative self-join (class-hierarchy depth iterations).
+  internal-preferred pruning. The inheritance transitive closure is a
+  ``frontier.expand`` over INHERITS_FROM (class-hierarchy depth rounds).
 - NaiveCallLinker (``NaiveCallLinker.scala:13-28``): leftover calls by bare
   name (last-resort alias dictionary).
 
@@ -25,18 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dims import MAX_BROADCAST_DIM, budgeted_broadcast
-
-MAX_HIERARCHY_DEPTH = 20  # bound for the inheritance closure loop
-# driver-side closure is a collect, i.e. the same memory class as a broadcast
-# dimension — tie its bound to the shared broadcast budget instead of an
-# independent magic constant (INHERITS_FROM edge rows are wider than dim rows,
-# hence the divisor); above it the distributed iterative closure takes over
-SMALL_HIERARCHY_LIMIT = MAX_BROADCAST_DIM // 20
-# method-dimension budget for the static-link broadcast join; above it the
-# broadcast would blow the driver/executor memory at cluster scale, so the
-# linker auto-falls-back to the salted shuffle join
-MAX_BROADCAST_METHODS = MAX_BROADCAST_DIM
+from .dims import budgeted_broadcast
+from .frontier import expand
 
 
 def _method_dim(nodes: DataFrame) -> DataFrame:
@@ -52,22 +42,15 @@ def _method_dim(nodes: DataFrame) -> DataFrame:
     )
 
 
-def static_call_linker(nodes: DataFrame, strategy: str = "auto",
-                       hot_keys: DataFrame | None = None,
-                       broadcast_budget: int = MAX_BROADCAST_METHODS) -> DataFrame:
+def static_call_linker(nodes: DataFrame) -> DataFrame:
     """CALL edges for STATIC_DISPATCH / INLINED calls.
 
-    strategy='broadcast' (dim fits → map-side join, no shuffle of the skewed
-    fact side) or 'salted' (dim exceeds the broadcast threshold → hot callee
-    names like printf/malloc are replicated across salts so no reducer owns
-    a whole hot key; SURVEY.md §4 skew row). The default 'auto' counts the
-    METHOD dimension against ``broadcast_budget`` and picks the strategy —
-    at 100× corpus scale the distinct-method dim (incl. stubs) can exceed
-    any broadcast threshold, and an unconditional broadcast would kill the
-    job rather than degrade it.
+    The METHOD dimension is a budgeted broadcast: while it fits, a map-side
+    join with no shuffle of the skewed fact side (hot callee names like
+    printf/malloc); over budget, a shuffle join whose hot keys AQE's
+    skew-join splits.
     """
-    return _static_candidates(nodes, strategy=strategy, hot_keys=hot_keys,
-                              broadcast_budget=broadcast_budget).select(
+    return _static_candidates(nodes).select(
         "src", "dst",
         F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
         "doc_id", "method_id",
@@ -99,29 +82,11 @@ def _sig_conjunct():
     )
 
 
-def _static_candidates(nodes: DataFrame, strategy: str = "auto",
-                       hot_keys: DataFrame | None = None,
-                       broadcast_budget: int = MAX_BROADCAST_METHODS) -> DataFrame:
+def _static_candidates(nodes: DataFrame) -> DataFrame:
     """Static-link candidate rows (src, dst, doc_id, method_id, m_external)."""
-    calls = _static_calls(nodes)
-    methods = _method_dim(nodes)
-    if strategy == "auto":
-        from . import dims
-
-        if dims._FITS_HINT is not None:
-            strategy = "broadcast" if dims._FITS_HINT else "salted"
-        else:
-            # bounded count: stops scanning at budget+1, never a full aggregate
-            n_methods = methods.limit(broadcast_budget + 1).count()
-            strategy = "broadcast" if n_methods <= broadcast_budget else "salted"
-    if strategy == "salted":
-        from .salting import salted_join
-
-        joined = salted_join(calls, methods, key="m_full",
-                             fact_salt_from="call_id", hot_keys=hot_keys)
-    else:
-        joined = calls.join(F.broadcast(methods), "m_full")
-    joined = joined.filter(_sig_conjunct())
+    joined = _static_calls(nodes).join(
+        budgeted_broadcast(_method_dim(nodes)), "m_full"
+    ).filter(_sig_conjunct())
     return joined.select(
         F.col("call_id").alias("src"), F.col("m_id").alias("dst"),
         "doc_id", "method_id", "m_external",
@@ -175,9 +140,10 @@ def method_ref_linker(nodes: DataFrame) -> DataFrame:
 def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Transitive subclass→superclass pairs over INHERITS_FROM.
 
-    Returns (sub_full, super_full) including the reflexive pair. Bounded
-    iterative self-join — iterations = class-hierarchy depth, which is small
-    even at web scale; each step is an equi-join on the closure frontier.
+    Returns (sub, sup) full names, including the reflexive pair.
+    ``frontier.expand`` keyed by ``sub``: rounds = class-hierarchy depth,
+    which is small even at web scale; each round is an equi-join on the
+    closure frontier.
     """
     decls = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("decl_id"), F.col("full_name").alias("decl_full")
@@ -191,48 +157,16 @@ def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         .join(budgeted_broadcast(types), F.col("dst") == F.col("type_id"))
         .select(F.col("decl_full").alias("sub"), F.col("type_full").alias("sup"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     reflexive = decls.select(
         F.col("decl_full").alias("sub"), F.col("decl_full").alias("sup")
-    ).distinct()
-    closure = base.unionByName(reflexive).distinct()
-    # the class hierarchy is a dimension (distinct class names), usually tiny
-    # relative to the fact tables: compute the closure driver-side and
-    # re-broadcast when it fits, otherwise fall back to bounded iterative
-    # self-joins (each iteration = one equi-join on the frontier).
-    spark = nodes.sparkSession
-    base_rows = base.limit(SMALL_HIERARCHY_LIMIT + 1).collect()
-    if len(base_rows) <= SMALL_HIERARCHY_LIMIT:
-        up: dict[str, set[str]] = {}
-        for r in base_rows:
-            up.setdefault(r["sub"], set()).add(r["sup"])
-        result: set[tuple[str, str]] = set()
-        for sub in up:
-            seen, stack = {sub}, [sub]
-            while stack:
-                cur = stack.pop()
-                for sup in up.get(cur, ()):
-                    if sup not in seen:
-                        seen.add(sup)
-                        stack.append(sup)
-            result.update((sub, sup) for sup in seen)
-        pairs = spark.createDataFrame(
-            sorted(result) or [("", "")], schema="sub string, sup string"
-        ).filter(F.col("sub") != "")
-        return pairs.unionByName(reflexive).distinct()
-    closure = closure.localCheckpoint()
-    for _ in range(MAX_HIERARCHY_DEPTH):
-        step = (
-            closure.alias("a")
-            .join(base.alias("b"), F.col("a.sup") == F.col("b.sub"))
-            .select(F.col("a.sub").alias("sub"), F.col("b.sup").alias("sup"))
-        )
-        new_closure = closure.unionByName(step).distinct().localCheckpoint()
-        if new_closure.count() == closure.count():
-            closure = new_closure
-            break
-        closure = new_closure
-    return closure
+    )
+    step = base.select(F.col("sub").alias("node_id"), F.col("sup").alias("next_id"),
+                       F.lit(1).alias("cost"))
+    seed = base.unionByName(reflexive).select(
+        "sub", F.col("sup").alias("node_id"), F.lit(0).alias("depth"))
+    return expand(seed, step, ["sub"]).select("sub", F.col("node_id").alias("sup"))
 
 
 def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:

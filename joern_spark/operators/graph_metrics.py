@@ -17,11 +17,11 @@ Two query families the reference exposes through its DSL and querydb:
   method-level call graph — the engine behind the DSL's
   ``method.repeat(_.callee)`` step (reference
   ``semanticcpg/.../language/package.scala`` RepeatTraversal /
-  querydb interprocedural queries). Distributed BFS: each round is one
-  equi-join of the frontier against the (re-used, checkpointed) edge
-  relation keyed by caller, with a left-anti join against the visited
-  set so every pair is expanded exactly once — level-synchronous BFS,
-  which also makes ``hops`` the MINIMUM hop count for free. Rounds are
+  querydb interprocedural queries). Distributed BFS (``frontier.expand``
+  keyed by the root method): each round is one equi-join of the frontier
+  against the (re-used, checkpointed) edge relation keyed by caller, with
+  a left-anti join against the visited set so every pair is expanded
+  exactly once — which also makes ``hops`` the MINIMUM hop count. Rounds are
   bounded by ``CLOSURE_MAX_HOPS`` in both this implementation and the
   DuckDB recursive-CTE oracle, so semantics stay identical.
 
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .frontier import expand
 
 # loop-shaped control structures, reference Metrics.scala:163-170
 # (controlStructureType("(FOR|DO|WHILE)"))
@@ -110,7 +112,7 @@ def call_closure(nodes: DataFrame, edges: DataFrame,
     """Transitive (caller, callee) method pairs within ``max_hops``.
 
     Columns: src_full_name, dst_full_name, hops (minimum hop count).
-    Level-synchronous distributed BFS on method ids; names are joined
+    ``frontier.expand`` over method ids; names are joined
     at the end and min-hop re-aggregated so stub/internal METHODs that
     share a full_name collapse to one row.
     """
@@ -125,29 +127,14 @@ def call_closure(nodes: DataFrame, edges: DataFrame,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    step = base.select(
-        F.col("caller_mid").alias("frontier_mid"), F.col("callee_mid").alias("next_mid")
-    )
-
-    acc = base.select(
-        F.col("caller_mid").alias("root_mid"),
-        F.col("callee_mid").alias("dst_mid"),
-        F.lit(1).alias("hops"),
-    ).localCheckpoint(eager=True)
-    frontier = acc
-    for depth in range(2, max_hops + 1):
-        nxt = (
-            frontier.join(step, frontier.dst_mid == step.frontier_mid)
-            .select("root_mid", F.col("next_mid").alias("dst_mid"))
-            .distinct()
-            .join(acc.select("root_mid", "dst_mid"), ["root_mid", "dst_mid"], "left_anti")
-            .withColumn("hops", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        acc = acc.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    step = base.select(F.col("caller_mid").alias("node_id"),
+                        F.col("callee_mid").alias("next_id"),
+                        F.lit(1).alias("cost"))
+    seed = base.select(F.col("caller_mid").alias("root_mid"),
+                        F.col("callee_mid").alias("node_id"),
+                        F.lit(1).alias("depth"))
+    acc = expand(seed, step, ["root_mid"], max_depth=max_hops).select(
+        "root_mid", F.col("node_id").alias("dst_mid"), F.col("depth").alias("hops"))
 
     names = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("node_id").alias("mid"), F.col("full_name").alias("fn")

@@ -11,8 +11,9 @@ Step catalogue mirrored from the reference (file:line cites per method):
 
 Scale shape: the frontier is always a narrow (node_id) projection; every hop
 joins frontier → edges[kind] → nodes, i.e. two hash joins on 64-bit keys.
-Transitive steps (`ast`, `repeat`) iterate bounded rounds with a visited-set
-anti-join (frontier stays deduplicated, no exponential blowup).
+Transitive steps (`ast`, `dominatedBy`, ...) go through ``frontier.expand``:
+bounded rounds with a visited-set anti-join (frontier stays deduplicated, no
+exponential blowup).
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.frontier import MAX_ROUNDS, expand
 
 # operator-extension families (operatorextension/package.scala:10-126)
 ASSIGNMENT_OPS = [
@@ -43,8 +46,6 @@ FIELD_ACCESS_OPS = [
 ARRAY_ACCESS_OPS = ["<operator>.indexAccess", "<operator>.indirectIndexAccess",
                     "<operator>.computedMemberAccess", "<operator>.indirectComputedMemberAccess"]
 ALLOC_OPS = ["<operator>.alloc", "<operator>.new", "<operator>.arrayNew"]
-
-MAX_REPEAT = 64  # bound for transitive closures (AST depth / dominator chains)
 
 
 @dataclass
@@ -365,40 +366,23 @@ class CpgQuery:
     # ---- bounded transitive closure -------------------------------------
     def _closure(self, edge_kind: str, include_self: bool,
                  forward: bool = True) -> "CpgQuery":
-        """Iterative frontier expansion with visited-set anti-join.
-
-        Bounded by MAX_REPEAT rounds; each round is one equi-join on the
-        (deduplicated) frontier — the large-graph-safe shape for `repeat`.
-        """
+        """Frontier closure over ``edge_kind`` edges from every node of the
+        traversal at once (one merged visited set, see ``frontier.expand``)."""
         e = self.cpg.edges.filter(F.col("kind") == edge_kind)
         here, there = ("src", "dst") if forward else ("dst", "src")
-        step = e.select(F.col(here).alias("node_id"), F.col(there).alias("next_id"))
-
-        visited = self.df.select("node_id").distinct().localCheckpoint(eager=True)
-        frontier = visited
-        result = visited if include_self else None
-        for _ in range(MAX_REPEAT):
-            nxt = (
-                frontier.join(step, "node_id")
-                .select(F.col("next_id").alias("node_id"))
-                .distinct()
-            )
-            nxt = nxt.join(visited, "node_id", "left_anti").localCheckpoint(eager=True)
-            if nxt.limit(1).count() == 0:
-                break
-            result = nxt if result is None else result.unionByName(nxt)
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        if result is None:
-            result = visited.limit(0)
-        return CpgQuery(self.cpg, result.distinct().join(self.cpg.nodes, "node_id"))
+        step = e.select(F.col(here).alias("node_id"),
+                        F.col(there).alias("next_id"), F.lit(1).alias("cost"))
+        reached = expand(self.df.select("node_id", F.lit(0).alias("depth")), step)
+        if not include_self:
+            reached = reached.filter(F.col("depth") > 0)
+        return CpgQuery(self.cpg, reached.select("node_id").join(self.cpg.nodes, "node_id"))
 
     def repeat(self, step_fn, until=None, times: int | None = None,
                emit: bool = False) -> "CpgQuery":
         """Generic repeat(...)(_.emit/_.until/_.times) combinator."""
         out_frames = [self.df] if emit else []
         cur = self
-        rounds = times if times is not None else MAX_REPEAT
+        rounds = times if times is not None else MAX_ROUNDS
         for _ in range(rounds):
             cur = step_fn(cur)
             if emit:

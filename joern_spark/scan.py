@@ -22,44 +22,28 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
+from .operators.frontier import expand
 from .query import Cpg
 from .query.dsl import ARITHMETIC_OPS, ARRAY_ACCESS_OPS, ASSIGNMENT_OPS
-
-# bound for the per-start ancestor walks below; tree relations (AST,
-# DOMINATE, POST_DOMINATE) have depth ~ statement count per method, and the
-# DuckDB oracle twins recurse to fixpoint, so this is a safety valve, not a
-# semantic bound (a method with >256 nested/sequenced statements is corrupt).
-MAX_ANCESTOR_ROUNDS = 256
 
 
 def _ancestor_pairs(edges: DataFrame, kind: str, starts: DataFrame) -> DataFrame:
     """(start_id, anc_id) transitive pairs walking ``kind`` edges backward
     (dst → src) from ``starts(node_id)``; excludes the trivial self pair.
 
-    Per-start pairing that the DSL's frontier closure (which merges all
-    sources into one visited set) cannot provide — needed whenever a query
+    Per-start pairing (``start_id`` is an ``expand`` key), which the DSL's
+    merged-visited-set closure cannot provide — needed whenever a query
     asks "is THIS call dominated by / inside ...". All three edge kinds used
     here are trees (AST parent, idom, ipdom), so the pair count is
     |starts| × depth, never quadratic in the graph.
     """
-    e = edges.filter(F.col("kind") == kind).select(
-        F.col("dst").alias("node_id"), F.col("src").alias("anc"))
-    frontier = starts.select(F.col("node_id").alias("start_id"),
-                             F.col("node_id")).localCheckpoint(eager=True)
-    out = None
-    for _ in range(MAX_ANCESTOR_ROUNDS):
-        frontier = (
-            frontier.join(e, "node_id")
-            .select("start_id", F.col("anc").alias("node_id"))
-            .distinct().localCheckpoint(eager=True)
-        )
-        if frontier.limit(1).count() == 0:
-            break
-        out = frontier if out is None else out.unionByName(frontier)
-    if out is None:
-        out = frontier.limit(0)
-    return out.select("start_id", F.col("node_id").alias("anc_id")).distinct()
+    step = edges.filter(F.col("kind") == kind).select(
+        F.col("dst").alias("node_id"), F.col("src").alias("next_id"),
+        F.lit(1).alias("cost"))
+    seed = starts.select(F.col("node_id").alias("start_id"), "node_id",
+                         F.lit(0).alias("depth"))
+    return expand(seed, step, ["start_id"]).filter(F.col("depth") > 0).select(
+        "start_id", F.col("node_id").alias("anc_id"))
 
 
 def _decl_types(cpg: Cpg) -> DataFrame:
@@ -117,7 +101,6 @@ def _uncalled_internal_method(cpg: Cpg) -> DataFrame:
     methods = cpg.method().is_external(False).to_df().filter(
         ~F.col("name").rlike("^main")
     ).select("node_id")
-    called = cpg.nodes.sparkSession.createDataFrame([], "node_id long")
     call_dsts = (
         cpg.edges.filter(F.col("kind") == "CALL").select(F.col("dst").alias("node_id")).distinct()
     )
@@ -127,12 +110,12 @@ def _uncalled_internal_method(cpg: Cpg) -> DataFrame:
 def _deep_nesting(cpg: Cpg, depth: int = 3) -> DataFrame:
     """complexity family: control structures nested >= depth deep.
 
-    Needs per-start pairing, not the DSL's frontier closure: starting the
-    AST closure from ALL control structures at once puts every nested
-    structure in the merged visited set, so it never surfaces as a
-    descendant (the `_ancestor_pairs` docstring trap). A structure is
-    nested >= depth deep iff it has >= depth-1 control-structure proper
-    AST ancestors (ancestors on a tree path are all distinct)."""
+    Needs per-start pairing (``_ancestor_pairs`` keys the walk by
+    ``start_id``), not the DSL's merged closure: starting the AST closure
+    from ALL control structures at once makes every nested structure a
+    seed of the one visited set, so it never surfaces as a descendant. A
+    structure is nested >= depth deep iff it has >= depth-1 control-structure
+    proper AST ancestors (ancestors on a tree path are all distinct)."""
     cs_ids = cpg.all().is_control_structure().ids()
     pairs = _ancestor_pairs(cpg.edges, "AST", cs_ids)
     cs_anc = pairs.join(cs_ids.withColumnRenamed("node_id", "anc_id"), "anc_id")

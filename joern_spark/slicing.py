@@ -10,8 +10,8 @@ Reference:
 
 Spark shape: the reference fans out one thread-pool task per sink/declaration
 (``ConcurrentTaskUtil``); here the same fan-out is the DataFrame itself —
-the ddg closure is a bounded iterative join on REACHING_DEF (depth rounds,
-all sinks advance together), and usage slices are three equi-joins + one
+the ddg closure is ``frontier.expand`` over REACHING_DEF (depth rounds, all
+sinks advance together), and usage slices are three equi-joins + one
 grouped aggregation. Everything stays distributed; results are DataFrames a
 caller writes with ``df.write.json`` (one JSON slice row per part).
 """
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.dims import budgeted_broadcast
+from .operators.frontier import expand
 
 SLICE_DEPTH_DEFAULT = 20  # DataFlowConfig.sliceDepth default
 
@@ -35,26 +36,14 @@ def data_flow_slice(nodes: DataFrame, edges: DataFrame,
     slice_edges: (src, dst, kind) — edges with both endpoints in the slice.
     """
     args = edges.filter(F.col("kind") == "ARGUMENT").select(
-        F.col("dst").alias("node_id")
-    ).distinct()
+        F.col("dst").alias("node_id"), F.lit(0).alias("depth")
+    )
     rd_back = edges.filter(F.col("kind") == "REACHING_DEF").select(
-        F.col("dst").alias("node_id"), F.col("src").alias("prev_id")
+        F.col("dst").alias("node_id"), F.col("src").alias("next_id"),
+        F.lit(1).alias("cost"),
     )
 
-    visited = args.localCheckpoint(eager=True)
-    frontier = visited
-    for _ in range(slice_depth):
-        nxt = (
-            frontier.join(rd_back, "node_id")
-            .select(F.col("prev_id").alias("node_id"))
-            .distinct()
-            .join(visited, "node_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    visited = expand(args, rd_back, max_depth=slice_depth).select("node_id")
 
     methods = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("node_id").alias("method_id"), F.col("full_name").alias("parent_method")

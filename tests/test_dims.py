@@ -2,10 +2,15 @@
 to a shuffle join when the dimension exceeds the budget — degrade, don't die
 (VERDICT round-2 'unconditional broadcast' anti-pattern)."""
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
+from joern_spark.corpus import docs_df, skew_corpus
 from joern_spark.operators import dims
+from joern_spark.operators.ast_pass import parse_docs, split_rows
+from joern_spark.operators.base_passes import method_stubs
 from joern_spark.operators.callgraph import (
     link_calls,
     method_ref_linker,
@@ -39,32 +44,37 @@ def test_hint_overrides_probe(spark, no_auto_broadcast):
     assert "BroadcastHashJoin" in _plan(j)
 
 
+def _linkers(nodes, edges) -> dict:
+    static = static_call_linker(nodes)
+    return {
+        "static": static,
+        "naive": naive_call_linker(nodes, static),
+        "method_ref": method_ref_linker(nodes),
+        "field_access": field_access_linker(nodes, edges),
+        "link_calls": link_calls(nodes, edges),
+    }
+
+
 @pytest.mark.parametrize("fits", [True, False])
-def test_linkers_respect_budget(cpg_nodes_edges, no_auto_broadcast, fits):
+def test_linkers_respect_budget(cpg_nodes_edges, skew_nodes_edges,
+                                no_auto_broadcast, fits):
     """Each linker's dim join follows the run-wide hint: broadcast when the
     vocabulary fits, shuffle join when it doesn't — and produces the SAME
-    rows either way."""
-    nodes, edges = cpg_nodes_edges
-    with dims.dim_fits_hint(fits):
-        plans = {
-            "static": static_call_linker(nodes),
-            "naive": naive_call_linker(
-                nodes, static_call_linker(nodes)),
-            "method_ref": method_ref_linker(nodes),
-            "field_access": field_access_linker(nodes, edges),
-            "link_calls": link_calls(nodes, edges),
-        }
-        for name, df in plans.items():
+    rows either way, on the fixture corpus and on the hot-key skew corpus
+    (printf/malloc called from every document)."""
+    for nodes, edges in (cpg_nodes_edges, skew_nodes_edges):
+        with dims.dim_fits_hint(fits):
+            frames = _linkers(nodes, edges)
+        with dims.dim_fits_hint(not fits):
+            other = _linkers(nodes, edges)
+        for name, df in frames.items():
             p = _plan(df)
             if fits:
                 assert "BroadcastHashJoin" in p, name
-            elif name in ("static", "naive", "link_calls"):
-                # the static linker's salted fallback legitimately broadcasts
-                # its BOUNDED hot-key list (≤ 1/threshold_ratio keys); the
-                # method-dim join itself must be a shuffle join
-                assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, name
             else:
                 assert "BroadcastHashJoin" not in p, (name, p[:2000])
+            assert (Counter(map(tuple, df.collect()))
+                    == Counter(map(tuple, other[name].collect()))), name
 
 
 def test_link_calls_matches_sequential_chain(cpg_nodes_edges):
@@ -94,3 +104,14 @@ def test_link_calls_matches_sequential_chain(cpg_nodes_edges):
 @pytest.fixture(scope="module")
 def cpg_nodes_edges(cpg):
     return cpg.nodes, cpg.edges
+
+
+@pytest.fixture(scope="module")
+def skew_nodes_edges(spark):
+    """The hot-key skew corpus, checkpointed so the plans under test hold
+    only the linkers' own joins (the stub pass broadcasts upstream)."""
+    rows = parse_docs(docs_df(spark, skew_corpus(60), partitions=4)).persist()
+    nodes, edges, _ = split_rows(rows)
+    stubs, stub_edges = method_stubs(nodes, edges)
+    return (nodes.unionByName(stubs).localCheckpoint(),
+            edges.unionByName(stub_edges).localCheckpoint())

@@ -1,0 +1,82 @@
+"""``frontier.expand`` — the one transitive-closure loop — against a
+plain-Python BFS with the same round semantics: per round, depth + cost,
+drop depth > max_depth, min depth per state, never re-enter a visited state,
+stop on an empty round or at ``MAX_ROUNDS`` (with a warning)."""
+
+import warnings
+
+import pytest
+
+from joern_spark.operators import frontier
+from joern_spark.operators.frontier import expand
+
+# 1 → 2 → 3 → 1 is a cycle through the seed node 1; 3 → 4 → 5 and 2 → 5
+# give node 5 two arrival rounds; the parallel 1 → 7 edges arrive in the
+# same round at two depths (like a REACHING_DEF and a call hop)
+EDGES = [(1, 2, 1), (2, 3, 0), (3, 1, 1), (3, 4, 1), (4, 5, 0), (2, 5, 1),
+         (5, 6, 1), (1, 7, 1), (1, 7, 0)]
+
+
+def _bfs(seeds: dict, edges, max_depth=None, cap=frontier.MAX_ROUNDS) -> dict:
+    """{(key, node): depth} reference for ``expand``."""
+    adj: dict = {}
+    for a, b, c in edges:
+        adj.setdefault(a, []).append((b, c))
+    visited, cur = dict(seeds), dict(seeds)
+    for _ in range(cap):
+        nxt: dict = {}
+        for (k, n), d in cur.items():
+            for m, c in adj.get(n, ()):
+                nd = d + c
+                if (max_depth is not None and nd > max_depth) or (k, m) in visited:
+                    continue
+                nxt[(k, m)] = min(nd, nxt.get((k, m), nd))
+        if not nxt:
+            break
+        visited.update(nxt)
+        cur = nxt
+    return visited
+
+
+def _step(spark, edges):
+    return spark.createDataFrame(edges, "node_id long, next_id long, cost int")
+
+
+def test_unkeyed_matches_bfs(spark):
+    edges = [(a, b, 1) for a, b, _ in EDGES]
+    seed = spark.createDataFrame([(1, 0)], "node_id long, depth int")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = {(None, r["node_id"]): r["depth"]
+               for r in expand(seed, _step(spark, edges)).collect()}
+    want = _bfs({(None, 1): 0}, edges)
+    assert got == want
+    # the seed is reachable again through 3 → 1 but keeps its depth
+    assert got[(None, 1)] == 0 and len(got) == 7
+
+
+def test_keyed_costs_and_bound_match_bfs(spark):
+    seeds = {("a", 1): 0, ("b", 4): 0, ("b", 1): 0}
+    seed = spark.createDataFrame([(k, n, d) for (k, n), d in seeds.items()],
+                                 "key string, node_id long, depth int")
+    got = {}
+    for bound in (None, 0, 1):
+        got[bound] = {(r["key"], r["node_id"]): r["depth"]
+                      for r in expand(seed, _step(spark, EDGES), ["key"],
+                                      max_depth=bound).collect()}
+        assert got[bound] == _bfs(seeds, EDGES, max_depth=bound), bound
+    # key "b" reaches 5 from its seed 4 at depth 0, key "a" only at depth 2:
+    # the keyed walks share one frontier but not their visited sets
+    assert got[None][("b", 5)] == 0 and got[None][("a", 5)] == 2
+    assert got[None][("a", 7)] == 0
+    assert ("a", 5) not in got[1] and ("b", 5) in got[0]
+
+
+def test_round_cap_warns_and_truncates(spark, monkeypatch):
+    monkeypatch.setattr(frontier, "MAX_ROUNDS", 3)
+    chain = [(i, i + 1, 1) for i in range(6)]
+    seed = spark.createDataFrame([(0, 0)], "node_id long, depth int")
+    with pytest.warns(RuntimeWarning, match="MAX_ROUNDS=3"):
+        rows = expand(seed, _step(spark, chain)).collect()
+    assert sorted((r["node_id"], r["depth"]) for r in rows) == [
+        (0, 0), (1, 1), (2, 2), (3, 3)]

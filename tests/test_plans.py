@@ -67,21 +67,6 @@ def test_static_linker_broadcasts_method_dim(spark, cpg):
     assert "BroadcastHashJoin" in plan
 
 
-def test_static_linker_auto_dispatch(spark, cpg):
-    """'auto' must pick broadcast under the budget and salted above it —
-    a 100×-scale method dim would otherwise kill the broadcast."""
-    from joern_spark.operators.callgraph import static_call_linker
-
-    small = static_call_linker(cpg.nodes, strategy="auto")
-    assert "BroadcastHashJoin" in _plan(small)
-
-    big = static_call_linker(cpg.nodes, strategy="auto", broadcast_budget=1)
-    plan = _plan(big)
-    # the salted path shuffles both sides on the salted key — the method dim
-    # must NOT be broadcast-joined
-    assert "salt" in plan or "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-
 def test_partial_aggregation_present(spark):
     from joern_spark.analytics.dedup import dedup_exact
 

@@ -18,37 +18,6 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 
-def _jvm_cpu_seconds() -> float:
-    """utime+stime of our java child (noise-robust work measure on a
-    contended host: CPU seconds don't lie even when wall clock does)."""
-    import os
-
-    clk = os.sysconf("SC_CLK_TCK")
-    me = os.getpid()
-    info = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                rest = f.read().rsplit(")", 1)[1].split()
-            info[int(pid)] = (int(rest[1]), (int(rest[11]) + int(rest[12])) / clk)
-        except (OSError, IndexError, ValueError):
-            continue
-    # sum over every descendant (JVM + its python workers)
-    total = 0.0
-    for pid, (ppid, cpu) in info.items():
-        cur = pid
-        for _ in range(20):
-            if cur == me:
-                total += cpu
-                break
-            cur = info.get(cur, (0, 0))[0]
-            if cur <= 1:
-                break
-    return total
-
-
 def main() -> None:
     cpus = int(sys.argv[1])
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -56,6 +25,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from joern_spark.hostmetrics import tree_cpu_seconds
     from joern_spark.pipeline import run_pipeline
     from joern_spark.session import get_spark
     from joern_spark.synth import synth_docs
@@ -75,12 +45,12 @@ def main() -> None:
     docs = synth_docs(documents).persist()
     n_docs = docs.count()  # materialize input outside the timed section
 
-    cpu0 = _jvm_cpu_seconds()
+    cpu0 = tree_cpu_seconds()
     t0 = time.time()
     res = run_pipeline(spark, docs, n_parts=max(cpus, 8))
     n_triples = res.triples.count()
     sec = time.time() - t0
-    cpu = _jvm_cpu_seconds() - cpu0
+    cpu = tree_cpu_seconds() - cpu0
 
     print(json.dumps({
         "cpus": cpus, "sec": round(sec, 2), "docs": n_docs,
