@@ -14,8 +14,9 @@ engine; this package re-expresses what it *computes* as idiomatic Spark:
   fused, doc-contiguous ``mapInArrow`` kernel (reference: ``CfgCreator.scala``,
   ``ReachingDefProblem.scala``),
 - transitive closures (``repeat``, ``dominatedBy``, ``reachableBy``,
-  ``callee*``, the type hierarchy) = one bounded semi-naive frontier loop,
-  ``operators/frontier.expand``,
+  ``callee*``, the type hierarchy) = one bounded frontier BFS,
+  ``operators/frontier.expand``: a lazy walk over a broadcast adjacency
+  under the dims budget, a checkpointed semi-naive join loop over it,
 - materialization = partitioned parquet tables (``nodes``/``edges``/``triples``)
   with per-partition lineage rows and resumable stage manifests.
 """

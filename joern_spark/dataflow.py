@@ -8,13 +8,16 @@ edges within a method, jumping interprocedurally at parameters (to caller
 arguments) and at call sites (into callee returns), k-limited at
 ``maxCallDepth = 4`` (``Engine.scala:322``).
 
-Spark shape: instead of per-sink tasks on a thread pool, ONE frontier
-DataFrame carries every sink's wavefront simultaneously; each round of
-``frontier.expand`` is
-  frontier ⋈ (reversed REACHING_DEF  ∪  param→arg hop  ∪  call→return hop)
-with a visited-set anti-join. Rounds are bounded by the graph diameter ×
-call depth; every sink shares the same joins, which is exactly the path-cache
-sharing the reference implements by hand (``EngineConfig.shareCacheBetweenTasks``).
+Spark shape: instead of per-sink tasks on a thread pool, ONE
+``frontier.expand`` keyed by ``sink_id`` carries every sink's walk over one
+step relation,
+  reversed REACHING_DEF (cost 0)  ∪  param→arg hop  ∪  call→return hop (cost 1),
+with ``max_depth = max_call_depth``. :class:`FlowEngine` builds that step once
+per graph, so every query of a bundle walks the same relation, which is the
+path-cache sharing the reference implements by hand
+(``EngineConfig.shareCacheBetweenTasks``). Under the broadcast budget each
+flow is a lazy frame that runs inside its consumer's job; over it, expand's
+checkpointed loop runs the rounds.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.frontier import MAX_ROUNDS, expand
+from .operators.frontier import expand
 
 MAX_CALL_DEPTH = 4  # Engine.scala:322
 
@@ -95,171 +98,49 @@ def interproc_back_edges_tagged(nodes: DataFrame, edges: DataFrame) -> DataFrame
 
 def reachable_by(nodes: DataFrame, edges: DataFrame,
                  sinks: DataFrame, sources: DataFrame,
-                 max_call_depth: int = MAX_CALL_DEPTH,
-                 rd_back: DataFrame | None = None,
-                 inter_back: DataFrame | None = None) -> DataFrame:
+                 max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
     """Which sources reach which sinks through data flow?
 
     sinks/sources: DataFrames with a ``node_id`` column.
-    Returns (source_id, sink_id) pairs.
-
-    The frontier is (node_id, sink_id, depth): every node whose value flows
-    into sink_id, reached backwards (``frontier.expand`` keyed by sink_id).
-    depth counts interprocedural hops only, mirroring the reference's
-    k-limit semantics.
-
-    ``rd_back`` / ``inter_back`` accept pre-computed (and ideally persisted)
-    backward relations so a bundle of queries over the same graph (FlowEngine)
-    doesn't rebuild them per call.
+    Returns (source_id, sink_id) pairs. One-off form of
+    :meth:`FlowEngine.flow`; a bundle of queries over the same graph shares
+    one engine instead (``Cpg.flow``).
     """
-    if rd_back is None:
-        rd_back = _edges_of(edges, "REACHING_DEF").select(
-            F.col("dst").alias("node_id"), F.col("src").alias("prev_id")
-        )
-    own_inter = inter_back is None
-    if own_inter:
-        inter_back = interproc_back_edges(nodes, edges).persist()
-
-    # intra-procedural hops are free, interprocedural ones cost one call level
-    step = rd_back.select("node_id", F.col("prev_id").alias("next_id"),
-                          F.lit(0).alias("cost")).unionByName(
-        inter_back.select("node_id", F.col("prev_id").alias("next_id"),
-                          F.lit(1).alias("cost")))
-    seed = sinks.select("node_id", F.col("node_id").alias("sink_id"),
-                        F.lit(0).alias("depth"))
-    visited = expand(seed, step, ["sink_id"], max_depth=max_call_depth)
-
-    # visited holds each (sink_id, node_id) once, so the pairs are distinct
-    out = visited.join(sources.select("node_id").distinct(), "node_id").select(
-        F.col("node_id").alias("source_id"), "sink_id")
-    if own_inter:
-        # expand checkpoints every round, so the relation is no longer
-        # needed once the loop has converged
-        inter_back.unpersist()
-    return out
-
-
-# row budget for collecting the backward relations driver-side; matches the
-# 2M-row dictionary budget of operators/dims.py (reference: the default
-# in-memory path cache of Engine.scala — shareCacheBetweenTasks)
-FLOW_COLLECT_BUDGET = 2_000_000
-
-
-def _driver_bfs_pairs(intra: dict, inter: dict, sink_ids: set, source_ids: set,
-                      max_call_depth: int) -> set:
-    """Per-sink backward BFS replicating reachable_by's distributed round
-    semantics EXACTLY: per round, new arrivals keep the min depth seen that
-    round; already-visited (node, sink) states are never re-entered (the
-    anti-join); interprocedural hops are gated on ``depth < max_call_depth``
-    BEFORE the hop; rounds are capped at MAX_ROUNDS.  Per-sink evolution in
-    the shared-frontier loop is independent (frontier rows are keyed by
-    sink_id), so a per-sink driver BFS is observationally identical.
-    """
-    pairs = set()
-    for s in sink_ids:
-        visited = {s}
-        frontier = {s: 0}
-        for _ in range(MAX_ROUNDS):
-            nxt: dict = {}
-            for node, d in frontier.items():
-                for p in intra.get(node, ()):
-                    if p not in visited:
-                        nd = nxt.get(p)
-                        if nd is None or d < nd:
-                            nxt[p] = d
-                if d < max_call_depth:
-                    for p in inter.get(node, ()):
-                        if p not in visited:
-                            nd = nxt.get(p)
-                            if nd is None or d + 1 < nd:
-                                nxt[p] = d + 1
-            if not nxt:
-                break
-            visited.update(nxt)
-            frontier = nxt
-        pairs.update((src, s) for src in source_ids & visited)
-    return pairs
+    return FlowEngine(nodes, edges).flow(sinks, sources, max_call_depth)
 
 
 class FlowEngine:
-    """Budget-dispatched ``reachableBy`` resolver shared across a scan bundle.
+    """``reachableBy`` over one graph, shared across a scan bundle.
 
-    A scan bundle (scan.py DEFAULT_BUNDLE) issues ~23 independent reachableBy
-    queries over the SAME graph.  Driving the distributed frontier loop per
-    query costs O(queries x rounds) eager Spark jobs and rebuilds the backward
-    relations every time.  The engine computes rd_back / interproc-back ONCE,
-    then dispatches per query:
-
-    - relations fit ``budget`` rows -> collect them once and answer every
-      query with a driver-side BFS that replicates the distributed loop's
-      round semantics exactly (``_driver_bfs_pairs``).  This is the
-      shared-path-cache idea of the reference's engine
-      (``EngineConfig.shareCacheBetweenTasks``, ``Engine.scala:43-268``)
-      taken to its conclusion for bundle execution;
-    - over budget (the 100 TB path) -> the distributed frontier loop,
-      reusing the persisted relations across all queries in the bundle.
-
-    Same budgeted-dispatch shape as operators/dims.py broadcast budget.
+    The engine builds the backward step relation once: reversed
+    REACHING_DEF at cost 0 ∪ ``interproc_back_edges`` at cost 1 (depth
+    counts interprocedural hops only, the reference's k-limit). Every
+    :meth:`flow` call is one ``frontier.expand`` keyed by ``sink_id`` over
+    that same step frame, so under the broadcast budget the step is fetched
+    and broadcast once per engine, and each flow is a lazy frame that runs
+    inside its consumer's job (the reference's shared path cache,
+    ``EngineConfig.shareCacheBetweenTasks``, ``Engine.scala:43-268``).
     """
 
-    def __init__(self, nodes: DataFrame, edges: DataFrame,
-                 budget: int = FLOW_COLLECT_BUDGET):
-        self.nodes, self.edges = nodes, edges
-        self.budget = budget
-        self._rd_back: DataFrame | None = None
-        self._inter_back: DataFrame | None = None
-        self._adj: tuple | None = None
-        self.mode: str | None = None
-
-    def _relations(self) -> tuple:
-        if self._rd_back is None:
-            self._rd_back = _edges_of(self.edges, "REACHING_DEF").select(
-                F.col("dst").alias("node_id"), F.col("src").alias("prev_id")
-            )
-            self._inter_back = interproc_back_edges(self.nodes, self.edges)
-        return self._rd_back, self._inter_back
-
-    def _ensure_mode(self) -> str:
-        if self.mode is not None:
-            return self.mode
-        rd_back, inter_back = self._relations()
-        probe = rd_back.unionByName(inter_back).limit(self.budget + 1).count()
-        if probe > self.budget:
-            self._rd_back = rd_back.persist()
-            self._inter_back = inter_back.persist()
-            self.mode = "distributed"
-        else:
-            intra: dict = {}
-            inter: dict = {}
-            # plain Row access — ids stay Python ints end to end (never
-            # through pandas/float64; see CLAUDE.md 64-bit id rule)
-            for r in rd_back.collect():
-                intra.setdefault(r[0], []).append(r[1])
-            for r in inter_back.collect():
-                inter.setdefault(r[0], []).append(r[1])
-            self._adj = (intra, inter)
-            self.mode = "driver"
-        return self.mode
+    def __init__(self, nodes: DataFrame, edges: DataFrame):
+        rd_back = _edges_of(edges, "REACHING_DEF").select(
+            F.col("dst").alias("node_id"), F.col("src").alias("next_id"),
+            F.lit(0).alias("cost"))
+        inter_back = interproc_back_edges(nodes, edges).select(
+            "node_id", F.col("prev_id").alias("next_id"), F.lit(1).alias("cost"))
+        self.step = rd_back.unionByName(inter_back)
 
     def flow(self, sinks: DataFrame, sources: DataFrame,
              max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
-        """reachable_by(sinks, sources) -> (source_id, sink_id) DataFrame."""
-        if self._ensure_mode() == "distributed":
-            return reachable_by(self.nodes, self.edges, sinks, sources,
-                                max_call_depth, rd_back=self._rd_back,
-                                inter_back=self._inter_back)
-        intra, inter = self._adj
-        sink_ids = {r[0] for r in sinks.select("node_id").distinct().collect()}
-        src_ids = {r[0] for r in sources.select("node_id").distinct().collect()}
-        pairs = _driver_bfs_pairs(intra, inter, sink_ids, src_ids,
-                                  max_call_depth)
-        from pyspark.sql import types as T
-        schema = T.StructType([
-            T.StructField("source_id", T.LongType(), False),
-            T.StructField("sink_id", T.LongType(), False),
-        ])
-        return self.nodes.sparkSession.createDataFrame(
-            sorted((int(a), int(b)) for a, b in pairs), schema)
+        """(source_id, sink_id) pairs: every node whose value flows into a
+        sink (reached backwards, at most ``max_call_depth`` interprocedural
+        hops) that is also a source. Lazy; composes with other flows."""
+        seed = sinks.select("node_id", F.col("node_id").alias("sink_id"),
+                            F.lit(0).alias("depth"))
+        visited = expand(seed, self.step, ["sink_id"], max_depth=max_call_depth)
+        # visited holds each (sink_id, node_id) once, so the pairs are distinct
+        return visited.join(sources.select("node_id").distinct(), "node_id") \
+            .select(F.col("node_id").alias("source_id"), "sink_id")
 
 
 def flow_result_pairs(nodes: DataFrame, paths: list[list[int]],

@@ -5,27 +5,56 @@ the DSL's AST/dominator/CDG closures, the scan's per-start ancestor walks,
 ``reachableBy``, the bounded call-graph closure, the data-flow slice and the
 type hierarchy (reference: ``repeat``/``dominatedBy``/``reachableBy``/
 ``callee*``). They all call :func:`expand`, which owns how a closure advances,
-deduplicates, checkpoints, detects convergence and stops at the cap.
+deduplicates, detects convergence and stops at the cap.
 
-Spark shape: one round is frontier ⋈ step, then one aggregate per state over
-the round's rows ∪ the visited set, which both keeps the minimum depth and
-drops visited states (the anti-join, without a second shuffle). Two actions
-per round: an eager ``localCheckpoint`` of the round's rows and an
-``isEmpty`` probe for convergence. The visited set is the union of the
-checkpointed rounds, so its lineage never grows past one round.
+Two physical plans keep one contract; the size of the step relation picks
+the plan (the dims budget, ``dims.MAX_BROADCAST_DIM`` rows):
+
+- **Broadcast walk** (the step fits). One Arrow fetch of the step, broadcast
+  as an adjacency map ``{node_id: [(next_id, cost)]}``; the seed is
+  repartitioned by its keys and ``mapInArrow`` runs a per-key BFS over the
+  broadcast map. The plan is lazy: it runs no Spark job until the
+  consumer's own action, so a closure costs its consumer one shuffle, not
+  rounds of jobs. The fetch is memoized per step frame object (a caller that
+  passes the same step again pays no second fetch) and released with it.
+  Joern answers ``reachableBy``/``repeat`` the same way, over one
+  in-memory graph.
+- **Checkpointed loop** (over budget). One round is frontier ⋈ step, then
+  one aggregate per state over the round's rows ∪ the visited set, which
+  both keeps the minimum depth and drops visited states (the anti-join,
+  without a second shuffle). Two actions per round: an eager
+  ``localCheckpoint`` of the round's rows and an ``isEmpty`` probe for
+  convergence. The visited set is the union of the checkpointed rounds, so
+  its lineage never grows past one round.
 """
 
 from __future__ import annotations
 
+import sys
 import warnings
+import weakref
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import dims
+
 # round cap for every closure; the DuckDB oracle twins recurse to fixpoint,
 # so this is a safety valve, not a semantic bound — reaching it warns
 MAX_ROUNDS = 256
+
+# rows per output batch of the broadcast walk
+_BATCH_ROWS = 65536
+
+# step frame → broadcast adjacency, or None when over budget; weak keys, so
+# an entry is released with its step frame
+_ADJACENCY: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _cap_message(cap: int) -> str:
+    return (f"frontier.expand stopped at MAX_ROUNDS={cap} with a "
+            "non-empty frontier; the closure is truncated")
 
 
 def expand(seed: DataFrame, step: DataFrame, keys: Sequence[str] = (),
@@ -34,17 +63,29 @@ def expand(seed: DataFrame, step: DataFrame, keys: Sequence[str] = (),
 
     seed: ``(*keys, node_id, depth)``; step: ``(node_id, next_id, cost)``.
     ``keys`` pair each walk with its start (e.g. ``sink_id``), so per-start
-    closures share one frontier without merging their visited sets.
+    closures share one frontier without merging their visited sets. Keys and
+    node ids keep their types (the type hierarchy walks string names).
 
-    Each round joins the frontier to ``step`` and sets ``depth + cost``,
-    drops rows with ``depth > max_depth`` when a bound is given, keeps the
-    minimum depth per ``(*keys, node_id)`` within the round, and anti-joins
-    the states already visited. A state's depth is therefore the one of the
-    round that first reached it. The loop stops when a round adds nothing,
-    or after ``MAX_ROUNDS`` rounds with a ``RuntimeWarning``. Returns every
+    A state starts at the seed's minimum depth. Each round follows ``step``
+    from the frontier and sets ``depth + cost``, drops rows with
+    ``depth > max_depth`` when a bound is given, keeps the minimum depth per
+    ``(*keys, node_id)`` within the round, and never enters a visited state
+    again. A state's depth is therefore the one of the round that first
+    reached it. A walk stops when a round adds nothing, or after
+    ``MAX_ROUNDS`` rounds (read when ``expand`` is called). Returns every
     visited state, seed included, once.
+
+    Both plans (module docstring) return the same rows. Under the budget the
+    result is a lazy frame: return it to the consumer, do not collect around
+    it. At the cap the checkpointed loop raises a ``RuntimeWarning``; the
+    broadcast walk, which runs on a worker, writes the same text to the
+    worker's stderr.
     """
     keys = list(keys)
+    adj = _adjacency(step)
+    if adj is not None:
+        return _broadcast_walk(seed, adj, keys, max_depth)
+
     state = [*keys, "node_id"]
     frontier = (
         seed.groupBy(*state).agg(F.min("depth").alias("depth"))
@@ -72,9 +113,93 @@ def expand(seed: DataFrame, step: DataFrame, keys: Sequence[str] = (),
             return visited
         visited = visited.unionByName(nxt)
         frontier = nxt
-    warnings.warn(
-        f"frontier.expand stopped at MAX_ROUNDS={MAX_ROUNDS} with a "
-        "non-empty frontier; the closure is truncated",
-        RuntimeWarning, stacklevel=2,
-    )
+    warnings.warn(_cap_message(MAX_ROUNDS), RuntimeWarning, stacklevel=2)
     return visited
+
+
+def _adjacency(step: DataFrame):
+    """The step as a broadcast ``{node_id: [(next_id, cost)]}``, or None when
+    it has more than ``dims.MAX_BROADCAST_DIM`` rows. One Arrow fetch per
+    step frame object."""
+    if step in _ADJACENCY:
+        return _ADJACENCY[step]
+    budget = dims.MAX_BROADCAST_DIM
+    tbl = step.select("node_id", "next_id", "cost").limit(budget + 1).toArrow()
+    adj = None
+    if tbl.num_rows <= budget:
+        out: dict = {}
+        # Arrow → Python keeps 64-bit ids exact (never through float64)
+        for n, m, c in zip(*(col.to_pylist() for col in tbl.columns)):
+            if n is not None:  # the loop's equi-join never matches a null
+                out.setdefault(n, []).append((m, c))
+        adj = step.sparkSession.sparkContext.broadcast(out)
+    _ADJACENCY[step] = adj
+    return adj
+
+
+def _broadcast_walk(seed: DataFrame, adj, keys: list[str],
+                    max_depth: int | None) -> DataFrame:
+    """The lazy plan: seed rows of one key meet in one partition, whose
+    ``mapInArrow`` task walks every key's BFS over the broadcast map."""
+    seed = seed.select(*keys, "node_id", "depth")
+    parts = seed.repartition(*keys) if keys else seed.repartition(1)
+    return parts.mapInArrow(_walker(adj, len(keys), max_depth, MAX_ROUNDS),
+                            seed.schema)
+
+
+def _walker(adj, n_keys: int, max_depth: int | None, cap: int):
+    def walk(batches):
+        import pyarrow as pa
+
+        graph = adj.value
+        schema = None
+        walks: dict = {}  # key tuple → {node_id: seed depth}
+        for b in batches:
+            schema = b.schema
+            cols = [c.to_pylist() for c in b.columns]
+            for row in zip(*cols):
+                key, n, d = row[:n_keys], row[n_keys], row[n_keys + 1]
+                seen = walks.setdefault(key, {})
+                if n not in seen or d < seen[n]:
+                    seen[n] = d
+        out: list[list] = [[] for _ in range(n_keys + 2)]
+        truncated = False
+        for key, visited in walks.items():
+            frontier = dict(visited)
+            for _ in range(cap):
+                nxt: dict = {}
+                for n, d in frontier.items():
+                    for m, c in graph.get(n, ()):
+                        nd = d + c
+                        if m in visited or (max_depth is not None
+                                            and nd > max_depth):
+                            continue
+                        old = nxt.get(m)
+                        if old is None or nd < old:
+                            nxt[m] = nd
+                if not nxt:
+                    break
+                visited.update(nxt)
+                frontier = nxt
+            else:
+                truncated = True
+            for n, d in visited.items():
+                for i, k in enumerate(key):
+                    out[i].append(k)
+                out[n_keys].append(n)
+                out[n_keys + 1].append(d)
+            if len(out[n_keys]) >= _BATCH_ROWS:
+                yield _batch(pa, out, schema)
+                out = [[] for _ in range(n_keys + 2)]
+        if truncated:
+            print(_cap_message(cap), file=sys.stderr)
+        if out[n_keys]:
+            yield _batch(pa, out, schema)
+
+    return walk
+
+
+def _batch(pa, cols: list[list], schema):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)

@@ -17,8 +17,9 @@ Two query families the reference exposes through its DSL and querydb:
   method-level call graph — the engine behind the DSL's
   ``method.repeat(_.callee)`` step (reference
   ``semanticcpg/.../language/package.scala`` RepeatTraversal /
-  querydb interprocedural queries). Distributed BFS (``frontier.expand``
-  keyed by the root method): each round is one equi-join of the frontier
+  querydb interprocedural queries). BFS via ``frontier.expand`` keyed by
+  the root method: under the dims budget a lazy walk over the broadcast
+  edge relation; over it, each round is one equi-join of the frontier
   against the (re-used, checkpointed) edge relation keyed by caller, with
   a left-anti join against the visited set so every pair is expanded
   exactly once — which also makes ``hops`` the MINIMUM hop count. Rounds are

@@ -101,11 +101,11 @@ class Cpg:
              max_call_depth: int | None = None) -> DataFrame:
         """Shared reachableBy over this graph: (source_id, sink_id) pairs.
 
-        Routes through ONE lazily-built :class:`joern_spark.dataflow.
-        FlowEngine` cached on the instance, so a bundle of scan queries
-        reuses the backward relations (and, within budget, a driver-side
-        path cache) instead of re-running the distributed frontier loop
-        per query — the reference's ``shareCacheBetweenTasks``.
+        Routes through ONE :class:`joern_spark.dataflow.FlowEngine` cached on
+        the instance, so every query of a scan bundle walks the same backward
+        step relation (fetched and broadcast once under the budget) — the
+        reference's ``shareCacheBetweenTasks``. Returns a lazy frame that
+        runs inside the caller's own job.
         """
         from joern_spark.dataflow import MAX_CALL_DEPTH, FlowEngine
 

@@ -60,15 +60,20 @@ def _decl_types(cpg: Cpg) -> DataFrame:
 
 
 def _args(cpg: Cpg) -> DataFrame:
-    """ARGUMENT edges joined to the argument node's properties."""
-    a = cpg.edges.filter(F.col("kind") == "ARGUMENT").select(
-        F.col("src").alias("call_id"), F.col("dst").alias("arg_id"))
-    arg_nodes = cpg.nodes.select(
-        F.col("node_id").alias("arg_id"), F.col("kind").alias("a_kind"),
-        F.col("name").alias("a_name"), F.col("code").alias("a_code"),
-        F.col("argument_index"), F.col("method_id").alias("a_mid"),
-        F.col("type_full_name").alias("a_type"))
-    return a.join(arg_nodes, "arg_id")
+    """ARGUMENT edges joined to the argument node's properties. Built once
+    per ``Cpg`` and cached on the instance (as ``Cpg.flow`` caches its
+    engine): most queries of a bundle start from it."""
+    args = cpg.__dict__.get("_args")
+    if args is None:
+        a = cpg.edges.filter(F.col("kind") == "ARGUMENT").select(
+            F.col("src").alias("call_id"), F.col("dst").alias("arg_id"))
+        arg_nodes = cpg.nodes.select(
+            F.col("node_id").alias("arg_id"), F.col("kind").alias("a_kind"),
+            F.col("name").alias("a_name"), F.col("code").alias("a_code"),
+            F.col("argument_index"), F.col("method_id").alias("a_mid"),
+            F.col("type_full_name").alias("a_type"))
+        args = cpg.__dict__["_args"] = a.join(arg_nodes, "arg_id")
+    return args
 
 
 @dataclass(frozen=True)
@@ -1826,20 +1831,25 @@ def run_scan(nodes: DataFrame, edges: DataFrame,
     packs (e.g. ``["c", "android"]`` — the joern-scan bundle-select
     analog); ignored when an explicit ``bundle`` is passed."""
     cpg = Cpg(nodes=nodes, edges=edges)
-    out: DataFrame | None = None
-    meta = nodes.select("node_id", "doc_id", "code")
+    spark = nodes.sparkSession
     queries = bundle or DEFAULT_BUNDLE
     if bundle is None and packs is not None:
         queries = [q for q in DEFAULT_BUNDLE if QUERY_PACKS[q.name] in packs]
-    for q in queries:
-        ids = q.run(cpg).select("node_id").distinct()
-        f = ids.join(meta, "node_id").select(
-            F.lit(q.name).alias("name"), F.lit(q.title).alias("title"),
-            F.lit(q.severity).alias("severity"), "node_id", "doc_id", "code",
-        )
-        out = f if out is None else out.unionByName(f)
-    if out is None:  # packs filtered everything out
-        return nodes.sparkSession.createDataFrame(
+    if not queries:  # packs filtered everything out
+        return spark.createDataFrame(
             [], schema="name string, title string, severity double, "
                        "node_id long, doc_id string, code string")
-    return out
+    # every query's matches tagged by its bundle position, one distinct and
+    # ONE meta join; title and severity come from a broadcast of the bundle
+    hits = None
+    for i, q in enumerate(queries):
+        ids = q.run(cpg).select(F.lit(i).alias("q"), "node_id")
+        hits = ids if hits is None else hits.unionByName(ids)
+    info = spark.createDataFrame(
+        [(i, q.name, q.title, float(q.severity)) for i, q in enumerate(queries)],
+        schema="q int, name string, title string, severity double")
+    meta = nodes.select("node_id", "doc_id", "code")
+    return (
+        hits.distinct().join(meta, "node_id").join(F.broadcast(info), "q")
+        .select("name", "title", "severity", "node_id", "doc_id", "code")
+    )

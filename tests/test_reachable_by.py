@@ -167,34 +167,30 @@ def test_realizable_paths_no_cross_caller_flow(two_caller_cpg):
         "unrealizable caller_a->id2->caller_b stitch must be filtered"
 
 
-def test_flow_engine_driver_matches_distributed(cpg, q):
-    """FlowEngine parity: the budget-hit driver BFS and the over-budget
-    distributed loop must return the exact same (source_id, sink_id) set
-    as a direct reachable_by call, including k-limit gating."""
+def test_flow_engine_matches_reachable_by(cpg, q, monkeypatch):
+    """The bundle's shared engine (``Cpg.flow``) returns the exact
+    (source_id, sink_id) set of a one-off reachable_by call, under both of
+    ``frontier.expand``'s plans, including the k-limit at depth 0. The
+    reference side always runs the checkpointed loop, so the broadcast walk
+    is checked against the other plan."""
     from joern_spark.dataflow import FlowEngine
+    from joern_spark.operators import dims
 
     sinks = q.call().argument().ids()
     sources = q.literal().ids()
-    want = {(r[0], r[1]) for r in
-            reachable_by(cpg.nodes, cpg.edges, sinks, sources).collect()}
-    assert want  # non-vacuous on the fixture corpus
 
-    driver_eng = FlowEngine(cpg.nodes, cpg.edges)  # fixture graph fits budget
-    got_driver = {(r[0], r[1])
-                  for r in driver_eng.flow(sinks, sources).collect()}
-    assert driver_eng.mode == "driver"
-    assert got_driver == want
+    def pairs(df):
+        return {(r[0], r[1]) for r in df.collect()}
 
-    dist_eng = FlowEngine(cpg.nodes, cpg.edges, budget=0)
-    got_dist = {(r[0], r[1]) for r in dist_eng.flow(sinks, sources).collect()}
-    assert dist_eng.mode == "distributed"
-    assert got_dist == want
-
-    # k-limit gating parity at depth 0 (no interprocedural hops at all)
-    want0 = {(r[0], r[1]) for r in
-             reachable_by(cpg.nodes, cpg.edges, sinks, sources,
-                          max_call_depth=0).collect()}
-    got0 = {(r[0], r[1])
-            for r in driver_eng.flow(sinks, sources, max_call_depth=0)
-            .collect()}
-    assert got0 == want0 and len(want0) < len(want)
+    broadcast_eng = FlowEngine(cpg.nodes, cpg.edges)
+    got = {d: pairs(broadcast_eng.flow(sinks, sources, max_call_depth=d))
+           for d in (4, 0)}
+    monkeypatch.setattr(dims, "MAX_BROADCAST_DIM", 0)
+    loop_eng = FlowEngine(cpg.nodes, cpg.edges)
+    for d in (4, 0):
+        want = pairs(reachable_by(cpg.nodes, cpg.edges, sinks, sources,
+                                  max_call_depth=d))
+        assert got[d] == want, d
+        assert pairs(loop_eng.flow(sinks, sources, max_call_depth=d)) == want, d
+    assert got[4]  # non-vacuous on the fixture corpus
+    assert len(got[0]) < len(got[4])  # depth 0 takes no interprocedural hop
