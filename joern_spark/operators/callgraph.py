@@ -226,46 +226,9 @@ def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
     )
 
 
-def dynamic_call_linker(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """PARITY-ORACLE ONLY — not a production path. The pipeline resolves
-    dynamic dispatch through the one-pass aggregate arbitration in
-    :func:`link_calls`; this sequential window-based variant exists solely
-    so test_dims.py can A/B the two (test_plans.py asserts production never
-    plans it; tests/test_parity_oracle_isolation.py lints imports).
-
-    CHA resolution for DYNAMIC_DISPATCH calls.
-
-    call full_name = ``Recv.m`` → candidates = methods ``C.m`` for every C in
-    subclass-closure(Recv); if none, walk up the superclass chain
-    (``DynamicCallLinker.scala:142-167``); prefer internal methods over
-    external stubs (``:187-196``).
-    """
-    candidates = _dynamic_candidates(nodes, edges)
-    if candidates is None:
-        return nodes.sparkSession.createDataFrame(
-            [], schema="src long, dst long, kind string, variable string, "
-                       "doc_id string, method_id long")
-    # prefer-internal pruning: if any internal candidate exists for a call,
-    # drop the external stubs (window over call id).
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("src")
-    candidates = (
-        candidates.withColumn(
-            "has_internal", F.max(F.when(~F.col("m_external"), 1).otherwise(0)).over(w)
-        )
-        .filter((F.col("has_internal") == 0) | (~F.col("m_external")))
-    )
-    return candidates.select(
-        "src", "dst",
-        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-        "doc_id", "method_id",
-    ).distinct()
-
-
-def _naive_candidates(nodes: DataFrame,
-                      resolved: DataFrame | None = None) -> DataFrame:
-    """Bare-name candidates for non-operator calls.
+def _naive_candidates(nodes: DataFrame, resolved: DataFrame) -> DataFrame:
+    """Bare-name candidates for non-operator calls that ``resolved`` does not
+    list.
 
     ``resolved`` (a frame of already-linked ``src`` call ids) is anti-joined
     BEFORE the name join: bare-name matching is cross-document quadratic per
@@ -274,19 +237,14 @@ def _naive_candidates(nodes: DataFrame,
     static/CHA already resolved — rows the arbitration provably never keeps
     (their ``f_r01`` flag is 1) — costs quadratic work to produce garbage.
     The reference's NaiveCallLinker has the same shape: it runs on *leftover*
-    calls only (``NaiveCallLinker.scala:13-28``). Without ``resolved`` the
-    unlinked-only filter falls to the caller (arbitration flags, or
-    :func:`naive_call_linker`'s own anti-join)."""
+    calls only (``NaiveCallLinker.scala:13-28``)."""
     calls = nodes.filter(
         (F.col("kind") == "CALL") & ~F.col("name").startswith("<operator>")
     ).select(
         F.col("node_id").alias("call_id"), F.col("name").alias("m_name"),
         "doc_id", "method_id",
-    )
-    if resolved is not None:
-        calls = calls.join(
-            resolved.select(F.col("src").alias("call_id")), "call_id",
-            "left_anti")
+    ).join(resolved.select(F.col("src").alias("call_id")), "call_id",
+           "left_anti")
     methods = _method_dim(nodes).filter(~F.col("m_name").startswith("<operator>"))
     return calls.join(budgeted_broadcast(methods), "m_name").select(
         F.col("call_id").alias("src"), F.col("m_id").alias("dst"),
@@ -294,46 +252,10 @@ def _naive_candidates(nodes: DataFrame,
     )
 
 
-def naive_call_linker(nodes: DataFrame, call_edges: DataFrame) -> DataFrame:
-    """PARITY-ORACLE ONLY — not a production path (production uses
-    leftover-only ``_naive_candidates(resolved=...)`` inside the arbitration;
-    see :func:`dynamic_call_linker`'s marker for the lint/test guards).
-
-    Leftover calls linked by bare name against non-operator methods."""
-    unlinked = _naive_candidates(nodes).join(
-        call_edges.select(F.col("src")).distinct(), "src", "left_anti",
-    )
-    return unlinked.select(
-        "src", "dst",
-        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-        "doc_id", "method_id",
-    )
-
-
-def prefer_internal_call_edges(call_edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """PARITY-ORACLE ONLY — not a production path (the same pruning runs
-    inside :func:`link_calls`'s aggregate arbitration; see
-    :func:`dynamic_call_linker`'s marker for the lint/test guards).
-
-    Drop a call's external-stub CALL edges when it also resolved to an
-    internal method (DynamicCallLinker.scala:187-196 pruning, applied across
-    all linkers so a recovered-hint resolution supersedes a stub link)."""
-    from pyspark.sql import Window as W
-
-    meth = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("dst"), F.col("is_external").alias("m_ext")
-    )
-    joined = call_edges.join(meth, "dst", "left")
-    w = W.partitionBy("src")
-    return (
-        joined.withColumn(
-            "has_internal",
-            F.max(F.when(~F.coalesce(F.col("m_ext"), F.lit(True)), 1).otherwise(0)).over(w),
-        )
-        .filter((F.col("has_internal") == 0)
-                | (~F.coalesce(F.col("m_ext"), F.lit(True))))
-        .select(*call_edges.columns)
-    )
+def _rank(df: DataFrame, r: int) -> DataFrame:
+    """Candidate rows tagged with their linker's arbitration rank."""
+    return df.select("src", "dst", "doc_id", "method_id", "m_external",
+                     F.lit(r).alias("rank"))
 
 
 def candidate_pool(nodes: DataFrame, edges: DataFrame,
@@ -353,8 +275,6 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     the pruned pool and keeps row-for-row identical output (dropped rows
     only ever feed flag conditions of branches that are themselves dead:
     a pruned naive row's src has f_r01 == 1, killing every rank-3 branch)."""
-    rank = lambda df, r: df.select(  # noqa: E731
-        "src", "dst", "doc_id", "method_id", "m_external", F.lit(r).alias("rank"))
     dyn = _dynamic_candidates(nodes, edges)
     # The naive anti-join only needs set MEMBERSHIP of resolved call ids, not
     # the candidate rows — so the build side is a broadcast SEMI-join probe
@@ -374,9 +294,9 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     resolved = _static_resolved(nodes)
     if dyn is not None:
         resolved = resolved.unionByName(dyn.select("src"))
-    cand = rank(_static_candidates(nodes), 0)
+    cand = _rank(_static_candidates(nodes), 0)
     if dyn is not None:
-        cand = cand.unionByName(rank(dyn, 1))
+        cand = cand.unionByName(_rank(dyn, 1))
     # leftover-only naive: anti-join the static/CHA-resolved call ids before
     # the quadratic name join (the k²-per-name rows the arbitration would
     # drop anyway are never produced; NaiveCallLinker.scala:13-28 leftover
@@ -384,21 +304,22 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     # arbitration-keepable on the f_r01 axis; the final arbitration in
     # :func:`link_calls` drops the (bounded) CHA-external leftovers in its
     # single pass.
-    return cand.unionByName(rank(_naive_candidates(nodes, resolved), 3))
+    return cand.unionByName(_rank(_naive_candidates(nodes, resolved), 3))
 
 
-def link_calls(nodes: DataFrame, edges: DataFrame,
-               recovered: DataFrame | None = None,
-               pre_candidates: DataFrame | None = None) -> DataFrame:
-    """All four call linkers in ONE pass: static + CHA + type-hint + naive
-    candidates (no anti-joins) arbitrated by a single priority window.
+def link_calls(nodes: DataFrame, edges: DataFrame, recovered: DataFrame,
+               pre_candidates: DataFrame) -> DataFrame:
+    """All four call linkers in ONE pass: the :func:`candidate_pool` ranks
+    (``pre_candidates``) plus the type-hint candidates from ``recovered``
+    (no anti-joins) arbitrated by one per-call flag aggregate.
 
     Physically this replaces the linker chain's anti-join cascade — where
     each stage's "still unlinked?" probe re-evaluated every upstream linker,
     and the final materialization re-evaluated the whole chain again (the
     round-2 profile's anti-scaling edges stage) — with one candidate union
     and one shuffle by call id. Semantics are row-for-row identical to the
-    sequential chain (asserted by tests/test_callgraph.py): per call,
+    sequential chain (asserted by
+    tests/test_dims.py::test_link_calls_matches_sequential_chain): per call,
 
     - static/CHA candidates always link (CHA externals pruned when the call
       has an internal CHA candidate or a recovered-hint link);
@@ -410,12 +331,8 @@ def link_calls(nodes: DataFrame, edges: DataFrame,
     """
     from .type_recovery import _hint_candidates
 
-    rank = lambda df, r: df.select(  # noqa: E731
-        "src", "dst", "doc_id", "method_id", "m_external", F.lit(r).alias("rank"))
-
-    cand = pre_candidates if pre_candidates is not None \
-        else candidate_pool(nodes, edges)
-    cand = cand.unionByName(rank(_hint_candidates(nodes, edges, recovered), 2))
+    cand = pre_candidates.unionByName(
+        _rank(_hint_candidates(nodes, edges, recovered), 2))
 
     # per-call flags as a map-side-combined aggregate joined back, NOT a
     # window: a Window(partitionBy src) would shuffle + sort the full

@@ -7,23 +7,17 @@ destination is not yet known, connect fringes on append. Edge types
 (True/False/Always/Case) are computed then dropped — stored CFG edges are
 untyped (``CfgCreator.scala:60-64``).
 
-Spark-side this is a ``groupBy(method_id).applyInPandas`` kernel: each
-method's subtree is document-local and small, so the per-group work is pure
-Python over a few hundred rows while the parallelism across methods is
-partition parallelism (reference: ConcurrentWriterCpgPass over methods,
+``cfg_edges_for_method`` is plain Python over one method's rows: each
+method's subtree is document-local and small. The fused kernel
+(``method_kernels.py``) calls it per method inside one partition-local
+``mapInArrow``, so the parallelism across methods is partition parallelism
+(reference: ConcurrentWriterCpgPass over methods,
 ``CfgCreationPass.scala:17-26``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..schema import EDGES_SCHEMA_DDL
 
 ALWAYS, TRUE, FALSE, CASE = "Always", "True", "False", "Case"
 
@@ -470,21 +464,3 @@ class CfgBuilder:
 
 def cfg_edges_for_method(rows: list[dict[str, Any]]) -> list[tuple[int, int]]:
     return CfgBuilder(rows).build()
-
-
-def cfg_pass(nodes: DataFrame) -> DataFrame:
-    """nodes → CFG edge rows (kind='CFG'), one group per method."""
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf.to_dict("records")
-        edges = cfg_edges_for_method(rows)
-        doc_id = rows[0]["doc_id"] if rows else None
-        method_id = key[0]
-        return pd.DataFrame(
-            [{"src": s, "dst": d, "kind": "CFG", "variable": "",
-              "doc_id": doc_id, "method_id": method_id} for s, d in edges],
-            columns=["src", "dst", "kind", "variable", "doc_id", "method_id"],
-        )
-
-    grouped = nodes.filter(F.col("method_id").isNotNull()).groupBy("method_id")
-    return grouped.applyInPandas(kernel, schema=EDGES_SCHEMA_DDL)

@@ -11,19 +11,14 @@ Reference:
   (``CfgDominatorFrontier.scala:11-37``) — node n is control-dependent on c
   iff c ∈ PDF(n).
 
-Spark shape: same as the CFG kernel — the graph is method-local and tiny, so
-one ``applyInPandas`` cogroup (method nodes × that method's CFG edges) per
-method; parallelism across methods is partition parallelism (reference runs
-ForkJoin over methods).
+Shape: same as the CFG kernel — the graph is method-local and tiny, so
+``dominator_edges_for_method`` takes one method's rows and CFG edges, and
+the fused kernel (``method_kernels.py``) calls it per method; parallelism
+across methods is partition parallelism (reference runs ForkJoin over
+methods).
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..schema import EDGES_SCHEMA_DDL
 
 
 def _rpo(entry: int, succ: dict[int, list[int]]) -> list[int]:
@@ -145,28 +140,3 @@ def dominator_edges_for_method(node_rows: list[dict], cfg_edges: list[tuple[int,
             for c in controllers:
                 out.append((c, n, "CDG"))
     return out
-
-
-def dominator_pass(nodes: DataFrame, cfg_edges: DataFrame) -> DataFrame:
-    """nodes × CFG edges → DOMINATE/POST_DOMINATE/CDG edge rows per method."""
-    n = nodes.filter(F.col("method_id").isNotNull()).select(
-        "node_id", "kind", "doc_id", "method_id"
-    )
-    e = cfg_edges.filter(F.col("kind") == "CFG").select("src", "dst", "method_id")
-
-    def kernel(key, node_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = node_pdf.to_dict("records")
-        edges = list(zip(edge_pdf["src"], edge_pdf["dst"]))
-        out = dominator_edges_for_method(rows, edges)
-        doc_id = rows[0]["doc_id"] if rows else None
-        return pd.DataFrame(
-            [{"src": s, "dst": d, "kind": k, "variable": "",
-              "doc_id": doc_id, "method_id": key[0]} for s, d, k in out],
-            columns=["src", "dst", "kind", "variable", "doc_id", "method_id"],
-        )
-
-    return (
-        n.groupby("method_id")
-        .cogroup(e.groupby("method_id"))
-        .applyInPandas(kernel, schema=EDGES_SCHEMA_DDL)
-    )

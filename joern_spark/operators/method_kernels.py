@@ -1,16 +1,15 @@
 """Fused per-method kernel pass: CFG + dominators/CDG + reaching-def + type
 recovery in ONE ``mapInArrow`` over the doc-partitioned parse output.
 
-Why: the separate ``applyInPandas`` passes are semantically right but
-physically wasteful — each one shuffles every node row by ``method_id`` and
-pays per-group pandas overhead on ~30-row groups (measured ~88 ms CPU/doc at
+This is the only producer of per-method facts. Grouped-map passes
+(``applyInPandas``) would shuffle every node row by ``method_id`` and pay
+per-group pandas overhead on ~30-row groups (measured ~88 ms CPU/doc at
 sf0.1, dominated by group plumbing, not kernel math). Methods never span
 documents, and a document's rows never span partitions (they are emitted by
-one parse call), so all kernels can run partition-locally with a python-side
-groupby: one Arrow pass, same kernel functions (`cfg_edges_for_method`,
-`dominator_edges_for_method`, `reaching_def_edges_for_method`,
-`recover_types_for_method`) — the cogrouped per-pass implementations remain
-as the parity references the tests compare against.
+one parse call), so all kernels run partition-locally with a python-side
+groupby: one Arrow pass over the plain-Python per-method functions
+(`cfg_edges_for_method`, `dominator_edges_for_method`,
+`reaching_def_edges_for_method`, `recover_types_for_method`).
 
 Cross-document facts (is a callee internal, its return types, a method's
 enclosing class, the member types per field name) arrive as ordinary columns
@@ -128,8 +127,9 @@ def fused_method_kernels(
     edge rows, partition-locally, plus the per-method type-recovery events as
     rows with ``kind='_TYPE_HINT'`` (src=identifier id, variable=recovered
     type, dst=0) — the pipeline filters these out of the edge stream and
-    feeds them to the field-access/hint linkers. ``fits`` picks broadcast or
-    shuffle joins for the cross-document facts (:func:`_kernel_input`)."""
+    feeds them, through :func:`type_hints`, to the field-access/hint
+    linkers. ``fits`` picks broadcast or shuffle joins for the
+    cross-document facts (:func:`_kernel_input`)."""
     import pyarrow as pa
 
     out_schema = arrow_schema(EDGES_SCHEMA_DDL)
@@ -196,3 +196,11 @@ def fused_method_kernels(
         yield from pa.Table.from_pylist(out_rows, schema=out_schema).to_batches()
 
     return _kernel_input(nodes, fits).mapInArrow(run, schema=EDGES_SCHEMA_DDL)
+
+
+def type_hints(kernel_out: DataFrame) -> DataFrame:
+    """The kernel's ``_TYPE_HINT`` rows as (node_id, recovered_type) — several
+    rows per node when its variable carries several hints — the form the
+    field-access and hint linkers take."""
+    return kernel_out.filter(F.col("kind") == "_TYPE_HINT").select(
+        F.col("src").alias("node_id"), F.col("variable").alias("recovered_type"))

@@ -19,24 +19,18 @@ Faithful re-expression of the reference dataflow stack (SURVEY.md §2.A #25-26):
 Closure/capture edges (``addEdgesToCapturedIdentifiersAndParameters``) are out
 of scope for the fixture languages (no lambdas emitted by the frontends yet).
 
-Spark side: ``cogroup(nodes, cfg_edges).applyInPandas`` — one group per
-method (reference: ForkJoinParallelCpgPass over methods,
-``ReachingDefPass.scala:14-53``), bail-out above 4000 definitions preserved.
+``reaching_def_edges_for_method`` solves one method (reference:
+ForkJoinParallelCpgPass over methods, ``ReachingDefPass.scala:14-53``); the
+fused kernel (``method_kernels.py``) calls it per method with the method's
+synthesized paramOut rows and its CALL rows' ``callee_internal`` fact.
+The bail-out above 4000 definitions is preserved.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .dims import budgeted_broadcast
-
 from ..ids import stub_id
-from ..schema import EDGES_SCHEMA_DDL
 from .semantics import default_semantics, semantics_for
 
 MAX_NUMBER_OF_DEFINITIONS = 4000  # ReachingDefPass.scala:14
@@ -605,53 +599,3 @@ def reaching_def_edges_for_method(
             add_edge(d, node(exit_id), edge_label(d))
 
     return edges
-
-
-def reaching_def_pass(nodes: DataFrame, all_edges: DataFrame) -> DataFrame:
-    """REACHING_DEF edges via cogrouped per-method kernels.
-
-    ``nodes`` must already contain stub methods; call nodes are enriched with
-    ``callee_internal`` through a broadcast join against the METHOD dimension
-    (needed by the EdgeValidator output-arg rule).
-    """
-    internal_methods = (
-        nodes.filter((F.col("kind") == "METHOD") & (~F.col("is_external")))
-        .select(F.col("full_name").alias("mi_full")).distinct()
-        .withColumn("callee_internal", F.lit(True))
-    )
-    # global stubs have no body — the reference's ReachingDefPass (and the
-    # fused kernel) never runs over them. They MUST be excluded here rather
-    # than left to fail structurally: a stub group's METHOD row has a null
-    # parent_id, which flips the whole group's parent_id column to float64
-    # in the applyInPandas conversion and silently rounds 63-bit ids — ids
-    # that happen to survive the round-trip (divisible by the float spacing)
-    # would then emit param→RET edges nondeterministically per id scheme.
-    # parent_id is additionally null-coalesced so no group can ever take the
-    # float64 path (CLAUDE.md id-corruption trap, input direction).
-    body_nodes = nodes.filter(F.col("doc_id") != "<global>").withColumn(
-        "parent_id", F.coalesce(F.col("parent_id"), F.lit(-1)))
-    enriched = body_nodes.join(
-        budgeted_broadcast(internal_methods),
-        (body_nodes["kind"] == "CALL") & (body_nodes["full_name"] == internal_methods["mi_full"]),
-        "left",
-    ).drop("mi_full")
-
-    cfg = all_edges.filter(F.col("kind") == "CFG").select("src", "dst", "method_id")
-
-    def kernel(key, node_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = node_pdf.to_dict("records")
-        cfg_edges = list(zip(edge_pdf["src"], edge_pdf["dst"]))
-        out = reaching_def_edges_for_method(rows, cfg_edges)
-        doc_id = rows[0]["doc_id"] if rows else None
-        return pd.DataFrame(
-            [{"src": s, "dst": d, "kind": "REACHING_DEF", "variable": v,
-              "doc_id": doc_id, "method_id": key[0]} for s, d, v in out],
-            columns=["src", "dst", "kind", "variable", "doc_id", "method_id"],
-        )
-
-    return (
-        enriched.filter(F.col("method_id").isNotNull())
-        .groupby("method_id")
-        .cogroup(cfg.groupby("method_id"))
-        .applyInPandas(kernel, schema=EDGES_SCHEMA_DDL)
-    )

@@ -1,20 +1,23 @@
 """Type recovery + field-access linking.
 
-- ``type_recovery_pass``: bounded-iteration type propagation for identifiers
-  (reference XTypeRecovery, ``x2cpg/.../frontend/XTypeRecovery.scala`` —
-  default 2 iterations, ``:28``). Declarative join rounds:
-    round 0: declared types — IDENTIFIER ← (method_id, name) → LOCAL /
+- ``recover_types_for_method``: bounded-iteration type propagation for one
+  method's identifiers (reference XTypeRecovery,
+  ``x2cpg/.../frontend/XTypeRecovery.scala`` — default 2 iterations,
+  ``:28``), run per method by the fused kernel (``method_kernels.py``):
+    round 0: declared types — IDENTIFIER ← (method, name) → LOCAL /
              METHOD_PARAMETER_IN.type_full_name; ``this`` ← enclosing class.
     round k: assignment propagation — ``a = rhs`` gives a's identifiers the
              rhs type (alloc calls ``new X()`` and typed identifiers).
-  Output: (node_id, recovered_type) — the DYNAMIC_TYPE_HINT analog.
+  The kernel emits the events as ``_TYPE_HINT`` rows;
+  ``method_kernels.type_hints`` turns them into (node_id, recovered_type)
+  rows — the DYNAMIC_TYPE_HINT analog, several rows per node when a
+  variable carries several hints.
 - ``field_access_linker``: REF edges from ``<operator>.fieldAccess`` CALLs to
   the MEMBER they access, key = (receiver recovered type, field name)
   (reference FieldAccessLinkerPass,
   ``x2cpg/.../typerelations/FieldAccessLinkerPass.scala:17-87``).
-
-Scale shape: every round is an equi-join on (method_id, name) — co-located
-if nodes are bucketed by doc; the member dimension broadcasts.
+- ``dynamic_type_hints`` / ``type_hint_call_linker``: CALL candidates from
+  the recovered receiver types (``XTypeHintCallLinker.scala:22-90``).
 """
 
 from __future__ import annotations
@@ -27,208 +30,13 @@ from .dims import budgeted_broadcast
 ITERATIONS = 2  # XTypeRecovery.scala:28
 
 _FIELD_ACCESS_OPS = ["<operator>.fieldAccess", "<operator>.indirectFieldAccess"]
-_ALLOC_OPS = ["<operator>.new", "<operator>.alloc"]
 
 
-def _declared(nodes: DataFrame) -> DataFrame:
-    return (
-        nodes.filter(
-            F.col("kind").isin("LOCAL", "METHOD_PARAMETER_IN")
-            & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        )
-        .select(F.col("method_id").alias("v_mid"), F.col("name").alias("v_name"),
-                F.col("type_full_name").alias("v_type"))
-        .dropDuplicates(["v_mid", "v_name"])
-    )
-
-
-def _members_dim(nodes: DataFrame) -> DataFrame:
-    """(class full_name, member name, member declared type)."""
-    classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
-        F.col("node_id").alias("c_id"), F.col("full_name").alias("mc_full")
-    )
-    return (
-        nodes.filter(
-            (F.col("kind") == "MEMBER")
-            & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        )
-        .join(budgeted_broadcast(classes), F.col("parent_id") == F.col("c_id"))
-        .select(F.col("mc_full").alias("recv_type"), F.col("name").alias("f_name"),
-                F.col("type_full_name").alias("member_type"))
-    )
-
-
-def _distribute(rec: DataFrame, idents: DataFrame) -> DataFrame:
-    """Lift node-level type events to the variable level: every occurrence of
-    (method, name) carries every hint recorded for any occurrence — the
-    dynamicTypeHintFullName set semantics of XTypeRecovery (one assignment
-    types the variable, not just the assigned identifier node)."""
-    per_var = (
-        rec.join(idents.select("node_id", "method_id", "name"), "node_id")
-        .select("method_id", "name", "recovered_type")
-        .distinct()
-    )
-    return idents.join(per_var, ["method_id", "name"]).select(
-        "node_id", "recovered_type"
-    )
-
-
-def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> DataFrame:
-    """→ (node_id, recovered_type) hint events for identifiers (multi-row:
-    a node carries every hint its variable accumulated).
-
-    Full-rule analog of ``XTypeRecovery.scala`` as bounded join rounds:
-    declared types, ``this``, assignment transfer from typed RHS
-    (alloc/cast results, typed identifiers, internal-call returns, member
-    loads) — each iteration is one round of declarative equi-joins, the
-    distributed re-expression of the reference's per-procedure
-    ``RecoverForXCompilationUnit`` worklist."""
-    idents = nodes.filter(F.col("kind") == "IDENTIFIER").select(
-        "node_id", "method_id", "name", "parent_id"
-    )
-
-    # round 0a: declared variable types
-    decl = _declared(nodes)
-    rec = (
-        idents.join(
-            decl,
-            (idents["method_id"] == decl["v_mid"]) & (idents["name"] == decl["v_name"]),
-        )
-        .select(idents["node_id"], F.col("v_type").alias("recovered_type"))
-    )
-
-    # round 0b: `this` → enclosing class (METHOD.parent_id → TYPE_DECL)
-    methods = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("m_id"), F.col("parent_id").alias("m_parent")
-    )
-    classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
-        F.col("node_id").alias("c_id"), F.col("full_name").alias("c_full")
-    )
-    this_types = (
-        idents.filter(F.col("name") == "this")
-        .join(methods, idents["method_id"] == methods["m_id"])
-        .join(budgeted_broadcast(classes), F.col("m_parent") == F.col("c_id"))
-        .select("node_id", F.col("c_full").alias("recovered_type"))
-    )
-    rec = rec.unionByName(this_types)
-
-    # bounded assignment-propagation rounds
-    assigns = nodes.filter(
-        (F.col("kind") == "CALL") & (F.col("name") == "<operator>.assignment")
-    ).select(F.col("node_id").alias("a_id"))
-    kids = nodes.filter(F.col("argument_index").isNotNull()).select(
-        "node_id", "parent_id", "argument_index", "kind", "name",
-        F.col("type_full_name").alias("tfn"),
-    )
-    targets = (
-        assigns.join(kids, (F.col("a_id") == kids["parent_id"])
-                     & (kids["argument_index"] == 1)
-                     & (kids["kind"] == "IDENTIFIER"))
-        .select("a_id", F.col("node_id").alias("t_id"), F.col("name").alias("t_name"),
-                F.col("parent_id").alias("t_parent"))
-    )
-    # any typed RHS call result: alloc (`new X()` lowers to <init> with
-    # type_full_name set), casts, constructors
-    alloc_rhs = (
-        assigns.join(kids, (F.col("a_id") == kids["parent_id"])
-                     & (kids["argument_index"] == 2)
-                     & (kids["kind"] == "CALL")
-                     & F.col("tfn").isNotNull() & (F.col("tfn") != ""))
-        .select("a_id", F.col("tfn").alias("rhs_type"))
-    )
-    # internal-call-return RHS: `x = g()` takes g's METHOD_RETURN type
-    methods = nodes.filter(F.col("kind") == "METHOD").select(
-        F.col("node_id").alias("mm_id"), F.col("full_name").alias("mm_full")
-    )
-    rets = nodes.filter(
-        (F.col("kind") == "METHOD_RETURN")
-        & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
-        & (F.col("type_full_name") != "ANY")
-    ).select(F.col("method_id").alias("mm_id"), F.col("type_full_name").alias("ret_type"))
-    method_ret = methods.join(rets, "mm_id").select(
-        F.col("mm_full").alias("callee_full"), "ret_type"
-    )
-    call_ret_rhs = (
-        assigns.join(kids, (F.col("a_id") == kids["parent_id"])
-                     & (kids["argument_index"] == 2)
-                     & (kids["kind"] == "CALL")
-                     & ~F.col("name").startswith("<operator>"))
-        .select("a_id", F.col("node_id").alias("rhs_call"))
-        .join(
-            nodes.select(F.col("node_id").alias("rhs_call"),
-                         F.col("full_name").alias("callee_full")),
-            "rhs_call",
-        )
-        .join(budgeted_broadcast(method_ret), "callee_full")
-        .select("a_id", F.col("ret_type").alias("rhs_type"))
-    )
-    alloc_rhs = alloc_rhs.unionByName(call_ret_rhs)
-
-    members = _members_dim(nodes)
-    fa_calls = nodes.filter(
-        (F.col("kind") == "CALL") & F.col("name").isin(_FIELD_ACCESS_OPS)
-    ).select(F.col("node_id").alias("fa_id"))
-    fa_recv = nodes.filter(
-        (F.col("kind") == "IDENTIFIER") & (F.col("argument_index") == 1)
-    ).select(F.col("parent_id").alias("fa_id"), F.col("node_id").alias("recv_id"))
-    fa_fields = nodes.filter(F.col("kind") == "FIELD_IDENTIFIER").select(
-        F.col("parent_id").alias("fa_id"), F.col("name").alias("f_name")
-    )
-    deref = F.trim(F.regexp_replace(F.col("recovered_type"), r"\*", ""))
-
-    for _ in range(max(0, iterations - 1)):
-        rec_d = _distribute(rec, idents)
-        # typed RHS identifiers propagate to the assignment target
-        rhs_ident = (
-            assigns.join(kids, (F.col("a_id") == kids["parent_id"])
-                         & (kids["argument_index"] == 2)
-                         & (kids["kind"] == "IDENTIFIER"))
-            .select("a_id", F.col("node_id").alias("r_id"))
-            .join(rec_d.withColumnRenamed("node_id", "r_id"), "r_id")
-            .select("a_id", F.col("recovered_type").alias("rhs_type"))
-        )
-        # member-load RHS: `x = a.b` takes MEMBER b's declared type, keyed by
-        # a's recovered (dereferenced) type — XTypeRecovery field-level rule
-        fa_typed = (
-            fa_calls.join(fa_recv, "fa_id")
-            .join(rec_d.withColumnRenamed("node_id", "recv_id"), "recv_id")
-            .select("fa_id", deref.alias("recv_type"))
-            .join(fa_fields, "fa_id")
-            .join(budgeted_broadcast(members), ["recv_type", "f_name"])
-            .select("fa_id", F.col("member_type").alias("rhs_type"))
-        )
-        member_rhs = (
-            assigns.join(kids, (F.col("a_id") == kids["parent_id"])
-                         & (kids["argument_index"] == 2)
-                         & (kids["kind"] == "CALL")
-                         & F.col("name").isin(_FIELD_ACCESS_OPS))
-            .select("a_id", F.col("node_id").alias("fa_id"))
-            .join(fa_typed, "fa_id")
-            .select("a_id", "rhs_type")
-        )
-        new_types = (
-            targets.join(
-                alloc_rhs.unionByName(rhs_ident).unionByName(member_rhs), "a_id"
-            )
-            .select(F.col("t_id").alias("node_id"),
-                    F.col("rhs_type").alias("recovered_type"))
-        )
-        rec = rec.unionByName(new_types)
-
-    return _distribute(rec, idents).distinct()
-
-
-# ---------------------------------------------------------------------------
-# In-kernel (per-method, Python) mirror of type_recovery_events.
-#
-# The DataFrame implementation above is a ~30-stage join DAG re-scanning the
-# parse output ~12 times (profiled at 14 s on 8 cores -> 33 s on 32, round 3).
-# Every join keys on ids within one method except three vocabulary-sized
+# Every rule joins on ids within one method except three vocabulary-sized
 # dimensions — callee return types, members, enclosing classes — which the
-# fused kernel's input carries as columns (method_kernels._kernel_input). The
-# DataFrame version stays as the parity reference
-# (tests/test_fused_recovery.py asserts exact event-set equality).
-# ---------------------------------------------------------------------------
+# fused kernel's input carries as columns (method_kernels._kernel_input).
+# tests/reference_impls.py keeps an independent DataFrame implementation of
+# the same rules; tests/test_fused_recovery.py asserts event-set equality.
 
 def _str_or_none(v):
     """pandas record values: None/NaN -> None (NaN is truthy!)."""
@@ -237,21 +45,21 @@ def _str_or_none(v):
 
 def recover_types_for_method(rows: list[dict],
                              iterations: int = ITERATIONS) -> list[tuple[int, str]]:
-    """Exact per-method mirror of ``type_recovery_events``: returns the sorted
-    distinct (identifier node_id, recovered_type) events for one method's
-    rows. Rules and round structure match the DataFrame version line-for-line
-    (declared types, `this`, then ``iterations-1`` assignment-propagation
-    rounds with variable-level hint distribution). The cross-document lookups
-    read the fact columns of ``method_kernels._kernel_input``: CALL
-    ``callee_ret_types``, METHOD ``class_full``, FIELD_IDENTIFIER
-    ``member_types``."""
+    """The sorted distinct (identifier node_id, recovered_type) events for one
+    method's rows: declared types, `this`, then ``iterations-1``
+    assignment-propagation rounds, each followed by variable-level hint
+    distribution (every occurrence of a name carries every hint any
+    occurrence got — XTypeRecovery's dynamicTypeHintFullName set semantics).
+    The cross-document lookups read the fact columns of
+    ``method_kernels._kernel_input``: CALL ``callee_ret_types``, METHOD
+    ``class_full``, FIELD_IDENTIFIER ``member_types``."""
     idents = [r for r in rows if r["kind"] == "IDENTIFIER"]
     if not idents:
         return []
     rec: list[tuple[int, str]] = []
 
-    # round 0a: declared variable types (dropDuplicates analog: deterministic
-    # min when a (method, name) is multiply declared)
+    # round 0a: declared variable types (deterministic min when a name is
+    # multiply declared in the method)
     decl: dict[str, str] = {}
     for r in rows:
         if r["kind"] in ("LOCAL", "METHOD_PARAMETER_IN"):
@@ -272,7 +80,7 @@ def recover_types_for_method(rows: list[dict],
             if i["name"] == "this":
                 rec.append((i["node_id"], cls))
 
-    # assignment machinery (computed once, like the DF version)
+    # assignment machinery (computed once)
     kids_by_parent: dict[int, list[dict]] = {}
     for r in rows:
         if r.get("argument_index") is not None:
@@ -362,22 +170,12 @@ def recover_types_for_method(rows: list[dict],
     return sorted(out)
 
 
-def type_recovery_pass(nodes: DataFrame, iterations: int = ITERATIONS) -> DataFrame:
-    """→ (node_id, recovered_type), one row per node: of a variable's hint
-    set the deterministic min string wins (the single-type consumer view
-    used by field_access_linker)."""
-    rec = type_recovery_events(nodes, iterations)
-    return rec.groupBy("node_id").agg(F.min("recovered_type").alias("recovered_type"))
-
-
 def dynamic_type_hints(nodes: DataFrame, edges: DataFrame,
-                       recovered: DataFrame | None = None) -> DataFrame:
+                       recovered: DataFrame) -> DataFrame:
     """(call_id, hint_full) — DYNAMIC_TYPE_HINT_FULL_NAME analog: for a
     dynamic call ``recv.m()`` whose receiver identifier has a recovered type
     ``T``, the candidate callee is ``T.m`` (XTypeRecovery's hint emission
     feeding ``XTypeHintCallLinker.calleeNames``)."""
-    if recovered is None:
-        recovered = type_recovery_events(nodes)
     dyn = nodes.filter(
         (F.col("kind") == "CALL") & (F.col("dispatch_type") == "DYNAMIC_DISPATCH")
     ).select(F.col("node_id").alias("call_id"), F.col("name").alias("c_name"),
@@ -451,7 +249,7 @@ def _method_ref_candidates(nodes: DataFrame) -> DataFrame:
 
 
 def _hint_candidates(nodes: DataFrame, edges: DataFrame,
-                     recovered: DataFrame | None = None) -> DataFrame:
+                     recovered: DataFrame) -> DataFrame:
     """Hint-link candidate rows (src, dst, doc_id, method_id, m_external) for
     EVERY hinted dynamic call — internal methods only, so ``m_external`` is
     constant false; the "no other linker resolved it" condition is applied by
@@ -479,7 +277,7 @@ def _hint_candidates(nodes: DataFrame, edges: DataFrame,
 
 def type_hint_call_linker(nodes: DataFrame, edges: DataFrame,
                           existing_call_edges: DataFrame,
-                          recovered: DataFrame | None = None) -> DataFrame:
+                          recovered: DataFrame) -> DataFrame:
     """CALL edges from recovered dynamic type hints.
 
     Reference ``XTypeHintCallLinker.scala:22-90``: for calls that no other
@@ -507,10 +305,9 @@ def type_hint_call_linker(nodes: DataFrame, edges: DataFrame,
 
 
 def field_access_linker(nodes: DataFrame, edges: DataFrame,
-                        recovered: DataFrame | None = None) -> DataFrame:
-    """REF edges: fieldAccess CALL → MEMBER (composite-key equi-join)."""
-    if recovered is None:
-        recovered = type_recovery_pass(nodes)
+                        recovered: DataFrame) -> DataFrame:
+    """REF edges: fieldAccess CALL → MEMBER (composite-key equi-join); a
+    receiver with several recovered types links to each type's member."""
     fa = nodes.filter(
         (F.col("kind") == "CALL") & F.col("name").isin(_FIELD_ACCESS_OPS)
     ).select(F.col("node_id").alias("fa_id"), "doc_id", "method_id")

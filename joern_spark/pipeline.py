@@ -130,7 +130,7 @@ def run_pipeline(
 
     from .operators.callgraph import candidate_pool, link_calls
     from .operators.dims import MAX_BROADCAST_DIM, budgeted_broadcast, dim_fits_hint
-    from .operators.method_kernels import fused_method_kernels
+    from .operators.method_kernels import fused_method_kernels, type_hints
     from .operators.type_recovery import field_access_linker
 
     spill = SpillDir(out_dir)
@@ -307,9 +307,7 @@ def run_pipeline(
     nodes, fits, base_norec, cand = base_res
 
     # recovery events came out of the kernel as _TYPE_HINT rows
-    recovered = kernel_out.filter(F.col("kind") == "_TYPE_HINT").select(
-        F.col("src").alias("node_id"), F.col("variable").alias("recovered_type")
-    )
+    recovered = type_hints(kernel_out)
     kernel_edges = kernel_out.filter(F.col("kind") != "_TYPE_HINT")
 
     with dim_fits_hint(fits):

@@ -14,6 +14,8 @@ import pandas as pd
 import pytest
 
 from joern_spark.corpus import fixture_docs, fixture_docs_df
+from joern_spark.operators.ast_pass import parse_docs, split_rows
+from joern_spark.operators.method_kernels import fused_method_kernels, type_hints
 from joern_spark.pipeline import run_pipeline
 from joern_spark.session import get_spark
 
@@ -53,6 +55,23 @@ def no_auto_broadcast(spark):
 @pytest.fixture(scope="session")
 def cpg(spark):
     return run_pipeline(spark, fixture_docs_df(spark), n_parts=4)
+
+
+def kernel_hints(nodes0):
+    """The fused kernel's (node_id, recovered_type) rows for parse-output
+    nodes — what the pipeline hands the field-access and call linkers."""
+    return type_hints(fused_method_kernels(
+        nodes0, fits=True, with_dominators=False, with_dataflow=False))
+
+
+@pytest.fixture(scope="session")
+def cpg_hints(spark):
+    """``kernel_hints`` of the fixture corpus (node ids match ``cpg``'s),
+    checkpointed so plans that read them hold no kernel subtree."""
+    rows = parse_docs(fixture_docs_df(spark)).persist()
+    hints = kernel_hints(split_rows(rows)[0]).localCheckpoint(eager=True)
+    rows.unpersist()
+    return hints
 
 
 class G:

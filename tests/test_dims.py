@@ -12,12 +12,14 @@ from joern_spark.operators import dims
 from joern_spark.operators.ast_pass import parse_docs, split_rows
 from joern_spark.operators.base_passes import method_stubs
 from joern_spark.operators.callgraph import (
+    candidate_pool,
     link_calls,
     method_ref_linker,
-    naive_call_linker,
     static_call_linker,
 )
 from joern_spark.operators.type_recovery import field_access_linker
+from tests.conftest import kernel_hints
+from tests.reference_impls import naive_call_linker
 
 
 def _plan(df) -> str:
@@ -44,14 +46,15 @@ def test_hint_overrides_probe(spark, no_auto_broadcast):
     assert "BroadcastHashJoin" in _plan(j)
 
 
-def _linkers(nodes, edges) -> dict:
+def _linkers(nodes, edges, hints) -> dict:
     static = static_call_linker(nodes)
     return {
         "static": static,
         "naive": naive_call_linker(nodes, static),
         "method_ref": method_ref_linker(nodes),
-        "field_access": field_access_linker(nodes, edges),
-        "link_calls": link_calls(nodes, edges),
+        "field_access": field_access_linker(nodes, edges, hints),
+        "link_calls": link_calls(nodes, edges, hints,
+                                 candidate_pool(nodes, edges)),
     }
 
 
@@ -62,11 +65,11 @@ def test_linkers_respect_budget(cpg_nodes_edges, skew_nodes_edges,
     vocabulary fits, shuffle join when it doesn't — and produces the SAME
     rows either way, on the fixture corpus and on the hot-key skew corpus
     (printf/malloc called from every document)."""
-    for nodes, edges in (cpg_nodes_edges, skew_nodes_edges):
+    for graph in (cpg_nodes_edges, skew_nodes_edges):
         with dims.dim_fits_hint(fits):
-            frames = _linkers(nodes, edges)
+            frames = _linkers(*graph)
         with dims.dim_fits_hint(not fits):
-            other = _linkers(nodes, edges)
+            other = _linkers(*graph)
         for name, df in frames.items():
             p = _plan(df)
             if fits:
@@ -81,37 +84,41 @@ def test_link_calls_matches_sequential_chain(cpg_nodes_edges):
     """The one-pass arbitration window returns exactly the edges the
     sequential static→dynamic→hint→naive chain (with prefer-internal
     pruning) produces."""
-    from joern_spark.operators.callgraph import (
+    from joern_spark.operators.type_recovery import type_hint_call_linker
+    from tests.reference_impls import (
         dynamic_call_linker,
         prefer_internal_call_edges,
     )
-    from joern_spark.operators.type_recovery import type_hint_call_linker
 
-    nodes, edges = cpg_nodes_edges
+    nodes, edges, hints = cpg_nodes_edges
     static = static_call_linker(nodes)
     ambiguous = dynamic_call_linker(nodes, edges)
     ambiguous = ambiguous.unionByName(type_hint_call_linker(
-        nodes, edges, static.unionByName(ambiguous)))
+        nodes, edges, static.unionByName(ambiguous), hints))
     ambiguous = ambiguous.unionByName(
         naive_call_linker(nodes, static.unionByName(ambiguous)))
     chain = static.unionByName(prefer_internal_call_edges(ambiguous, nodes))
-    fused = link_calls(nodes, edges)
+    fused = link_calls(nodes, edges, hints, candidate_pool(nodes, edges))
     a = {tuple(r) for r in chain.collect()}
     b = {tuple(r) for r in fused.collect()}
     assert a == b
 
 
 @pytest.fixture(scope="module")
-def cpg_nodes_edges(cpg):
-    return cpg.nodes, cpg.edges
+def cpg_nodes_edges(cpg, cpg_hints):
+    return cpg.nodes, cpg.edges, cpg_hints
 
 
 @pytest.fixture(scope="module")
 def skew_nodes_edges(spark):
     """The hot-key skew corpus, checkpointed so the plans under test hold
-    only the linkers' own joins (the stub pass broadcasts upstream)."""
+    only the linkers' own joins (the stub pass and the kernel broadcast
+    upstream)."""
     rows = parse_docs(docs_df(spark, skew_corpus(60), partitions=4)).persist()
     nodes, edges, _ = split_rows(rows)
     stubs, stub_edges = method_stubs(nodes, edges)
-    return (nodes.unionByName(stubs).localCheckpoint(),
-            edges.unionByName(stub_edges).localCheckpoint())
+    graph = (nodes.unionByName(stubs).localCheckpoint(),
+             edges.unionByName(stub_edges).localCheckpoint(),
+             kernel_hints(nodes).localCheckpoint())
+    rows.unpersist()
+    return graph

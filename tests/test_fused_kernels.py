@@ -1,23 +1,27 @@
-"""Fused kernel pass ≡ the cogrouped reference passes: identical edge multisets.
+"""Fused kernel pass ≡ the per-method functions run in plain Python: identical
+edge multisets.
 
-The fusion is a physical optimization only (one mapInArrow vs three cogrouped
-applyInPandas passes) — every (src, dst, kind, variable) edge must match
-exactly. The over-budget configuration (shuffle joins for the kernel's
+The kernel is one partition-local mapInArrow over the per-method functions;
+its own work is the doc-contiguous grouping, the cross-document fact joins
+(``callee_internal``) and the synthesized paramOut rows. The test groups the
+parse output by method in Python, derives those facts independently (METHOD
+rows, ``parameter_out_pass``), and compares every (src, dst, kind, variable)
+edge. The over-budget configuration (shuffle joins for the kernel's
 cross-document facts) must produce the same triples as the default run.
 """
 
-from collections import Counter
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
 from joern_spark.corpus import fixture_docs_df
 from joern_spark.operators.ast_pass import parse_docs, split_rows
-from joern_spark.operators.base_passes import method_stubs, parameter_out_pass
-from joern_spark.operators.cfg_pass import cfg_pass
-from joern_spark.operators.dominators import dominator_pass
+from joern_spark.operators.base_passes import parameter_out_pass
+from joern_spark.operators.cfg_pass import cfg_edges_for_method
+from joern_spark.operators.dominators import dominator_edges_for_method
 from joern_spark.operators.method_kernels import fused_method_kernels
-from joern_spark.operators.reaching_def import reaching_def_pass
+from joern_spark.operators.reaching_def import reaching_def_edges_for_method
 from joern_spark.pipeline import run_pipeline
 
 
@@ -34,25 +38,45 @@ def _edges(df):
 def parsed(spark):
     rows = parse_docs(fixture_docs_df(spark).repartition(4, "doc_id")).persist()
     rows.count()
-    nodes0, edges0, _ = split_rows(rows)
-    yield nodes0, edges0
+    nodes0, _, _ = split_rows(rows)
+    yield nodes0
     rows.unpersist()
 
 
+def _per_method_edges(nodes0) -> Counter:
+    """CFG, DOMINATE/POST_DOMINATE/CDG and REACHING_DEF edges of every method,
+    the per-method functions called on rows grouped in plain Python."""
+    rows = [r.asDict() for r in nodes0.collect()]
+    # a full name is internal when any non-external METHOD has it
+    internal = {r["full_name"] for r in rows
+                if r["kind"] == "METHOD" and not r["is_external"]}
+    by_method = defaultdict(list)
+    for r in rows:
+        if r["method_id"] is None:
+            continue
+        if r["kind"] == "CALL":
+            r["callee_internal"] = True if r["full_name"] in internal else None
+        by_method[r["method_id"]].append(r)
+    param_outs = defaultdict(list)
+    for r in parameter_out_pass(nodes0)[0].collect():
+        param_outs[r["method_id"]].append(r.asDict())
+
+    out = Counter()
+    for mid, mrows in by_method.items():
+        cfg = cfg_edges_for_method(mrows)
+        out.update((s, d, "CFG", "") for s, d in cfg)
+        out.update((s, d, k, "")
+                   for s, d, k in dominator_edges_for_method(mrows, cfg))
+        out.update((s, d, "REACHING_DEF", v) for s, d, v in
+                   reaching_def_edges_for_method(mrows + param_outs[mid], cfg))
+    return out
+
+
 def test_fused_equals_separate(parsed):
-    nodes0, edges0 = parsed
+    nodes0 = parsed
     fused = _edges(fused_method_kernels(nodes0, fits=True)
                    .filter(F.col("kind") != "_TYPE_HINT"))
-
-    # reaching_def_pass expects the stub methods and paramOut rows the
-    # pipeline's vocabulary frames add to the parse output
-    m_stubs, _ = method_stubs(nodes0, edges0)
-    param_outs, _ = parameter_out_pass(nodes0)
-    nodes = nodes0.unionByName(m_stubs).unionByName(param_outs)
-    cfg = cfg_pass(nodes0).persist()
-    plain = _edges(cfg.unionByName(dominator_pass(nodes0, cfg))
-                   .unionByName(reaching_def_pass(nodes, cfg)))
-    cfg.unpersist()
+    plain = _per_method_edges(nodes0)
 
     missing, extra = plain - fused, fused - plain
     assert not missing, f"fused missing {len(missing)}: {list(missing)[:5]}"

@@ -1,29 +1,23 @@
-"""In-kernel type recovery ≡ DataFrame type_recovery_events.
+"""In-kernel type recovery ≡ the DataFrame reference type_recovery_events.
 
-The fused kernel's per-method Python recovery (round-3 scaling work) must
-produce EXACTLY the event set of the declarative join implementation — same
-parity contract as fused-vs-cogrouped CFG/dominators/reaching-def
-(test_fused_kernels.py). Checked on the fixture corpus (C + Java, covers
+The fused kernel's per-method Python recovery must produce EXACTLY the event
+set of the independent declarative join implementation kept in
+tests/reference_impls.py. Checked on the fixture corpus (C + Java, covers
 declared/this/alloc/call-return/ident-transfer/member-load rules) and on a
 synthetic-corpus sample.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from joern_spark.corpus import fixture_docs_df
 from joern_spark.operators.ast_pass import parse_docs, split_rows
-from joern_spark.operators.method_kernels import fused_method_kernels
-from joern_spark.operators.type_recovery import type_recovery_events
+from joern_spark.operators.method_kernels import fused_method_kernels, type_hints
+from tests.reference_impls import type_recovery_events
 
 
 def _events_from_kernel(nodes0):
-    out = fused_method_kernels(nodes0, fits=True, with_dominators=False,
-                               with_dataflow=False)
-    hints = out.filter(F.col("kind") == "_TYPE_HINT").select(
-        F.col("src").alias("node_id"), F.col("variable").alias("recovered_type")
-    )
+    hints = type_hints(fused_method_kernels(
+        nodes0, fits=True, with_dominators=False, with_dataflow=False))
     return {(r["node_id"], r["recovered_type"]) for r in hints.collect()}
 
 

@@ -94,13 +94,14 @@ def test_anti_join_stays_broadcast(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-def test_fallback_callgraph_plan_no_window(spark, cpg):
+def test_fallback_callgraph_plan_no_window(spark, cpg, cpg_hints):
     """The call arbitration must never plan a Window(partitionBy src): the
     window shuffles + sorts the full candidate union and buffers every src
     group (measured 9x task-CPU inflation at 32 cores, round 3). The one-pass
     aggregate arbitration is the only acceptable plan at 100x scale."""
-    from joern_spark.operators.callgraph import link_calls
+    from joern_spark.operators.callgraph import candidate_pool, link_calls
 
-    plan = _plan(link_calls(cpg.nodes, cpg.edges))
+    plan = _plan(link_calls(cpg.nodes, cpg.edges, cpg_hints,
+                            candidate_pool(cpg.nodes, cpg.edges)))
     assert "Window" not in plan, f"arbitration planned a window:\n{plan}"
 

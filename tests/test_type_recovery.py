@@ -1,11 +1,19 @@
-"""XTypeRecovery-lite + FieldAccessLinker tests (SURVEY.md §2.A #20/#27)."""
+"""XTypeRecovery-lite + FieldAccessLinker tests (SURVEY.md §2.A #20/#27).
+
+Type hints come from the fused kernel, as in the pipeline
+(``conftest.kernel_hints``): several rows per node when a variable carries
+several hints.
+"""
+
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
 from joern_spark.corpus import docs_df, split_code_spans
 from joern_spark.operators.ast_pass import parse_docs, split_rows
-from joern_spark.operators.type_recovery import field_access_linker, type_recovery_pass
+from joern_spark.operators.type_recovery import field_access_linker
+from tests.conftest import kernel_hints
 
 SRC = """class Point {
   int x;
@@ -25,12 +33,22 @@ def graph(spark):
                             "spans": split_code_spans(SRC, 3)}])
     rows = parse_docs(docs).persist()
     nodes, edges, _ = split_rows(rows)
-    return nodes.persist(), edges.persist()
+    hints = kernel_hints(nodes).persist()
+    yield nodes, edges, hints
+    hints.unpersist()
+    rows.unpersist()
+
+
+def _hint_sets(hints) -> dict:
+    """node_id → the set of its recovered types."""
+    out = defaultdict(set)
+    for r in hints.collect():
+        out[r["node_id"]].add(r["recovered_type"])
+    return out
 
 
 def test_declared_param_type_recovered(graph):
-    nodes, edges = graph
-    rec = type_recovery_pass(nodes)
+    nodes, edges, rec = graph
     typed = (
         nodes.filter((F.col("kind") == "IDENTIFIER") & (F.col("name") == "p"))
         .join(rec, "node_id")
@@ -39,8 +57,7 @@ def test_declared_param_type_recovered(graph):
 
 
 def test_this_type_is_enclosing_class(graph):
-    nodes, edges = graph
-    rec = type_recovery_pass(nodes)
+    nodes, edges, rec = graph
     typed = (
         nodes.filter((F.col("kind") == "IDENTIFIER") & (F.col("name") == "this"))
         .join(rec, "node_id")
@@ -49,8 +66,8 @@ def test_this_type_is_enclosing_class(graph):
 
 
 def test_field_access_links_to_member(graph):
-    nodes, edges = graph
-    refs = field_access_linker(nodes, edges)
+    nodes, edges, hints = graph
+    refs = field_access_linker(nodes, edges, hints)
     n = nodes.toPandas().set_index("node_id")
     pairs = {
         (n.loc[r["src"], "code"], n.loc[r["dst"], "name"])
@@ -62,8 +79,8 @@ def test_field_access_links_to_member(graph):
 
 def test_alloc_propagation_links_q(graph):
     """q = new Point(); q.y — type flows through the assignment round."""
-    nodes, edges = graph
-    refs = field_access_linker(nodes, edges)
+    nodes, edges, hints = graph
+    refs = field_access_linker(nodes, edges, hints)
     n = nodes.toPandas().set_index("node_id")
     pairs = {
         (n.loc[r["src"], "code"], n.loc[r["dst"], "name"])
@@ -80,9 +97,10 @@ def test_c_struct_member_linking(spark):
     docs = docs_df(spark, [{"doc_id": "tr/list.c", "spans": split_code_spans(src, 1)}])
     rows = parse_docs(docs).persist()
     nodes, edges, _ = split_rows(rows)
-    refs = field_access_linker(nodes, edges)
+    refs = field_access_linker(nodes, edges, kernel_hints(nodes))
     n = nodes.select("node_id", "code", "name", "kind").toPandas().set_index("node_id")
     pairs = {(n.loc[r["src"], "code"], n.loc[r["dst"], "name"]) for r in refs.collect()}
+    rows.unpersist()
     assert ("p->val", "val") in pairs
 
 
@@ -96,8 +114,8 @@ def test_no_cross_method_type_leak(spark):
            "}\nclass Point { int x; }\nclass Other { int x; }")
     docs = docs_df(spark, [{"doc_id": "tr/Leak.java", "spans": split_code_spans(src, 2)}])
     rows = parse_docs(docs).persist()
-    nodes, edges, _ = split_rows(rows)
-    rec = type_recovery_pass(nodes)
+    nodes, _, _ = split_rows(rows)
+    rec = kernel_hints(nodes)
     typed = (
         nodes.filter((F.col("kind") == "IDENTIFIER") & (F.col("name") == "v"))
         .join(rec, "node_id")
@@ -110,14 +128,15 @@ def test_no_cross_method_type_leak(spark):
     by_method = {}
     for r in typed.collect():
         by_method.setdefault(r["m_name"], set()).add(r["recovered_type"])
+    rows.unpersist()
     assert by_method["f"] == {"Point"}
     assert by_method["g"] == {"Other"}
 
 
 def test_no_cross_class_false_links(graph):
     """Members only link within the receiver's class (no name-only match)."""
-    nodes, edges = graph
-    refs = field_access_linker(nodes, edges)
+    nodes, edges, hints = graph
+    refs = field_access_linker(nodes, edges, hints)
     classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("c_id"), F.col("full_name").alias("c_full")
     )
@@ -133,17 +152,14 @@ def test_no_cross_class_false_links(graph):
 
 # ---- XTypeRecovery full rules + XTypeHintCallLinker ------------------------
 
-def test_alloc_type_recovered_through_object_declaration(cpg, g):
+def test_alloc_type_recovered_through_object_declaration(cpg_hints, g):
     """Object h = new Impl(): h's identifiers recover Impl, not Object."""
     from tests.conftest import F11
-    from pyspark.sql import functions as F
 
-    from joern_spark.operators.type_recovery import type_recovery_pass
-
-    rec = type_recovery_pass(cpg.nodes).toPandas().set_index("node_id")
+    rec = _hint_sets(cpg_hints)
     nodes = g.doc_nodes(F11)
     hs = nodes[(nodes["kind"] == "IDENTIFIER") & (nodes["name"] == "h")]
-    got = {rec.loc[i, "recovered_type"] for i in hs.index if i in rec.index}
+    got = set().union(*(rec[i] for i in hs.index))
     assert "Impl" in got
 
 
@@ -164,12 +180,6 @@ def test_hint_linker_resolves_dynamic_call(cpg, g):
 
 def test_call_return_type_propagates(spark):
     """x = maker() recovers maker's METHOD_RETURN type for x."""
-    from pyspark.sql import functions as F
-
-    from joern_spark.corpus import docs_df, split_code_spans
-    from joern_spark.operators.type_recovery import type_recovery_pass
-    from joern_spark.pipeline import run_pipeline
-
     src = """class Maker {
   Impl maker() { return new Impl(); }
   int use() { Object x = maker(); return 0; }
@@ -177,10 +187,8 @@ def test_call_return_type_propagates(spark):
 class Impl { int f() { return 2; } }"""
     docs = docs_df(spark, [{"doc_id": "t/ret.java",
                             "spans": split_code_spans(src, 1)}])
-    res = run_pipeline(spark, docs, n_parts=2, with_dataflow=False,
-                       with_dominators=False)
-    rec = type_recovery_pass(res.nodes).toPandas().set_index("node_id")
-    nodes = res.nodes.toPandas().set_index("node_id")
-    xs = nodes[(nodes["kind"] == "IDENTIFIER") & (nodes["name"] == "x")]
-    got = {rec.loc[i, "recovered_type"] for i in xs.index if i in rec.index}
+    nodes, _, _ = split_rows(parse_docs(docs))
+    rec = _hint_sets(kernel_hints(nodes))
+    xs = nodes.filter((F.col("kind") == "IDENTIFIER") & (F.col("name") == "x"))
+    got = set().union(*(rec[r["node_id"]] for r in xs.collect()))
     assert "Impl" in got
