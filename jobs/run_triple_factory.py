@@ -79,7 +79,7 @@ def main() -> None:
         "cpu_sec": round(cpu, 1), "host_load_before": load0,
         "steal_pct": steal_pct,
         "resumed": res.stats.get("ast_resumed_parts", 0),
-        "stages": {k: v for k, v in res.stats.items() if k.startswith("t_")},
+        "stats": res.stats,
     }))
     spark.stop()
 

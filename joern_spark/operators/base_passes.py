@@ -82,41 +82,27 @@ def type_nodes(nodes: DataFrame) -> DataFrame:
         name=F.col("tn"), full_name=F.col("tn"), code=F.col("tn"))
 
 
-def namespace_pass(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+def namespace_pass(nodes: DataFrame) -> DataFrame:
     """NamespaceCreator (x2cpg/.../passes/base/NamespaceCreator.scala:17-25):
-    group NAMESPACE_BLOCKs by name → one NAMESPACE node + REF edges.
-    Textbook hash-aggregate + deterministic stub ids (no join back needed)."""
-    blocks = nodes.filter(F.col("kind") == "NAMESPACE_BLOCK").select(
-        "node_id", "name", "doc_id"
-    )
-    names = blocks.select("name").distinct()
-    ns_nodes = _node_select(
+    group NAMESPACE_BLOCKs by name → one NAMESPACE node per name.
+    Textbook hash-aggregate + deterministic stub ids; the block → NAMESPACE
+    REF edges come from :func:`vocabulary_edges`."""
+    names = nodes.filter(F.col("kind") == "NAMESPACE_BLOCK") \
+        .select("name").distinct()
+    return _node_select(
         names, node_id=stub_id_col("NAMESPACE", F.col("name")),
         kind="NAMESPACE", name=F.col("name"), full_name=F.col("name"),
         code=F.col("name"))
-    ns_dim = ns_nodes.select(F.col("name").alias("ns_name"),
-                             F.col("node_id").alias("ns_id"))
-    ref_edges = (
-        blocks.join(budgeted_broadcast(ns_dim, bound=blocks),
-                    blocks["name"] == F.col("ns_name"))
-        .select(
-            F.col("node_id").alias("src"), F.col("ns_id").alias("dst"),
-            F.lit("REF").alias("kind"), F.lit("").alias("variable"),
-            "doc_id", F.lit(None).cast("long").alias("method_id"),
-        )
-    )
-    return ns_nodes, ref_edges
 
 
-def type_decl_stubs(types: DataFrame, nodes: DataFrame) -> DataFrame:
-    """TypeDeclStubCreator: TYPE with no TYPE_DECL → external stub (anti-join)."""
+def type_decl_stubs(types: DataFrame, nodes: DataFrame, fits: bool) -> DataFrame:
+    """TypeDeclStubCreator: TYPE with no TYPE_DECL → external stub (anti-join;
+    the TYPE_DECL dim broadcasts when ``fits``)."""
     decls = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         dereference(F.col("full_name")).alias("full_name")
     ).distinct()
     missing = types.select("full_name").join(
-        budgeted_broadcast(decls, bound=nodes.filter(F.col("kind") == "TYPE_DECL")),
-        "full_name", "left_anti"
-    )
+        budgeted_broadcast(decls, fits=fits), "full_name", "left_anti")
     fn = F.col("full_name")
     return _node_select(
         missing, node_id=stub_id_col("TYPE_DECL", fn), kind="TYPE_DECL",
@@ -124,11 +110,12 @@ def type_decl_stubs(types: DataFrame, nodes: DataFrame) -> DataFrame:
         is_external=True)
 
 
-def method_stubs(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """MethodStubCreator: distinct call summaries with no METHOD → stub rows.
+def method_stubs(nodes: DataFrame, edges: DataFrame, fits: bool) -> DataFrame:
+    """MethodStubCreator: distinct call summaries with no METHOD → stub rows
+    (their AST edges come from :func:`vocabulary_edges`).
 
-    Returns (stub_nodes, stub_ast_edges). The summary table is
-    vocabulary-sized (distinct full names), so the anti-join broadcasts.
+    The METHOD dim is vocabulary-sized (distinct full names); the anti-join
+    broadcasts it when ``fits``.
     """
     arg_counts = (
         edges.filter(F.col("kind") == "ARGUMENT")
@@ -150,9 +137,8 @@ def method_stubs(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFra
     methods = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("full_name").alias("c_full")
     ).distinct()
-    missing = calls.join(
-        budgeted_broadcast(methods, bound=nodes.filter(F.col("kind") == "METHOD")),
-        "c_full", "left_anti")
+    missing = calls.join(budgeted_broadcast(methods, fits=fits),
+                         "c_full", "left_anti")
 
     # pure-JVM stub synthesis (round-3 profile: the Python generator here was
     # the pool's biggest serial chunk, t_stubs 21-43 s). ONE scan emits the
@@ -194,17 +180,8 @@ def method_stubs(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFra
         .otherwise(F.array().cast("array<int>")),
         param_s,
     )
-    stub_nodes = m.select(F.inline(
+    return m.select(F.inline(
         F.concat(F.array(method_s, block_s, ret_s), param_structs)))
-    stub_edges = (
-        stub_nodes.filter(F.col("parent_id").isNotNull())
-        .select(
-            F.col("parent_id").alias("src"), F.col("node_id").alias("dst"),
-            F.lit("AST").alias("kind"), F.lit("").alias("variable"),
-            F.col("doc_id"), F.col("method_id"),
-        )
-    )
-    return stub_nodes, stub_edges
 
 
 def dependency_pass(nodes: DataFrame) -> DataFrame:
@@ -273,14 +250,14 @@ def macro_ref_linker(nodes: DataFrame) -> DataFrame:
     )
 
 
-def parameter_out_pass(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+def parameter_out_pass(nodes: DataFrame) -> DataFrame:
     """MethodDecoratorPass: synthesize METHOD_PARAMETER_OUT per PARAMETER_IN
-    + AST (method→paramOut) and PARAMETER_LINK (paramIn→paramOut) edges.
+    (its AST and PARAMETER_LINK edges come from :func:`vocabulary_edges`).
 
     Pure projection — no shuffle: the paramOut id derives from the paramIn id.
     """
     params = nodes.filter(F.col("kind") == "METHOD_PARAMETER_IN")
-    outs = _node_select(
+    return _node_select(
         params, node_id=stub_id_col("PARAM_OUT", F.col("node_id")),
         doc_id=F.col("doc_id"), kind="METHOD_PARAMETER_OUT",
         name=F.col("name"), code=F.col("code"), order=F.col("order"),
@@ -288,12 +265,51 @@ def parameter_out_pass(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
         span_offset=F.col("span_offset"),
         type_full_name=F.col("type_full_name"), parent_id=F.col("parent_id"),
         method_id=F.col("method_id"), filename=F.col("filename"))
-    ast_edges = outs.select(
+
+
+def vocabulary(nodes: DataFrame, edges: DataFrame, fits: bool) -> DataFrame:
+    """The six base-pass node frames as one union: TYPE rows, TYPE_DECL
+    stubs, METHOD stubs (with their BLOCK/RET/parameter children),
+    METHOD_PARAMETER_OUT, NAMESPACE and DEPENDENCY rows. Their kinds do not
+    overlap, so each frame is a ``kind`` filter of the union.
+
+    The TYPE rows are materialized first (one small job): the optimizer
+    pushes the decl stubs' anti-join below the type-name ``distinct``, so
+    the two branches share no exchange and a lazy union would scan the
+    nodes for type names twice. The rest of the union is lazy.
+
+    ``fits``: whether the METHOD and TYPE_DECL dims of the stub passes'
+    anti-joins fit the broadcast budget (the pipeline bounds both by the
+    METHOD + TYPE_DECL + MEMBER count), so building the union probes nothing.
+    """
+    types = type_nodes(nodes).localCheckpoint(eager=True)
+    return (
+        types.unionByName(type_decl_stubs(types, nodes, fits))
+        .unionByName(method_stubs(nodes, edges, fits))
+        .unionByName(parameter_out_pass(nodes))
+        .unionByName(namespace_pass(nodes))
+        .unionByName(dependency_pass(nodes))
+    )
+
+
+def vocabulary_edges(vocab: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The edges of the :func:`vocabulary` rows:
+
+    - AST ``parent_id → node_id`` for every row with a parent (the method
+      stubs' children and the paramOuts; TYPE, TYPE_DECL, NAMESPACE and
+      DEPENDENCY rows have none);
+    - PARAMETER_LINK paramIn → paramOut, on the same (parent, order);
+    - REF NAMESPACE_BLOCK → NAMESPACE, by name (budgeted broadcast of the
+      NAMESPACE dim).
+    """
+    ast = vocab.filter(F.col("parent_id").isNotNull()).select(
         F.col("parent_id").alias("src"), F.col("node_id").alias("dst"),
         F.lit("AST").alias("kind"), F.lit("").alias("variable"),
         "doc_id", "method_id",
     )
-    link_edges = (
+    params = nodes.filter(F.col("kind") == "METHOD_PARAMETER_IN")
+    outs = vocab.filter(F.col("kind") == "METHOD_PARAMETER_OUT")
+    param_link = (
         params.alias("p")
         .join(outs.alias("o"),
               (F.col("p.parent_id") == F.col("o.parent_id"))
@@ -305,7 +321,18 @@ def parameter_out_pass(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.col("p.method_id").alias("method_id"),
         )
     )
-    return outs, ast_edges.unionByName(link_edges)
+    ns_dim = vocab.filter(F.col("kind") == "NAMESPACE").select(
+        F.col("name").alias("ns_name"), F.col("node_id").alias("ns_id"))
+    ns_ref = (
+        nodes.filter(F.col("kind") == "NAMESPACE_BLOCK")
+        .join(budgeted_broadcast(ns_dim), F.col("name") == F.col("ns_name"))
+        .select(
+            F.col("node_id").alias("src"), F.col("ns_id").alias("dst"),
+            F.lit("REF").alias("kind"), F.lit("").alias("variable"),
+            "doc_id", F.lit(None).cast("long").alias("method_id"),
+        )
+    )
+    return ast.unionByName(param_link).unionByName(ns_ref)
 
 
 def type_ref_pass(types: DataFrame, nodes: DataFrame) -> DataFrame:

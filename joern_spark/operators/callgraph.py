@@ -265,16 +265,16 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     kernel (whose output only the rank-2 hint candidates need), hiding the
     linkers' many small join stages behind the kernel's long Python stage.
 
-    Pre-arbitration pruning (semantics-neutral): rows the final arbitration
-    can NEVER keep — naive rows for calls that static/CHA already resolved
-    (their keep condition requires f_r01 == 0) and CHA external stubs whose
-    call has an internal CHA candidate — are dropped before the pool hits
-    disk. Bare-name naive matches are cross-document quadratic per name, so
-    for a mostly-statically-resolved corpus this removes the bulk of the
-    spill; the arbitration in :func:`link_calls` re-derives its flags over
-    the pruned pool and keeps row-for-row identical output (dropped rows
-    only ever feed flag conditions of branches that are themselves dead:
-    a pruned naive row's src has f_r01 == 1, killing every rank-3 branch)."""
+    Pre-arbitration pruning (semantics-neutral): naive rows for calls that
+    static/CHA already resolved — rows the final arbitration can NEVER keep,
+    since its rank-3 keep condition requires f_r01 == 0 — are never
+    generated. Bare-name naive matches are cross-document quadratic per
+    name, so for a mostly-statically-resolved corpus this removes the bulk
+    of the spill; the arbitration in :func:`link_calls` re-derives its flags
+    over the pruned pool and keeps row-for-row identical output (a pruned
+    naive row's src has f_r01 == 1, killing every rank-3 branch). CHA
+    external stubs stay in the pool: :func:`link_calls` drops them when the
+    call has an internal CHA candidate or a hint link."""
     dyn = _dynamic_candidates(nodes, edges)
     # The naive anti-join only needs set MEMBERSHIP of resolved call ids, not
     # the candidate rows — so the build side is a broadcast SEMI-join probe
@@ -283,7 +283,7 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     # static∪CHA candidate frame (6 columns incl. doc_id strings) just to
     # reuse it as the anti-join build; on the bandwidth-walled host (and on
     # any real executor) that full-width materialization IS the cost — the
-    # semi probe re-reads only the checkpointed vocabulary leaves map-side.
+    # semi probe re-reads only the checkpointed vocabulary leaf map-side.
     # CHA is the one subtree whose re-evaluation is non-trivial (its
     # super-fallback branch already evaluates its down-branch twice), so at
     # corpus scale (caller passes barrier=True on CALL count) the CHA

@@ -11,10 +11,10 @@ AQE skew handling enabled in the session conf, the job degrades instead of
 dying.
 
 The pipeline bounds the corpus vocabulary size ONCE per run from one per-kind
-node count job: the fused kernel gets an explicit ``fits`` for its fact joins,
-the linkers get :func:`dim_fits_hint`, so the hot path pays zero extra probe
-jobs; standalone calls (tests, DSL) probe per-site with an early-stopping
-``limit(budget+1).count()``.
+node count job: the fused kernel and the vocabulary's stub passes get an
+explicit ``fits`` for their dim joins, the linkers get :func:`dim_fits_hint`,
+so a pipeline run pays zero extra probe jobs; standalone calls (tests, DSL)
+probe per-site with an early-stopping ``limit(budget+1).count()``.
 """
 
 from __future__ import annotations
@@ -48,43 +48,26 @@ def dim_fits_hint(fits: bool):
 # every linker); keyed by the analyzed-plan hash so a probe runs once per
 # distinct dim per process. A stale entry can only mis-pick the join
 # strategy, never change results.
-_PROBE_MEMO: dict[tuple[int, int, int | None], bool] = {}
+_PROBE_MEMO: dict[tuple[int, int], bool] = {}
 _PROBE_MEMO_MAX = 4096
 
 
 def budgeted_broadcast(dim: DataFrame, budget: int = MAX_BROADCAST_DIM,
-                       fits: bool | None = None,
-                       bound: DataFrame | None = None) -> DataFrame:
+                       fits: bool | None = None) -> DataFrame:
     """``F.broadcast(dim)`` when it fits the budget, else ``dim`` unhinted
     (shuffle join). ``fits=None`` consults the run hint, then falls back to a
-    memoized bounded count that stops scanning at ``budget + 1`` rows.
-
-    ``bound``: optional frame whose row count upper-bounds ``dim``'s (e.g.
-    the pre-distinct source of a ``filter().distinct()`` dim). Probing it is
-    a map-only early-stopping count — no shuffle — where probing ``dim``
-    itself would have to execute the distinct's exchange just to decide the
-    join strategy. Conservative by construction: an over-budget bound picks
-    the shuffle join even when the distinct dim would have fit, which
-    degrades the plan, never the result."""
+    memoized bounded count that stops scanning at ``budget + 1`` rows."""
     if fits is None:
         fits = _FITS_HINT
     if fits is None:
         try:
-            # the verdict depends on WHICH frame was probed: a conservative
-            # bound-based False must not be replayed for bound-less callers
-            # of the same dim (or vice versa), so the bound is part of the key
-            key = (
-                dim.semanticHash(),
-                budget,
-                bound.semanticHash() if bound is not None else None,
-            )
+            key = (dim.semanticHash(), budget)
         except Exception:
             key = None
         if key is not None and key in _PROBE_MEMO:
             fits = _PROBE_MEMO[key]
         else:
-            probe = bound if bound is not None else dim
-            fits = probe.limit(budget + 1).count() <= budget
+            fits = dim.limit(budget + 1).count() <= budget
             if key is not None:
                 if len(_PROBE_MEMO) >= _PROBE_MEMO_MAX:
                     _PROBE_MEMO.clear()

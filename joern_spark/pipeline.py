@@ -11,10 +11,11 @@ cross-document facts arrive as columns filled by budgeted joins
 budget, shuffle joins re-clustered by doc over it — degrade, don't die, on
 the same path. Stage boundaries spill to parquet (``spill.py``): columnar,
 atomic-rename, column-pruned downstream — the barriers that were measured
-FLAT at 8→32 cores as deserialized localCheckpoint blocks. Small vocabulary
-frames (TYPE rows, stubs, namespaces) materialize individually and
-concurrently with the kernel job; the wide 5-way nodes union is never copied
-— it stays a lazy union over materialized leaves.
+FLAT at 8→32 cores as deserialized localCheckpoint blocks. The six small
+vocabulary frames (TYPE rows, stubs, paramOuts, namespaces, dependencies)
+are one union leaf, checkpointed once (after the TYPE rows it reads)
+concurrently with the kernel job; the wide nodes union is never copied — it
+stays a lazy union of the parse nodes and that leaf.
 
 With ``out_dir`` every stage boundary is a durable parquet snapshot with
 lineage rows and a resume manifest, so any failed partition range resumes
@@ -35,16 +36,12 @@ from .lineage import (append_lineage, commit_snapshot, read_manifest,
                       write_manifest)
 from .operators.ast_pass import parse_docs, split_rows
 from .operators.base_passes import (
-    dependency_pass,
     eval_type_pass,
     imports_linker,
     macro_ref_linker,
-    method_stubs,
-    namespace_pass,
-    parameter_out_pass,
-    type_decl_stubs,
-    type_nodes,
     type_ref_pass,
+    vocabulary,
+    vocabulary_edges,
 )
 from .operators.callgraph import (
     link_misses,
@@ -97,7 +94,12 @@ def run_pipeline(
             rows_new.write.mode("overwrite") \
                 .partitionBy("part_id", "rowtype").parquet(batch_dir)
             batch_dirs.append(batch_dir)
-            append_lineage(spark, out_dir, rows_new, "ast", t0)
+            # lineage from the written batch, not the lazy parse (which would
+            # run again); partition discovery moves the partition columns to
+            # the end, and the row checksum hashes the columns in order
+            append_lineage(spark, out_dir,
+                           spark.read.parquet(batch_dir).select(*rows_new.columns),
+                           "ast", t0)
             all_parts = [r[0] for r in docs.select("part_id").distinct().collect()]
             write_manifest(out_dir, "ast", all_parts, complete=True,
                            extra={"data_dirs": batch_dirs})
@@ -124,187 +126,97 @@ def run_pipeline(
         cpg_rows = spill0.write(
             parse_docs(docs.repartition(n_parse, "doc_id")),
             "ast_rows", partition_by="rowtype", guard_contiguity=True)
-        stats["t_parse"] = round(time.time() - t0, 2)
 
     nodes0, edges0, spans = split_rows(cpg_rows)
 
     from .operators.callgraph import candidate_pool, link_calls
-    from .operators.dims import MAX_BROADCAST_DIM, budgeted_broadcast, dim_fits_hint
+    from .operators.dims import MAX_BROADCAST_DIM, dim_fits_hint
     from .operators.method_kernels import fused_method_kernels, type_hints
     from .operators.type_recovery import field_access_linker
 
     spill = SpillDir(out_dir)
 
     # ---- per-kind node counts: one small job whose counts bound every
-    # dimension the kernel and the linkers join, so the broadcast-or-shuffle
-    # decisions cost no per-join probe jobs
+    # dimension the kernel, the vocabulary and the linkers join, so the
+    # broadcast-or-shuffle decisions cost no per-join probe jobs. METHOD +
+    # TYPE_DECL + MEMBER bound the kernel's three fact dimensions and the
+    # stub passes' METHOD and TYPE_DECL anti-join dims.
     def counts_job():
         counts = {r["kind"]: r["count"]
                   for r in nodes0.groupBy("kind").count().collect()}
-        stats["kind_counts"] = counts
-        return counts
-
-    # ---- kernel job (python-heavy, scales with cores): the METHOD, TYPE_DECL
-    # and MEMBER counts bound its three fact dimensions
-    def kernel_job() -> DataFrame:
-        counts = counts_f.result()
         fits = sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER")) \
             <= MAX_BROADCAST_DIM
-        stats["kernel_fits"] = fits
+        stats["kind_counts"], stats["kernel_fits"] = counts, fits
+        return counts, fits
+
+    # ---- kernel job (python-heavy, scales with cores)
+    def kernel_job() -> DataFrame:
+        _, fits = counts_f.result()
         k = fused_method_kernels(nodes0, fits, with_dominators=with_dominators,
                                  with_dataflow=with_dataflow)
         return spill.write(k, "kernel_rows")
 
-    # ---- base vocabulary frames: each is small (type/stub/namespace
-    # vocabulary or per-parameter); materialize individually so the wide
-    # nodes union never needs its own barrier — it stays a lazy union over
-    # materialized leaves.
-    def types_job():
-        types = type_nodes(nodes0).localCheckpoint(eager=True)
-        decl_stubs = type_decl_stubs(types, nodes0).localCheckpoint(eager=True)
-        return types, decl_stubs
-
-    def stubs_job():
-        m_stubs, _ = method_stubs(nodes0, edges0)
-        return m_stubs.localCheckpoint(eager=True)
-
-    def params_job():
-        outs, _ = parameter_out_pass(nodes0)
-        return outs.localCheckpoint(eager=True)
-
-    def ns_job():
-        ns_nodes, _ = namespace_pass(nodes0)
-        return ns_nodes.localCheckpoint(eager=True)
-
-    def deps_job():
-        return dependency_pass(nodes0).localCheckpoint(eager=True)
-
-    t_pool = time.time()
-
-    def timed(name, fn):
-        def run():
-            t = time.time()
-            out = fn()
-            stats[f"t_{name}"] = round(time.time() - t, 2)
-            return out
-        return run
-
-    # ---- kernel-independent edges: everything except the field-access and
-    # hint linkers (which consume the kernel's _TYPE_HINT rows) depends only
-    # on the vocabulary frames — materialize those branches INSIDE the pool,
-    # so their many small join stages overlap the kernel's long Python stage
-    # (the kernel's JVM task threads mostly wait on worker sockets; FAIR
-    # scheduling shares the slots)
+    # ---- vocabulary + kernel-independent edges: everything except the
+    # field-access and hint linkers (which consume the kernel's _TYPE_HINT
+    # rows) depends only on the vocabulary — materialize those branches
+    # INSIDE the pool, so their many small join stages overlap the kernel's
+    # long Python stage (the kernel's JVM task threads mostly wait on worker
+    # sockets; FAIR scheduling shares the slots)
     def base_job():
-        counts = counts_f.result()
-        types, decl_stubs = types_f.result()
-        m_stubs = stubs_f.result()
-        param_outs = params_f.result()
-        ns_nodes = ns_f.result()
-        dep_nodes = deps_f.result()
+        counts, kernel_fits = counts_f.result()
+        # ONE checkpointed leaf for the six vocabulary frames: `nodes` is
+        # referenced ~12 times across the candidate pool / linkers, and every
+        # reference inlines the full union subtree into the plan Catalyst
+        # must analyze (measured as multi-second DRIVER gaps in the stage
+        # timeline at small corpus). Checkpointed, `nodes` plans as a
+        # 2-branch union everywhere, and each vocabulary frame a consumer
+        # needs is a kind filter of the leaf.
+        vocab = vocabulary(nodes0, edges0, kernel_fits).localCheckpoint(eager=True)
+        types = vocab.filter(F.col("kind") == "TYPE")
+        dep_nodes = vocab.filter(F.col("kind") == "DEPENDENCY")
         # run-wide broadcast-budget decision: every dimension any downstream
         # join broadcasts is vocabulary-or-stub-sized; their union is bounded
-        # by these kind counts, so one hint replaces a per-join probe job.
+        # by the leaf's rows (paramOuts are per-parameter, not a dimension)
+        # plus these kind counts, so one hint replaces a per-join probe job.
         # Over budget → every dim join plans a shuffle join (degrade, not die)
         vocab_n = (
-            m_stubs.count() + types.count() + decl_stubs.count()
-            + ns_nodes.count() + dep_nodes.count()
+            vocab.filter(F.col("kind") != "METHOD_PARAMETER_OUT").count()
             + sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER",
                                              "FILE"))
         )
         stats["vocab_n"] = vocab_n
         fits = vocab_n <= MAX_BROADCAST_DIM
-
-        m_stub_edges = (
-            m_stubs.filter(F.col("parent_id").isNotNull())
-            .select(F.col("parent_id").alias("src"),
-                    F.col("node_id").alias("dst"),
-                    F.lit("AST").alias("kind"), F.lit("").alias("variable"),
-                    "doc_id", "method_id")
-        )
-        params_in = nodes0.filter(F.col("kind") == "METHOD_PARAMETER_IN")
-        param_ast = param_outs.select(
-            F.col("parent_id").alias("src"), F.col("node_id").alias("dst"),
-            F.lit("AST").alias("kind"), F.lit("").alias("variable"),
-            "doc_id", "method_id")
-        param_link = (
-            params_in.alias("p")
-            .join(param_outs.alias("o"),
-                  (F.col("p.parent_id") == F.col("o.parent_id"))
-                  & (F.col("p.order") == F.col("o.order")))
-            .select(F.col("p.node_id").alias("src"),
-                    F.col("o.node_id").alias("dst"),
-                    F.lit("PARAMETER_LINK").alias("kind"),
-                    F.lit("").alias("variable"),
-                    F.col("p.doc_id").alias("doc_id"),
-                    F.col("p.method_id").alias("method_id"))
-        )
-        ns_dim = ns_nodes.select(F.col("name").alias("ns_name"),
-                                 F.col("node_id").alias("ns_id"))
-        # ONE union leaf for the six vocabulary frames: `nodes` is referenced
-        # ~12 times across the candidate pool / linkers, and every reference
-        # inlines the full union subtree into the plan Catalyst must analyze
-        # (7 branches x 12 references ~= 84 subtrees + AQE re-planning per
-        # query stage — measured as multi-second DRIVER gaps in the stage
-        # timeline at small corpus, the fixed floor the sf0.1 headline pays).
-        # The leaves are already materialized, so checkpointing their union
-        # copies only vocabulary-sized rows; `nodes` then plans as a 2-branch
-        # union everywhere.
-        vocab_nodes = (
-            types.unionByName(decl_stubs)
-            .unionByName(m_stubs).unionByName(param_outs).unionByName(ns_nodes)
-            .unionByName(dep_nodes)
-        ).localCheckpoint(eager=True)
-        nodes = nodes0.unionByName(vocab_nodes)
+        nodes = nodes0.unionByName(vocab)
         with dim_fits_hint(fits):
-            ns_edges = (
-                nodes0.filter(F.col("kind") == "NAMESPACE_BLOCK")
-                .join(budgeted_broadcast(ns_dim),
-                      F.col("name") == F.col("ns_name"))
-                .select(F.col("node_id").alias("src"),
-                        F.col("ns_id").alias("dst"),
-                        F.lit("REF").alias("kind"),
-                        F.lit("").alias("variable"),
-                        "doc_id", F.lit(None).cast("long").alias("method_id"))
-            )
             # the two spills are independent — submit both to the pool so
             # the (join-light) base union and the (join-heavy) candidate
             # pool run as concurrent Spark jobs instead of back-to-back
-            base_norec_f = pool.submit(timed("base_spill", lambda: spill.write(
-                edges0.unionByName(m_stub_edges)
-                .unionByName(param_ast).unionByName(param_link)
+            base_norec_f = pool.submit(lambda: spill.write(
+                edges0.unionByName(vocabulary_edges(vocab, nodes0))
                 .unionByName(type_ref_pass(types, nodes0))
                 .unionByName(eval_type_pass(nodes, types))
                 .unionByName(method_ref_linker(nodes))
                 .unionByName(macro_ref_linker(nodes0))
-                .unionByName(imports_linker(nodes0, dep_nodes))
-                .unionByName(ns_edges),
-                "edges_base_norec")))
+                .unionByName(imports_linker(nodes0, dep_nodes)),
+                "edges_base_norec"))
             # static/CHA/naive call candidates (hint needs the kernel);
             # the pool-internal barrier pays only at corpus scale
             cand_barrier = counts.get("CALL", 0) > 300_000
-            cand_f = pool.submit(timed("cand_spill", lambda: spill.write(
+            cand_f = pool.submit(lambda: spill.write(
                 candidate_pool(nodes, edges0, barrier=cand_barrier),
-                "call_candidates")))
+                "call_candidates"))
             base_norec = base_norec_f.result()
             cand = cand_f.result()
         return nodes, fits, base_norec, cand
 
-    # 8 top-level jobs + base_job's 2 nested spill submissions (nested
+    # 3 top-level jobs + base_job's 2 nested spill submissions (nested
     # submits need free workers or they queue behind their own parent)
-    with ThreadPoolExecutor(max_workers=10) as pool:
-        counts_f = pool.submit(timed("counts", counts_job))
-        kernel_f = pool.submit(timed("kernel", kernel_job))
-        types_f = pool.submit(timed("types", types_job))
-        stubs_f = pool.submit(timed("stubs", stubs_job))
-        params_f = pool.submit(timed("params", params_job))
-        ns_f = pool.submit(timed("ns", ns_job))
-        deps_f = pool.submit(timed("deps", deps_job))
-        base_f = pool.submit(timed("base_edges", base_job))
+    with ThreadPoolExecutor(max_workers=5) as pool:
+        counts_f = pool.submit(counts_job)
+        kernel_f = pool.submit(kernel_job)
+        base_f = pool.submit(base_job)
         kernel_out = kernel_f.result()
-        base_res = base_f.result()
-    stats["t_pool"] = round(time.time() - t_pool, 2)
-    nodes, fits, base_norec, cand = base_res
+        nodes, fits, base_norec, cand = base_f.result()
 
     # recovery events came out of the kernel as _TYPE_HINT rows
     recovered = type_hints(kernel_out)
@@ -319,11 +231,8 @@ def run_pipeline(
         t2 = time.time()
         post_lazy = field_access_linker(nodes0, edges0, recovered=recovered) \
             .unionByName(call_edges)
-        post_lazy._jdf.queryExecution().executedPlan()
-        stats["t_edges_plan"] = round(time.time() - t2, 2)
         base_call = base_norec.unionByName(
             spill.write(post_lazy, "edges_call_fa"))
-        stats["t_edges_spill"] = round(time.time() - t2, 2)
         edges = kernel_edges.unionByName(base_call)
         if out_dir:
             append_lineage(spark, out_dir,

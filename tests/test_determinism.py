@@ -17,24 +17,43 @@ def test_identical_across_partition_counts(spark):
     assert a == b
 
 
-def test_identical_across_runs(spark):
-    docs = fixture_docs_df(spark)
-    a = _triples(run_pipeline(spark, docs, n_parts=4))
-    b = _triples(run_pipeline(spark, docs, n_parts=4))
-    assert a == b
+def test_identical_across_runs(spark, cpg, monkeypatch):
+    """A second run gives the session run's triples. It builds the
+    vocabulary from one checkpointed leaf (plus the TYPE rows the leaf reads)
+    and decides every broadcast from its kind counts, so no
+    ``budgeted_broadcast`` probe job runs."""
+    from joern_spark.operators import dims
+    from joern_spark.schema import NODE_COLUMNS
+
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    node_checkpoints = []
+
+    def spy_checkpoint(self, *args, **kwargs):
+        if self.columns == list(NODE_COLUMNS):
+            node_checkpoints.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy_checkpoint)
+    # every probe that runs leaves its verdict in the (emptied) memo
+    probes = {}
+    monkeypatch.setattr(dims, "_PROBE_MEMO", probes)
+    b = _triples(run_pipeline(spark, fixture_docs_df(spark), n_parts=4))
+    assert _triples(cpg) == b
+    assert len(node_checkpoints) == 2
+    assert probes == {}
 
 
-def test_doc_subset_is_sub_multiset(spark):
+def test_doc_subset_is_sub_multiset(spark, cpg):
     """Per-document independence: a subset corpus produces exactly the
     subset's triples (no cross-doc id interference except global stubs)."""
     from joern_spark.corpus import docs_df, fixture_docs
 
     all_docs = fixture_docs()
-    full = run_pipeline(spark, docs_df(spark, all_docs), n_parts=4)
     part = run_pipeline(spark, docs_df(spark, all_docs[:2]), n_parts=2)
     doc_ids = {d["doc_id"] for d in all_docs[:2]}
     full_sub = sorted(
-        tuple(r) for r in full.triples.filter(full.triples["doc_id"].isin(list(doc_ids)))
+        tuple(r) for r in cpg.triples.filter(cpg.triples["doc_id"].isin(list(doc_ids)))
         .select("subj", "pred", "obj").collect()
     )
     part_sub = sorted(

@@ -7,10 +7,14 @@ from collections import Counter
 import pyspark.sql.functions as F
 import pytest
 
-from joern_spark.corpus import docs_df, skew_corpus
+from joern_spark.corpus import docs_df, skew_corpus, split_code_spans
 from joern_spark.operators import dims
 from joern_spark.operators.ast_pass import parse_docs, split_rows
-from joern_spark.operators.base_passes import method_stubs
+from joern_spark.operators.base_passes import (
+    method_stubs,
+    vocabulary,
+    vocabulary_edges,
+)
 from joern_spark.operators.callgraph import (
     candidate_pool,
     link_calls,
@@ -80,28 +84,65 @@ def test_linkers_respect_budget(cpg_nodes_edges, skew_nodes_edges,
                     == Counter(map(tuple, other[name].collect()))), name
 
 
-def test_link_calls_matches_sequential_chain(cpg_nodes_edges):
+def test_link_calls_matches_sequential_chain(cpg_nodes_edges,
+                                            arbitration_nodes_edges):
     """The one-pass arbitration window returns exactly the edges the
     sequential static→dynamic→hint→naive chain (with prefer-internal
-    pruning) produces."""
+    pruning) produces, on the fixture corpus and on the arbitration corpus
+    (a CHA external stub beside an internal CHA candidate; a hint-linked
+    call with naive matches other than the hint's target)."""
     from joern_spark.operators.type_recovery import type_hint_call_linker
     from tests.reference_impls import (
         dynamic_call_linker,
         prefer_internal_call_edges,
     )
 
-    nodes, edges, hints = cpg_nodes_edges
-    static = static_call_linker(nodes)
-    ambiguous = dynamic_call_linker(nodes, edges)
-    ambiguous = ambiguous.unionByName(type_hint_call_linker(
-        nodes, edges, static.unionByName(ambiguous), hints))
-    ambiguous = ambiguous.unionByName(
-        naive_call_linker(nodes, static.unionByName(ambiguous)))
-    chain = static.unionByName(prefer_internal_call_edges(ambiguous, nodes))
-    fused = link_calls(nodes, edges, hints, candidate_pool(nodes, edges))
-    a = {tuple(r) for r in chain.collect()}
-    b = {tuple(r) for r in fused.collect()}
-    assert a == b
+    for nodes, edges, hints in (cpg_nodes_edges, arbitration_nodes_edges):
+        static = static_call_linker(nodes)
+        ambiguous = dynamic_call_linker(nodes, edges)
+        ambiguous = ambiguous.unionByName(type_hint_call_linker(
+            nodes, edges, static.unionByName(ambiguous), hints))
+        ambiguous = ambiguous.unionByName(
+            naive_call_linker(nodes, static.unionByName(ambiguous)))
+        chain = static.unionByName(prefer_internal_call_edges(ambiguous, nodes))
+        fused = link_calls(nodes, edges, hints, candidate_pool(nodes, edges))
+        a = {tuple(r) for r in chain.collect()}
+        b = {tuple(r) for r in fused.collect()}
+        assert a == b
+
+
+# Two arbitration conditions the fixture corpus does not reach:
+# - Cha.java: `b.m()` has CHA candidates Base.m (internal) and Sub.m (the
+#   external stub that `s.m()` creates), so its CHA external is pruned by the
+#   internal CHA candidate alone (``f_dyn_int``), not by a hint link;
+# - hint.js: `x.run()` has no static or CHA candidate (its full name has no
+#   receiver type), links A.run through x's recovered type, and bare-name
+#   matches both A.run and B.run, so its naive rows are dropped only because
+#   the hint linked the call (``hint_kept``).
+_ARBITRATION_DOCS = {
+    "arb/Cha.java": ("class Base { void m() {} }\nclass Sub extends Base {}\n"
+                     "class Use {\n  void f(Sub s) { s.m(); }\n"
+                     "  void g(Base b) { b.m(); }\n}"),
+    "arb/hint.js": ("class A { run() { return 1; } }\n"
+                    "class B { run() { return 2; } }\n"
+                    "function f() { let y = new A(); let x = y; x.run(); }"),
+}
+
+
+@pytest.fixture(scope="module")
+def arbitration_nodes_edges(spark):
+    """The arbitration corpus with its vocabulary (TYPE rows for the
+    inheritance closure, method stubs), checkpointed."""
+    docs = docs_df(spark, [{"doc_id": k, "spans": split_code_spans(v, 1)}
+                           for k, v in _ARBITRATION_DOCS.items()])
+    rows = parse_docs(docs).persist()
+    nodes, edges, _ = split_rows(rows)
+    vocab = vocabulary(nodes, edges, fits=True)
+    graph = (nodes.unionByName(vocab).localCheckpoint(),
+             edges.unionByName(vocabulary_edges(vocab, nodes)).localCheckpoint(),
+             kernel_hints(nodes).localCheckpoint())
+    rows.unpersist()
+    return graph
 
 
 @pytest.fixture(scope="module")
@@ -116,9 +157,9 @@ def skew_nodes_edges(spark):
     upstream)."""
     rows = parse_docs(docs_df(spark, skew_corpus(60), partitions=4)).persist()
     nodes, edges, _ = split_rows(rows)
-    stubs, stub_edges = method_stubs(nodes, edges)
+    stubs = method_stubs(nodes, edges, fits=True)
     graph = (nodes.unionByName(stubs).localCheckpoint(),
-             edges.unionByName(stub_edges).localCheckpoint(),
+             edges.unionByName(vocabulary_edges(stubs, nodes)).localCheckpoint(),
              kernel_hints(nodes).localCheckpoint())
     rows.unpersist()
     return graph

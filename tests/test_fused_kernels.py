@@ -58,7 +58,7 @@ def _per_method_edges(nodes0) -> Counter:
             r["callee_internal"] = True if r["full_name"] in internal else None
         by_method[r["method_id"]].append(r)
     param_outs = defaultdict(list)
-    for r in parameter_out_pass(nodes0)[0].collect():
+    for r in parameter_out_pass(nodes0).collect():
         param_outs[r["method_id"]].append(r.asDict())
 
     out = Counter()

@@ -9,7 +9,9 @@ synthetic-corpus sample.
 
 from __future__ import annotations
 
-from joern_spark.corpus import fixture_docs_df
+from pyspark.sql import functions as F
+
+from joern_spark.corpus import docs_df, fixture_docs_df, split_code_spans
 from joern_spark.operators.ast_pass import parse_docs, split_rows
 from joern_spark.operators.method_kernels import fused_method_kernels, type_hints
 from tests.reference_impls import type_recovery_events
@@ -53,4 +55,23 @@ def test_synth_sample_parity(spark):
     rows.count()
     nodes0, _, _ = split_rows(rows)
     assert _events_from_kernel(nodes0) == _events_from_df(nodes0)
+    rows.unpersist()
+
+
+def test_member_load_parity(spark):
+    """``x = a->it``: x is undeclared and the field access carries no type,
+    so x's one type comes from the member-load rule alone — MEMBER it's type
+    on a's recovered type (``struct box*``, dereferenced)."""
+    src = ("struct item { int n; };\n"
+           "struct box { struct item *it; };\n"
+           "void f(struct box *a) { x = a->it; }")
+    docs = docs_df(spark, [{"doc_id": "tr/member_load.c",
+                            "spans": split_code_spans(src, 1)}])
+    rows = parse_docs(docs).persist()
+    nodes0, _, _ = split_rows(rows)
+    x_ids = {r["node_id"] for r in nodes0.filter(
+        (F.col("kind") == "IDENTIFIER") & (F.col("name") == "x")).collect()}
+    kernel_events = _events_from_kernel(nodes0)
+    assert kernel_events == _events_from_df(nodes0)
+    assert {t for nid, t in kernel_events if nid in x_ids} == {"struct item*"}
     rows.unpersist()

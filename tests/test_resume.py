@@ -46,12 +46,11 @@ def test_materialize_resume_and_lineage(spark, out_dir):
     assert all(r[1] > 0 for r in rows)
 
 
-def test_resumed_output_identical(spark, out_dir):
-    """Triples from the resumed run match a fresh in-memory run exactly
-    (deterministic ids: any partition recomputes to the same bytes)."""
+def test_resumed_output_identical(spark, cpg, out_dir):
+    """Triples from the resumed run match the session's in-memory run
+    exactly (deterministic ids: any partition recomputes to the same bytes)."""
     docs = fixture_docs_df(spark)
-    mem = run_pipeline(spark, docs, n_parts=4)
-    mem_triples = {tuple(r) for r in mem.triples.select("subj", "pred", "obj").collect()}
+    mem_triples = {tuple(r) for r in cpg.triples.select("subj", "pred", "obj").collect()}
     mat = run_pipeline(spark, docs, out_dir=out_dir, n_parts=4)
     mat_triples = {tuple(r) for r in mat.triples.select("subj", "pred", "obj").collect()}
     assert mem_triples == mat_triples
