@@ -1,43 +1,53 @@
-"""Interprocedural backward taint reachability — ``reachableBy`` as bounded
-iterative DataFrame joins.
+"""Interprocedural backward taint reachability — ``reachableBy`` and
+``reachableByFlows`` over one backward step relation.
 
 Reference: the task-parallel engine in
 ``dataflowengineoss/.../queryengine/Engine.scala:43-268`` +
-``TaskCreator.scala:26-100`` — per-sink backward DFS over in-REACHING_DEF
+``TaskCreator.scala:26-135`` — per-sink backward DFS over in-REACHING_DEF
 edges within a method, jumping interprocedurally at parameters (to caller
 arguments) and at call sites (into callee returns), k-limited at
-``maxCallDepth = 4`` (``Engine.scala:322``).
+``maxCallDepth = 4`` (``Engine.scala:322``), with a realizable call-site
+stack.
 
-Spark shape: instead of per-sink tasks on a thread pool, ONE
-``frontier.expand`` keyed by ``sink_id`` carries every sink's walk over one
-step relation,
+Spark shape: :class:`FlowEngine` builds one tagged step relation per graph,
   reversed REACHING_DEF (cost 0)  ∪  param→arg hop  ∪  call→return hop (cost 1),
-with ``max_depth = max_call_depth``. :class:`FlowEngine` builds that step once
-per graph, so every query of a bundle walks the same relation, which is the
-path-cache sharing the reference implements by hand
-(``EngineConfig.shareCacheBetweenTasks``). Under the broadcast budget each
-flow is a lazy frame that runs inside its consumer's job; over it, expand's
-checkpointed loop runs the rounds.
+so every query of a bundle walks the same relation, which is the path-cache
+sharing the reference implements by hand
+(``EngineConfig.shareCacheBetweenTasks``).
+
+- :meth:`FlowEngine.flow` (``reachableBy``) is ONE ``frontier.expand`` keyed
+  by ``sink_id`` with ``max_depth = max_call_depth``. Under the broadcast
+  budget each flow is a lazy frame that runs inside its consumer's job; over
+  it, expand's checkpointed loop runs the rounds.
+- :meth:`FlowEngine.flows` (``reachableByFlows``) first finds each sink's
+  backward sub-graph with the same ``expand``, then walks each sink's paths
+  with all of its rows in one task (``frontier.map_groups``), as the
+  reference runs one task per sink: the cheap reachability pass decides
+  which rows the costly path walk ever sees.
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from .operators.frontier import expand
+from .operators.frontier import BATCH_ROWS, arrow_batch, expand, map_groups
 
 MAX_CALL_DEPTH = 4  # Engine.scala:322
+
+# paths one sink's walk emits before it stops, a safety valve against path
+# explosion; reaching it writes a line to the worker's stderr
+MAX_SINK_PATHS = 4000
+
+_FLOWS_SCHEMA = StructType([StructField("sink_id", LongType()),
+                            StructField("path", ArrayType(LongType()))])
 
 
 def _edges_of(edges: DataFrame, kind: str) -> DataFrame:
     return edges.filter(F.col("kind") == kind)
-
-
-def interproc_back_edges(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Backward interprocedural hops (node_id, prev_id):
-    param ← caller argument and call-site ← callee RETURN/METHOD_RETURN."""
-    return interproc_back_edges_tagged(nodes, edges).select("node_id", "prev_id")
 
 
 def interproc_back_edges_tagged(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -45,11 +55,11 @@ def interproc_back_edges_tagged(nodes: DataFrame, edges: DataFrame) -> DataFrame
     (node_id, prev_id, hop_kind, call_id):
 
     - ``hop_kind='arg'``: callee param ← caller argument at call ``call_id``
-      (backward traversal EXITS the callee) — the stitcher must pop a
+      (backward traversal EXITS the callee) — the path walk must pop a
       matching call site, or have an empty stack (``TaskCreator.scala:54-70``
       Case 1 / Case 2);
     - ``hop_kind='ret'``: call-site ← callee RETURN/METHOD_RETURN (backward
-      traversal ENTERS the callee) — the stitcher pushes ``call_id``
+      traversal ENTERS the callee) — the path walk pushes ``call_id``
       (``TaskCreator.scala:131-135`` ``call :: callSiteStack``).
     """
     call_edges = _edges_of(edges, "CALL").select(
@@ -110,14 +120,17 @@ def reachable_by(nodes: DataFrame, edges: DataFrame,
 
 
 class FlowEngine:
-    """``reachableBy`` over one graph, shared across a scan bundle.
+    """``reachableBy`` and ``reachableByFlows`` over one graph, shared across
+    a scan bundle.
 
-    The engine builds the backward step relation once: reversed
-    REACHING_DEF at cost 0 ∪ ``interproc_back_edges`` at cost 1 (depth
-    counts interprocedural hops only, the reference's k-limit). Every
-    :meth:`flow` call is one ``frontier.expand`` keyed by ``sink_id`` over
-    that same step frame, so under the broadcast budget the step is fetched
-    and broadcast once per engine, and each flow is a lazy frame that runs
+    The engine builds the backward step relation once, tagged:
+    ``(node_id, next_id, cost, hop_kind, call_id)``, reversed REACHING_DEF at
+    cost 0 with null tags ∪ ``interproc_back_edges_tagged`` at cost 1 (depth
+    counts interprocedural hops only, the reference's k-limit). ``step`` is
+    its untagged projection. Every :meth:`flow` call and every sub-graph of
+    :meth:`flows` is one ``frontier.expand`` keyed by ``sink_id`` over that
+    same ``step`` frame, so under the broadcast budget the step is fetched
+    and broadcast once per engine, and each call is a lazy frame that runs
     inside its consumer's job (the reference's shared path cache,
     ``EngineConfig.shareCacheBetweenTasks``, ``Engine.scala:43-268``).
     """
@@ -125,22 +138,120 @@ class FlowEngine:
     def __init__(self, nodes: DataFrame, edges: DataFrame):
         rd_back = _edges_of(edges, "REACHING_DEF").select(
             F.col("dst").alias("node_id"), F.col("src").alias("next_id"),
-            F.lit(0).alias("cost"))
-        inter_back = interproc_back_edges(nodes, edges).select(
-            "node_id", F.col("prev_id").alias("next_id"), F.lit(1).alias("cost"))
-        self.step = rd_back.unionByName(inter_back)
+            F.lit(0).alias("cost"), F.lit(None).cast("string").alias("hop_kind"),
+            F.lit(None).cast("long").alias("call_id"))
+        hops = interproc_back_edges_tagged(nodes, edges).select(
+            "node_id", F.col("prev_id").alias("next_id"), F.lit(1).alias("cost"),
+            "hop_kind", "call_id")
+        self.tagged = rd_back.unionByName(hops)
+        self.step = self.tagged.select("node_id", "next_id", "cost")
+
+    def _visited(self, sinks: DataFrame, max_depth: int | None) -> DataFrame:
+        seed = sinks.select("node_id", F.col("node_id").alias("sink_id"),
+                            F.lit(0).alias("depth"))
+        return expand(seed, self.step, ["sink_id"], max_depth=max_depth)
 
     def flow(self, sinks: DataFrame, sources: DataFrame,
              max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
         """(source_id, sink_id) pairs: every node whose value flows into a
         sink (reached backwards, at most ``max_call_depth`` interprocedural
         hops) that is also a source. Lazy; composes with other flows."""
-        seed = sinks.select("node_id", F.col("node_id").alias("sink_id"),
-                            F.lit(0).alias("depth"))
-        visited = expand(seed, self.step, ["sink_id"], max_depth=max_call_depth)
+        visited = self._visited(sinks, max_call_depth)
         # visited holds each (sink_id, node_id) once, so the pairs are distinct
         return visited.join(sources.select("node_id").distinct(), "node_id") \
             .select(F.col("node_id").alias("source_id"), "sink_id")
+
+    def flows(self, sinks: DataFrame, sources: DataFrame,
+              max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
+        """``reachableByFlows``: (sink_id, path array<long>) with forward
+        source→sink node paths, the longest per (head, sink)
+        (``Engine.scala:154-179``). Lazy.
+
+        Each sink's rows are its backward sub-graph, the step edges out of
+        every node ``expand`` reaches from it, and the sources among those
+        nodes; only sinks that reach some source are walked. The sub-graph
+        is unbounded: an ``expand`` depth is the round that first reached a
+        node, not its fewest hops, so a ``max_call_depth`` bound could drop
+        a node that a realizable path within the bound passes through. The
+        walk enforces the bound itself (:func:`_path_walker`).
+        """
+        visited = self._visited(sinks, None).select("sink_id", "node_id")
+        marks = visited.join(sources.select("node_id").distinct(), "node_id")
+        rows = (
+            visited.join(self.tagged, "node_id")
+            .unionByName(marks, allowMissingColumns=True)
+            .join(marks.select("sink_id").distinct(), "sink_id", "left_semi")
+        )
+        return map_groups(rows, ["sink_id"],
+                          _path_walker(max_call_depth, MAX_SINK_PATHS),
+                          _FLOWS_SCHEMA)
+
+
+def _path_walker(max_call_depth: int, cap: int):
+    """Per-sink DFS over the sink's sub-graph rows (a row with a null
+    ``next_id`` marks a source). A REACHING_DEF step may not revisit a node
+    of the current method segment, which restarts at every hop. A hop is
+    taken while fewer than ``max_call_depth`` were: ``ret`` pushes its call
+    site, ``arg`` needs an empty stack or that call site on top and pops it
+    (``TaskCreator.scala:54-135``). Every source reached ends a path, the
+    sink and hop landings included, and the walk goes on past it."""
+
+    def walk(groups):
+        out: list[list] = [[], []]
+        for (sink,), rows in groups:
+            rd: dict = {}
+            hops: dict = {}
+            sources = set()
+            for r in rows:
+                n, m = r["node_id"], r["next_id"]
+                if m is None:
+                    sources.add(n)
+                elif r["cost"] == 0:
+                    rd.setdefault(n, []).append(m)
+                else:
+                    hops.setdefault(n, []).append((m, r["hop_kind"], r["call_id"]))
+            for adj in (rd, hops):
+                for v in adj.values():
+                    v.sort()
+            best: dict = {}  # head → forward path, longest then smallest
+            emitted = 0
+            # (node, backward path, current segment, call-site stack, hops)
+            stack = [(sink, (sink,), frozenset((sink,)), (), 0)]
+            while stack:
+                n, path, seg, calls, k = stack.pop()
+                if n in sources:
+                    if emitted == cap:
+                        print(f"FlowEngine.flows stopped sink {sink} at "
+                              f"MAX_SINK_PATHS={cap}; its paths are truncated",
+                              file=sys.stderr)
+                        break
+                    emitted += 1
+                    fwd = path[::-1]
+                    old = best.get(n)
+                    if old is None or (-len(fwd), fwd) < (-len(old), old):
+                        best[n] = fwd
+                for m in rd.get(n, ()):
+                    if m not in seg:
+                        stack.append((m, path + (m,), seg | {m}, calls, k))
+                if k < max_call_depth:
+                    for m, kind, call in hops.get(n, ()):
+                        if kind == "ret":
+                            nxt = calls + (call,)
+                        elif not calls or calls[-1] == call:
+                            nxt = calls[:-1]
+                        else:
+                            continue
+                        stack.append((m, path + (m,), frozenset((m,)), nxt, k + 1))
+            for p in best.values():
+                out[0].append(sink)
+                out[1].append(list(p))
+            if len(out[0]) >= BATCH_ROWS:
+                yield arrow_batch(out, _FLOWS_SCHEMA)
+                out = [[], []]
+        if out[0]:
+            yield arrow_batch(out, _FLOWS_SCHEMA)
+
+    return walk
 
 
 def flow_result_pairs(nodes: DataFrame, paths: list[list[int]],
@@ -200,202 +311,14 @@ def flow_result_pairs(nodes: DataFrame, paths: list[list[int]],
     return sorted(reps)
 
 
-_SEG_SCHEMA = (
-    "method_id long, entry_id long, exit_id long, exit_role string, "
-    "path array<long>"
-)
-_MAX_SEGMENT_PATHS = 4000  # per-entry DFS cap (Engine task caps analog)
-
-
-def flow_segments(nodes: DataFrame, edges: DataFrame,
-                  sinks: DataFrame, sources: DataFrame) -> DataFrame:
-    """Method-local backward path segments, enumerated WHERE THE DATA LIVES.
-
-    REACHING_DEF edges are method-local by construction (the per-method
-    kernels emit them with ``method_id``), so path enumeration shards
-    perfectly: one ``applyInPandas`` group per method walks its own RD
-    subgraph backwards from every *entry* node (a sink, or a stitch landing
-    point: a caller argument / a callee RETURN) and emits a segment whenever
-    it reaches a *terminal* (a source → complete, or a boundary node that
-    hops interprocedurally → to be stitched).  Paths are stored
-    forward-ordered (exit … entry) so stitching is array concatenation.
-    """
-    rd = _edges_of(edges, "REACHING_DEF").select("method_id", "src", "dst") \
-        .filter(F.col("method_id").isNotNull())
-    inter = interproc_back_edges(nodes, edges)
-
-    nid = nodes.select("node_id", "method_id")
-
-    def _mark(ids: DataFrame, col: str, role: str) -> DataFrame:
-        return (
-            ids.select(F.col(col).alias("node_id")).distinct()
-            .join(nid, "node_id")
-            .select("method_id", "node_id", F.lit(role).alias("role"))
-        )
-
-    marks = (
-        _mark(sinks, "node_id", "entry")
-        .unionByName(_mark(inter, "prev_id", "entry"))      # stitch landings
-        .unionByName(_mark(sources, "node_id", "source"))
-        .unionByName(_mark(inter, "node_id", "boundary"))   # hop departures
-        .filter(F.col("method_id").isNotNull())
-        .distinct()
-    )
-
-    def kernel(key, edge_pdf, mark_pdf):
-        import pandas as pd
-        mid = key[0]
-        back: dict[int, list[int]] = {}
-        for s, d in zip(edge_pdf["src"], edge_pdf["dst"]):
-            back.setdefault(int(d), []).append(int(s))
-        roles: dict[int, set] = {}
-        for n, r in zip(mark_pdf["node_id"], mark_pdf["role"]):
-            roles.setdefault(int(n), set()).add(r)
-        out = []
-        entries = sorted(n for n, rs in roles.items() if "entry" in rs)
-        for e in entries:
-            count = 0
-            # an entry that ITSELF carries a terminal role emits a length-1
-            # segment: a stitch landing node that is the source closes the
-            # flow (literal-at-call-site → callee param → sink), and one that
-            # is also a hop departure (nested calls f(g(x))) keeps stitching
-            rs0 = roles.get(e, ())
-            if "source" in rs0:
-                out.append((mid, e, e, "source", [e]))
-                count += 1
-            if "boundary" in rs0:
-                out.append((mid, e, e, "boundary", [e]))
-                count += 1
-            stack: list[tuple[int, tuple[int, ...]]] = [(e, (e,))]
-            while stack and count < _MAX_SEGMENT_PATHS:
-                cur, path = stack.pop()
-                if len(path) > 1:
-                    rs = roles.get(cur, ())
-                    if "source" in rs:
-                        out.append((mid, e, cur, "source", list(reversed(path))))
-                        count += 1
-                    if "boundary" in rs:
-                        out.append((mid, e, cur, "boundary", list(reversed(path))))
-                        count += 1
-                for prev in sorted(back.get(cur, ())):
-                    if prev not in path:
-                        stack.append((prev, path + (prev,)))
-        return pd.DataFrame(
-            out, columns=["method_id", "entry_id", "exit_id", "exit_role", "path"]
-        ) if out else pd.DataFrame(
-            columns=["method_id", "entry_id", "exit_id", "exit_role", "path"]
-        )
-
-    return (
-        rd.groupby("method_id")
-        .cogroup(marks.groupby("method_id"))
-        .applyInPandas(kernel, schema=_SEG_SCHEMA)
-    )
-
-
-def reachable_by_flows_df(nodes: DataFrame, edges: DataFrame,
-                          sinks: DataFrame, sources: DataFrame,
-                          max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
-    """Distributed ``reachableByFlows``: (sink_id, path array<long>) with
-    source→sink forward paths, keep-longest deduped per (head, sink) like
-    ``Engine.scala:154-179``.
-
-    Intra-method enumeration runs sharded (``flow_segments``); only the
-    interprocedural stitching — ≤ ``max_call_depth`` rounds of equi-joins on
-    the (small) boundary-segment table — crosses methods.  No full-table
-    collects anywhere.
-    """
-    # localCheckpoint (not persist): the stitch loop builds round-over-round
-    # joins, and without lineage truncation the logical plan tree grows
-    # multiplicatively until plan *stringification* alone overflows the driver
-    seg = flow_segments(nodes, edges, sinks, sources).localCheckpoint(eager=True)
-    hops = interproc_back_edges_tagged(nodes, edges).select(
-        F.col("node_id").alias("from_id"), F.col("prev_id").alias("to_id"),
-        "hop_kind", "call_id",
-    ).localCheckpoint(eager=True)
-
-    sink_ids = sinks.select("node_id").distinct()
-    base = seg.join(
-        sink_ids.withColumnRenamed("node_id", "entry_id"), "entry_id"
-    ).select(
-        F.col("entry_id").alias("sink_id"), "exit_id", "exit_role", "path",
-        # realizable-path call-site stack (TaskCreator.scala:54-100): which
-        # call sites the backward walk has ENTERED (via call←return) and not
-        # yet exited; an arg hop must pop a matching site or run on an empty
-        # stack (unbalanced prefix: the walk started inside the callee)
-        F.array().cast("array<long>").alias("stack"),
-    )
-
-    # trivial flow: a sink that itself satisfies the source predicate
-    trivial = (
-        sink_ids.join(sources.select("node_id").distinct(), "node_id")
-        .select(F.col("node_id").alias("sink_id"),
-                F.array(F.col("node_id")).alias("path"))
-    )
-
-    done = base.filter(F.col("exit_role") == "source").select("sink_id", "path") \
-        .unionByName(trivial)
-    open_ = base.filter(F.col("exit_role") == "boundary")
-
-    ext = seg.select(
-        F.col("entry_id").alias("to_id"),
-        F.col("exit_id").alias("n_exit"),
-        F.col("exit_role").alias("n_role"),
-        F.col("path").alias("n_path"),
-    )
-    realizable = (
-        (F.col("hop_kind") == "ret")
-        | (F.size("stack") == 0)
-        | (F.expr("try_element_at(stack, -1)") == F.col("call_id"))
-    )
-    next_stack = (
-        F.when(F.col("hop_kind") == "ret",
-               F.concat(F.col("stack"), F.array(F.col("call_id"))))
-        .otherwise(F.expr("slice(stack, 1, greatest(size(stack) - 1, 0))"))
-    )
-    for _ in range(max_call_depth):
-        nxt = (
-            open_.join(hops, open_["exit_id"] == hops["from_id"])
-            .filter(realizable)
-            .join(ext, "to_id")
-            .select(
-                "sink_id",
-                F.col("n_exit").alias("exit_id"),
-                F.col("n_role").alias("exit_role"),
-                F.concat(F.col("n_path"), F.col("path")).alias("path"),
-                next_stack.alias("stack"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        done = done.unionByName(
-            nxt.filter(F.col("exit_role") == "source").select("sink_id", "path")
-        )
-        open_ = nxt.filter(F.col("exit_role") == "boundary")
-        if open_.limit(1).count() == 0:
-            break
-
-    # keep-longest per (head, sink) — Engine.scala:154-179 dedup
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("sink_id", F.element_at("path", 1)).orderBy(
-        F.size("path").desc(), F.col("path")
-    )
-    return (
-        done.distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("sink_id", "path")
-    )
-
-
 def reachable_by_flows(nodes: DataFrame, edges: DataFrame,
                        sinks: DataFrame, sources: DataFrame,
                        max_call_depth: int = MAX_CALL_DEPTH,
                        max_paths: int = 10000) -> list[list[int]]:
-    """List-of-paths facade over ``reachable_by_flows_df`` (tests/goldens).
+    """List-of-paths facade over :meth:`FlowEngine.flows` (tests/goldens).
     Only the ≤``max_paths`` final paths reach the driver."""
     rows = (
-        reachable_by_flows_df(nodes, edges, sinks, sources, max_call_depth)
+        FlowEngine(nodes, edges).flows(sinks, sources, max_call_depth)
         .limit(max_paths).collect()
     )
     return sorted([int(n) for n in r["path"]] for r in rows)

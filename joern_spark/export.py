@@ -6,9 +6,10 @@ Here the canonical export is the ``triples`` table; these writers reshape
 nodes/edges into interchange text formats.
 
 Scale shape: per-method exports are produced distributed — one row per
-method with the serialized subgraph string (``applyInPandas`` over the
-method's rows), written as a text/parquet column; whole-graph single-file
-exports are driver-side and flagged test-scale only.
+method with the serialized subgraph string (each method's node and edge
+rows meet in one ``mapInArrow`` task through ``frontier.map_groups``),
+written as a text/parquet column; whole-graph single-file exports are
+driver-side and flagged test-scale only.
 """
 
 from __future__ import annotations
@@ -16,9 +17,11 @@ from __future__ import annotations
 import json
 import xml.sax.saxutils as sx
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .operators.frontier import arrow_batch, map_groups
 
 REPRESENTATIONS = {
     "AST": ["AST"],
@@ -36,32 +39,44 @@ def _edge_filter(edges: DataFrame, representation: str) -> DataFrame:
     return edges if kinds is None else edges.filter(F.col("kind").isin(kinds))
 
 
+_SUBGRAPH_SCHEMA = StructType([StructField("method_id", LongType()),
+                               StructField("doc_id", StringType()),
+                               StructField("text", StringType())])
+_SUBGRAPH_BATCH = 1024  # methods per output batch
+
+
 def method_subgraphs(nodes: DataFrame, edges: DataFrame,
                      representation: str = "ALL", fmt: str = "dot") -> DataFrame:
     """One row per method: (method_id, doc_id, text) with the serialized
-    subgraph — the distributed export path."""
+    subgraph — the distributed export path. Nodes render in ``node_id``
+    order and edges in ``(src, dst, kind)`` order, so the text depends on
+    the graph alone, not on the order its rows arrive in."""
     e = _edge_filter(edges, representation).filter(F.col("method_id").isNotNull())
     n = nodes.filter(F.col("method_id").isNotNull()).select(
-        "node_id", "kind", "code", "doc_id", "method_id"
-    )
+        "method_id", "node_id", "kind", "code", "doc_id")
+    # one frame per method: node rows carry node_id, edge rows src/dst
+    rows = n.unionByName(e.select("method_id", "src", "dst", "kind"),
+                         allowMissingColumns=True)
     render = {"dot": _dot, "graphml": _graphml, "json": _json_graph,
               "graphson": _graphson}[fmt]
 
-    def kernel(key, node_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        node_rows = node_pdf.to_dict("records")
-        edge_rows = edge_pdf.to_dict("records")
-        doc_id = node_rows[0]["doc_id"] if node_rows else None
-        text = render(node_rows, edge_rows, name=str(key[0]))
-        return pd.DataFrame(
-            [{"method_id": key[0], "doc_id": doc_id, "text": text}],
-            columns=["method_id", "doc_id", "text"],
-        )
+    def kernel(groups):
+        out: list[list] = [[], [], []]
+        for (mid,), members in groups:
+            node_rows = sorted((r for r in members if r["node_id"] is not None),
+                               key=lambda r: r["node_id"])
+            edge_rows = sorted((r for r in members if r["node_id"] is None),
+                               key=lambda r: (r["src"], r["dst"], r["kind"]))
+            out[0].append(mid)
+            out[1].append(node_rows[0]["doc_id"] if node_rows else None)
+            out[2].append(render(node_rows, edge_rows, name=str(mid)))
+            if len(out[0]) >= _SUBGRAPH_BATCH:
+                yield arrow_batch(out, _SUBGRAPH_SCHEMA)
+                out = [[], [], []]
+        if out[0]:
+            yield arrow_batch(out, _SUBGRAPH_SCHEMA)
 
-    return (
-        n.groupby("method_id")
-        .cogroup(e.select("src", "dst", "kind", "method_id").groupby("method_id"))
-        .applyInPandas(kernel, schema="method_id long, doc_id string, text string")
-    )
+    return map_groups(rows, ["method_id"], kernel, _SUBGRAPH_SCHEMA)
 
 
 def _dot(node_rows, edge_rows, name: str) -> str:

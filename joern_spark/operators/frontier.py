@@ -11,10 +11,10 @@ Two physical plans keep one contract; the size of the step relation picks
 the plan (the dims budget, ``dims.MAX_BROADCAST_DIM`` rows):
 
 - **Broadcast walk** (the step fits). One Arrow fetch of the step, broadcast
-  as an adjacency map ``{node_id: [(next_id, cost)]}``; the seed is
-  repartitioned by its keys and ``mapInArrow`` runs a per-key BFS over the
-  broadcast map. The plan is lazy: it runs no Spark job until the
-  consumer's own action, so a closure costs its consumer one shuffle, not
+  as an adjacency map ``{node_id: [(next_id, cost)]}``; the seed is grouped
+  by its keys (:func:`map_groups`) and ``mapInArrow`` runs a per-key BFS
+  over the broadcast map. The plan is lazy: it runs no Spark job until the
+  consumer's own action, so a closure costs its consumer one aggregate, not
   rounds of jobs. The fetch is memoized per step frame object (a caller that
   passes the same step again pays no second fetch) and released with it.
   Joern answers ``reachableBy``/``repeat`` the same way, over one
@@ -26,6 +26,10 @@ the plan (the dims budget, ``dims.MAX_BROADCAST_DIM`` rows):
   ``localCheckpoint`` of the round's rows and an ``isEmpty`` probe for
   convergence. The visited set is the union of the checkpointed rounds, so
   its lineage never grows past one round.
+
+:func:`map_groups` is how per-key work gets all of a key's rows into one
+task: the broadcast walk, ``FlowEngine.flows``'s per-sink path walk and the
+per-method export use it.
 """
 
 from __future__ import annotations
@@ -37,6 +41,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from . import dims
 
@@ -44,8 +50,8 @@ from . import dims
 # so this is a safety valve, not a semantic bound — reaching it warns
 MAX_ROUNDS = 256
 
-# rows per output batch of the broadcast walk
-_BATCH_ROWS = 65536
+# rows per output batch of a mapInArrow task
+BATCH_ROWS = 65536
 
 # step frame → broadcast adjacency, or None when over budget; weak keys, so
 # an entry is released with its step frame
@@ -137,34 +143,69 @@ def _adjacency(step: DataFrame):
     return adj
 
 
+def map_groups(df: DataFrame, keys: Sequence[str], fn,
+               schema: StructType) -> DataFrame:
+    """``fn`` over every key's rows, each key's rows in one task.
+
+    ``fn(groups)`` runs in a ``mapInArrow`` task: ``groups`` yields
+    ``(key tuple, [row dict])`` once per key, the dicts holding ``df``'s
+    other columns, and ``fn`` yields Arrow record batches of ``schema``.
+    The rows meet through one aggregate (``collect_list`` per key). A
+    ``repartition(*keys)`` before ``mapInArrow`` does not promise that:
+    over a union of joins the final adaptive plan kept no exchange on the
+    keys, and one key's rows reached two tasks."""
+    keys = list(keys)
+    rest = [c for c in df.columns if c not in keys]
+    grouped = df.groupBy(*keys).agg(
+        F.collect_list(F.struct(*rest)).alias("_rows"))
+    n = len(keys)
+
+    def run(batches):
+        def groups():
+            for b in batches:
+                cols = [c.to_pylist() for c in b.columns]
+                for row in zip(*cols):
+                    yield tuple(row[:n]), row[n]
+
+        yield from fn(groups())
+
+    return grouped.mapInArrow(run, schema)
+
+
+def arrow_batch(cols: list[list], schema: StructType):
+    """One Arrow record batch of ``schema`` from column lists; Python ints
+    keep 64-bit ids exact."""
+    import pyarrow as pa
+
+    aschema = to_arrow_schema(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, aschema)],
+        schema=aschema)
+
+
 def _broadcast_walk(seed: DataFrame, adj, keys: list[str],
                     max_depth: int | None) -> DataFrame:
-    """The lazy plan: seed rows of one key meet in one partition, whose
-    ``mapInArrow`` task walks every key's BFS over the broadcast map."""
+    """The lazy plan: one ``mapInArrow`` task walks each key's BFS over the
+    broadcast map, from all of the key's seed rows."""
     seed = seed.select(*keys, "node_id", "depth")
-    parts = seed.repartition(*keys) if keys else seed.repartition(1)
-    return parts.mapInArrow(_walker(adj, len(keys), max_depth, MAX_ROUNDS),
-                            seed.schema)
+    return map_groups(seed, keys,
+                      _walker(adj, seed.schema, max_depth, MAX_ROUNDS),
+                      seed.schema)
 
 
-def _walker(adj, n_keys: int, max_depth: int | None, cap: int):
-    def walk(batches):
-        import pyarrow as pa
+def _walker(adj, schema: StructType, max_depth: int | None, cap: int):
+    n_keys = len(schema) - 2
 
+    def walk(groups):
         graph = adj.value
-        schema = None
-        walks: dict = {}  # key tuple → {node_id: seed depth}
-        for b in batches:
-            schema = b.schema
-            cols = [c.to_pylist() for c in b.columns]
-            for row in zip(*cols):
-                key, n, d = row[:n_keys], row[n_keys], row[n_keys + 1]
-                seen = walks.setdefault(key, {})
-                if n not in seen or d < seen[n]:
-                    seen[n] = d
         out: list[list] = [[] for _ in range(n_keys + 2)]
         truncated = False
-        for key, visited in walks.items():
+        for key, rows in groups:
+            visited: dict = {}
+            for r in rows:
+                n, d = r["node_id"], r["depth"]
+                if n not in visited or d < visited[n]:
+                    visited[n] = d
             frontier = dict(visited)
             for _ in range(cap):
                 nxt: dict = {}
@@ -188,18 +229,12 @@ def _walker(adj, n_keys: int, max_depth: int | None, cap: int):
                     out[i].append(k)
                 out[n_keys].append(n)
                 out[n_keys + 1].append(d)
-            if len(out[n_keys]) >= _BATCH_ROWS:
-                yield _batch(pa, out, schema)
+            if len(out[n_keys]) >= BATCH_ROWS:
+                yield arrow_batch(out, schema)
                 out = [[] for _ in range(n_keys + 2)]
         if truncated:
             print(_cap_message(cap), file=sys.stderr)
         if out[n_keys]:
-            yield _batch(pa, out, schema)
+            yield arrow_batch(out, schema)
 
     return walk
-
-
-def _batch(pa, cols: list[list], schema):
-    return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema)

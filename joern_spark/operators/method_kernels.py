@@ -2,7 +2,7 @@
 recovery in ONE ``mapInArrow`` over the doc-partitioned parse output.
 
 This is the only producer of per-method facts. Grouped-map passes
-(``applyInPandas``) would shuffle every node row by ``method_id`` and pay
+(pandas UDFs per group) would shuffle every node row by ``method_id`` and pay
 per-group pandas overhead on ~30-row groups (measured ~88 ms CPU/doc at
 sf0.1, dominated by group plumbing, not kernel math). Methods never span
 documents, and a document's rows never span partitions (they are emitted by

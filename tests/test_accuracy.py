@@ -512,8 +512,8 @@ def verdicts(accuracy_cpg):
 
     Sinks are the same global `sink*`-argument set every per-case run used;
     sources are the union of every case's seed literal. Per-sink/source
-    evolution in the flows engine is independent (segments are emitted at
-    every terminal passed, stitching is keyed per sink, keep-longest dedup
+    evolution in the flows engine is independent (each sink's path walk
+    runs alone and emits at every source passed, keep-longest dedup
     partitions by path head), and each case's flow stays inside its own
     doc (unique names by construction), so the union run is
     observationally identical to 101 per-case runs — at 1/101 of the

@@ -38,6 +38,19 @@ def test_graphml_export_wellformed(cpg):
         ET.fromstring(r["text"])  # raises on malformed XML
 
 
+def test_export_text_independent_of_partitioning(cpg):
+    """A method's text depends on its graph alone, not on the order its rows
+    arrive in: the same frames in 3 or 5 partitions render the same texts."""
+    def texts(nodes, edges):
+        return {r["method_id"]: r["text"] for r in
+                method_subgraphs(nodes, edges, "ALL", "graphson").collect()}
+
+    want = texts(cpg.nodes, cpg.edges)
+    assert want
+    for n in (3, 5):
+        assert texts(cpg.nodes.repartition(n), cpg.edges.repartition(n)) == want, n
+
+
 def test_neo4j_csv_shape(cpg):
     n, e = neo4j_csv(cpg.nodes, cpg.edges)
     assert n.columns == [":ID", ":LABEL", "name", "code"]

@@ -9,6 +9,7 @@ budget) and the checkpointed loop (``dims.MAX_BROADCAST_DIM`` set to 0)."""
 import warnings
 
 import pytest
+from pyspark.sql import functions as F
 
 from joern_spark.operators import dims, frontier
 from joern_spark.operators.frontier import expand
@@ -87,6 +88,40 @@ def test_keyed_costs_and_bound_match_bfs(spark):
         assert got[None][("b", 5)] == 0 and got[None][("a", 5)] == 2
         assert got[None][("a", 7)] == 0
         assert ("a", 5) not in got[1] and ("b", 5) in got[0]
+
+
+def test_union_of_joins_seed_states_once(spark):
+    """A seed built like a per-sink sub-graph — a union of two joins over an
+    earlier closure, semi-joined on the key — still gives every state once.
+    The keyed walk must see all of a key's seed rows in one task; a
+    ``repartition`` on the key was dropped from such a plan, and the walk
+    returned states twice."""
+    step = _step(spark, EDGES)
+    starts = {(n, n): 0 for n in range(1, 8)}
+    seed0 = spark.createDataFrame([(k, n, d) for (k, n), d in starts.items()],
+                                  "key long, node_id long, depth int")
+    sources = {1, 4, 7}
+    closure = _bfs(starts, EDGES)
+    marked = {k for k, n in closure if n in sources}
+    seeds = {(k, m): 0 for k, n in closure for a, m, _ in EDGES
+             if a == n and k in marked}
+    seeds.update({(k, n): 0 for k, n in closure if n in sources})
+    want = _bfs(seeds, EDGES, max_depth=2)
+    for plan in _plans():
+        visited = expand(seed0, step, ["key"]).select("key", "node_id")
+        marks = visited.join(spark.createDataFrame(
+            [(n,) for n in sources], "node_id long"), "node_id")
+        seed = (
+            visited.join(step, "node_id")
+            .select("key", F.col("next_id").alias("node_id"))
+            .unionByName(marks.select("key", "node_id"))
+            .join(marks.select("key").distinct(), "key", "left_semi")
+            .withColumn("depth", F.lit(0))
+        )
+        rows = expand(seed, step, ["key"], max_depth=2).collect()
+        got = {(r["key"], r["node_id"]): r["depth"] for r in rows}
+        assert len(rows) == len(got), plan
+        assert got == want, plan
 
 
 def test_round_cap_warns_and_truncates(spark, monkeypatch):

@@ -94,9 +94,9 @@ def test_reference_flow_goldens(cpg, q):
 
 def test_interprocedural_literal_to_callee_flows(cpg, g):
     """Flows-API mirror of test_interprocedural_literal_to_callee (round-2
-    ADVICE): when the SOURCE is exactly the stitch landing node (the caller
-    argument 42), the path must still be returned — the kernel emits a
-    length-1 source segment for it."""
+    ADVICE): when the SOURCE is exactly the hop's landing node (the caller
+    argument 42), the path must still be returned — the path walk ends a
+    path at every source it reaches, hop landings included."""
     nodes = g.doc_nodes(F3)
     lit = nodes[(nodes["kind"] == "LITERAL") & (nodes["code"] == "42")]
     x_arg = nodes[(nodes["kind"] == "IDENTIFIER") & (nodes["name"] == "x")]
@@ -143,7 +143,7 @@ def two_caller_cpg(spark):
 def test_realizable_paths_no_cross_caller_flow(two_caller_cpg):
     """A flow entering id2 from caller_b's call site must exit back to
     caller_b only: literal 2 reaches sink_b's argument, literal 1 does NOT
-    (the call-site stack kills the caller_a→id2→caller_b stitch)."""
+    (the call-site stack kills the caller_a→id2→caller_b path)."""
     import pyspark.sql.functions as F
 
     res = two_caller_cpg
@@ -164,7 +164,7 @@ def test_realizable_paths_no_cross_caller_flow(two_caller_cpg):
     heads = {p[0] for p in paths}
     assert lits["2"] in heads, "realizable caller_b flow must survive"
     assert lits["1"] not in heads, \
-        "unrealizable caller_a->id2->caller_b stitch must be filtered"
+        "unrealizable caller_a->id2->caller_b path must be filtered"
 
 
 def test_flow_engine_matches_reachable_by(cpg, q, monkeypatch):
@@ -194,3 +194,74 @@ def test_flow_engine_matches_reachable_by(cpg, q, monkeypatch):
         assert pairs(loop_eng.flow(sinks, sources, max_call_depth=d)) == want, d
     assert got[4]  # non-vacuous on the fixture corpus
     assert len(got[0]) < len(got[4])  # depth 0 takes no interprocedural hop
+
+
+def test_flows_same_under_both_expand_plans(cpg, q, monkeypatch):
+    """``FlowEngine.flows`` walks the sub-graph ``frontier.expand`` returns;
+    over the broadcast budget expand runs its checkpointed loop, and the
+    paths do not change."""
+    from pyspark.sql import functions as F
+
+    from joern_spark.operators import dims
+
+    ret = q.method_return().to_df().filter(F.col("doc_id") == F1).select("node_id")
+    idents = q.identifier().to_df().filter(F.col("doc_id") == F1).select("node_id")
+    want = reachable_by_flows(cpg.nodes, cpg.edges, ret, idents)
+    monkeypatch.setattr(dims, "MAX_BROADCAST_DIM", 0)
+    assert reachable_by_flows(cpg.nodes, cpg.edges, ret, idents) == want
+    assert want
+
+
+def test_flows_path_cap_truncates_per_sink(cpg, q, monkeypatch):
+    """A sink's walk stops after ``MAX_SINK_PATHS`` paths: at a cap of 1
+    every sink that reaches a source keeps exactly one source→sink path."""
+    from joern_spark import dataflow
+
+    sinks = q.call().argument().ids()
+    sources = q.identifier().ids()
+    full = dataflow.FlowEngine(cpg.nodes, cpg.edges).flows(sinks, sources)
+    monkeypatch.setattr(dataflow, "MAX_SINK_PATHS", 1)
+    capped = dataflow.FlowEngine(cpg.nodes, cpg.edges).flows(sinks, sources) \
+        .collect()
+    source_ids = {r["node_id"] for r in sources.collect()}
+    assert len(capped) == len({r["sink_id"] for r in capped})
+    assert {r["sink_id"] for r in capped} == \
+        {r["sink_id"] for r in full.select("sink_id").distinct().collect()}
+    assert all(r["path"][0] in source_ids and r["path"][-1] == r["sink_id"]
+               for r in capped)
+
+
+def test_flows_k_limit(cpg, g):
+    """Flows twin of test_k_limit_blocks_deep_flows: 42 reaches printf's x
+    through exactly one interprocedural hop, so a call depth of 0 finds no
+    path and a call depth of 1 finds it."""
+    nodes = g.doc_nodes(F3)
+    lit = nodes[(nodes["kind"] == "LITERAL") & (nodes["code"] == "42")]
+    x_arg = nodes[(nodes["kind"] == "IDENTIFIER") & (nodes["name"] == "x")]
+    spark = cpg.nodes.sparkSession
+    sources = spark.createDataFrame([(int(i),) for i in lit.index], "node_id long")
+    sinks = spark.createDataFrame([(int(i),) for i in x_arg.index], "node_id long")
+    assert reachable_by_flows(cpg.nodes, cpg.edges, sinks, sources,
+                              max_call_depth=0) == []
+    paths = reachable_by_flows(cpg.nodes, cpg.edges, sinks, sources,
+                               max_call_depth=1)
+    assert paths and all(p[0] in {int(i) for i in lit.index} for p in paths)
+
+
+def test_flows_keep_longest_path_per_head(spark):
+    """Of one head's paths to a sink, flows keeps the longest, and of equally
+    long ones the smallest (``Engine.scala:154-179``): node 1 reaches node 3
+    directly, through 2 and through 4."""
+    nodes = spark.createDataFrame(
+        [(i, "IDENTIFIER", 100, None, i) for i in (1, 2, 3, 4)],
+        "node_id long, kind string, method_id long, argument_index int, "
+        "order int")
+    edges = spark.createDataFrame(
+        [(1, 3, "REACHING_DEF"), (1, 2, "REACHING_DEF"), (2, 3, "REACHING_DEF"),
+         (1, 4, "REACHING_DEF"), (4, 3, "REACHING_DEF")],
+        "src long, dst long, kind string")
+
+    def ids(i):
+        return spark.createDataFrame([(i,)], "node_id long")
+
+    assert reachable_by_flows(nodes, edges, ids(3), ids(1)) == [[1, 2, 3]]

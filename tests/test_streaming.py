@@ -3,6 +3,7 @@ watermarked windows, stateful sessionization vs its batch oracle."""
 
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,25 @@ from joern_spark.streaming import (
 from joern_spark.streaming.events import sessionize_batch
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _await_rows(q, n_rows: int, timeout: float = 180) -> None:
+    """Block until the query's committed micro-batches have read ``n_rows``
+    input rows. A stateful query that times its state out in processing
+    time never ends under ``availableNow``: it keeps running state-cleanup
+    batches, so waiting for termination only waits out the timeout."""
+    read: dict = {}
+    deadline = time.monotonic() + timeout
+    while time.monotonic() < deadline:
+        for p in q.recentProgress:
+            read[p["batchId"]] = p["numInputRows"]
+        if sum(read.values()) >= n_rows:
+            return
+        if q.exception() is not None:
+            raise q.exception()
+        time.sleep(0.2)
+    raise AssertionError(f"query read {sum(read.values())} of {n_rows} rows "
+                         f"in {timeout} s")
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +56,10 @@ def test_incremental_ingest_matches_batch(spark, stream_dirs):
     docs_df(spark, all_docs[4:]).write.mode("append").parquet(docs_dir)
 
     q = stream_triple_factory(spark, docs_dir, out_dir, n_parts=4)
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
 
     streamed = spark.read.parquet(f"{out_dir}/triples_stream")
     batch = run_pipeline(spark, docs_df(spark, all_docs), n_parts=4).triples
@@ -47,7 +70,10 @@ def test_incremental_ingest_matches_batch(spark, stream_dirs):
     # restart with no new files → no duplicate work, no new rows
     n_before = streamed.count()
     q2 = stream_triple_factory(spark, docs_dir, out_dir, n_parts=4)
-    q2.awaitTermination(300)
+    try:
+        q2.awaitTermination(300)
+    finally:
+        q2.stop()
     assert spark.read.parquet(f"{out_dir}/triples_stream").count() == n_before
 
 
@@ -76,7 +102,10 @@ def test_windowed_counts_streaming_with_watermark(spark, tmp_path):
         agg.writeStream.format("memory").queryName("wincounts")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     # append mode emits only watermark-closed windows; with a finite input
     # the final windows stay open — assert the query ran and schema is right
     out = spark.sql("select * from wincounts")
@@ -93,15 +122,17 @@ def test_sessionize_stream_matches_batch_oracle(spark, tmp_path):
     # arrive in event-time order
     events.select("user_id", "ts", "value").coalesce(1).write.parquet(src)
 
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
+    written = spark.read.parquet(src)
+    stream = spark.readStream.schema(written.schema).parquet(src)
     q = (
         sessionize_stream(stream)
         .writeStream.format("memory").queryName("sessions")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    try:
+        _await_rows(q, written.count())
+    finally:
+        q.stop()
     got = spark.sql("select * from sessions")
 
     want = sessionize_batch(events)
