@@ -6,9 +6,12 @@ Usage (north-rule launch shape — BASELINE.json):
         jobs/run_triple_factory.py --sf-dir /root/testdata/sf0.1 [--out-dir D]
     spark-submit --master local[32] --py-files /tmp/joern_spark.zip ... (4N run)
 
-With --out-dir the run materializes every stage to partitioned parquet with
-per-partition lineage rows and a resume manifest: re-running with the same
---out-dir skips completed partition ranges (kill the job mid-run to test).
+With --out-dir the run builds the same graph as without it, keeps its stage
+spills there, appends per-partition lineage rows and commits the triples as
+a snapshot. Only the ast stage resumes: its manifest records the parsed
+part_ids, so re-running with the same --out-dir parses only the docs of the
+part ranges no committed batch covers (kill the job mid-run to test) and
+recomputes every later stage from the ast batches.
 Prints one JSON metrics line on success.
 """
 

@@ -106,19 +106,6 @@ def interproc_back_edges_tagged(nodes: DataFrame, edges: DataFrame) -> DataFrame
     return param_to_arg.unionByName(call_to_return)
 
 
-def reachable_by(nodes: DataFrame, edges: DataFrame,
-                 sinks: DataFrame, sources: DataFrame,
-                 max_call_depth: int = MAX_CALL_DEPTH) -> DataFrame:
-    """Which sources reach which sinks through data flow?
-
-    sinks/sources: DataFrames with a ``node_id`` column.
-    Returns (source_id, sink_id) pairs. One-off form of
-    :meth:`FlowEngine.flow`; a bundle of queries over the same graph shares
-    one engine instead (``Cpg.flow``).
-    """
-    return FlowEngine(nodes, edges).flow(sinks, sources, max_call_depth)
-
-
 class FlowEngine:
     """``reachableBy`` and ``reachableByFlows`` over one graph, shared across
     a scan bundle.

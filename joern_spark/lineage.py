@@ -2,12 +2,14 @@
 
 The reference records layer completion in ``META_DATA.OVERLAYS``
 (``semanticcpg/.../Overlays.scala:65-103``) and re-applies layers
-idempotently; at cluster scale we instead persist, per materialized stage:
+idempotently; at cluster scale we instead persist:
 - a ``lineage`` table row per (part_id, stage): row count, checksum, duration,
-- a JSON manifest listing completed part_ids (the checkpoint watermark).
+- a JSON manifest per stage: the ast stage's lists its completed part_ids
+  (the checkpoint watermark) and batch dirs; a snapshot stage's points at
+  its current snapshot and keeps the snapshot log.
 
-Resume = anti-join incoming partitions against the manifest: only missing
-part ranges are recomputed (north rule: "resumable from checkpoint with
+Resume = anti-join incoming partitions against the ast manifest: only the
+missing part ranges are parsed (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"). With Iceberg available these manifests
 become snapshot metadata; plain parquet + JSON keeps the same contract in the
 sandbox.
@@ -36,23 +38,19 @@ def read_manifest(out_dir: str, stage: str) -> dict | None:
     return None
 
 
-def write_manifest(out_dir: str, stage: str, part_ids: list[int],
-                   complete: bool, extra: dict | None = None) -> None:
+def write_manifest(out_dir: str, stage: str, **fields) -> None:
+    """Atomically replace the stage's manifest with ``fields`` (a
+    ``os.replace`` flip, so readers see the old or the new one whole)."""
     p = manifest_path(out_dir, stage)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    prev = read_manifest(out_dir, stage) or {"part_ids": []}
-    merged = sorted(set(prev.get("part_ids", [])) | set(int(x) for x in part_ids))
-    doc = {"stage": stage, "part_ids": merged, "complete": complete}
-    doc.update(extra or {})
     tmp = p + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(doc, f)
+        json.dump({"stage": stage, "complete": True, **fields}, f)
     os.replace(tmp, p)
 
 
 def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
-                    stage: str, part_ids: list[int],
-                    partition_by: str | None = None,
+                    stage: str, partition_by: str | None = None,
                     keep_snapshots: int = 2) -> DataFrame:
     """Iceberg-style atomic stage commit (snapshot + metadata-pointer flip).
 
@@ -84,9 +82,8 @@ def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
     log = list(prev.get("snapshots", []))
     log.append({"id": snap, "ts_ms": int(time.time() * 1000),
                 "data_dir": data_dir})
-    write_manifest(out_dir, stage, part_ids, complete=True,
-                   extra={"snapshot": snap, "data_dir": data_dir,
-                          "snapshots": log})
+    write_manifest(out_dir, stage, snapshot=snap, data_dir=data_dir,
+                   snapshots=log)
     for name in sorted(os.listdir(data_root)):
         try:
             n = int(name.rsplit("-", 1)[1])

@@ -17,9 +17,13 @@ are one union leaf, checkpointed once (after the TYPE rows it reads)
 concurrently with the kernel job; the wide nodes union is never copied — it
 stays a lazy union of the parse nodes and that leaf.
 
-With ``out_dir`` every stage boundary is a durable parquet snapshot with
-lineage rows and a resume manifest, so any failed partition range resumes
-without recomputation.
+The graph is the same in both run modes. With ``out_dir`` the spills land
+there instead of in a temp dir, and three things are added: the ast stage
+resumes (each run parses only the docs whose ``part_id`` no committed
+``ast_rows/batch-*`` covers, and the ``ast`` manifest records the part_ids
+and batch dirs), per-partition lineage rows are appended for ast, edges,
+nodes and triples, and the triples are committed as a snapshot. Only the
+ast stage resumes; every later stage is recomputed from the ast batches.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,55 +72,25 @@ def run_pipeline(
     out_dir: str | None = None,
     n_parts: int = 32,
     with_dataflow: bool = True,
-    with_dominators: bool = True,
 ) -> CpgResult:
     stats: dict = {}
 
-    # ---- stage: ast (resumable per partition) -----------------------------
+    # ---- stage: ast (resumable per partition with out_dir) ---------------
     t0 = time.time()
+    spill = SpillDir(out_dir)
     docs = docs.withColumn("part_id", part_id_col(n_parts=n_parts))
-    if out_dir:
-        ast_dir = os.path.join(out_dir, "ast_rows")
-        manifest = read_manifest(out_dir, "ast")
-        done = set(manifest["part_ids"]) if manifest else set()
-        # committed batch dirs (snapshot semantics: "append" = a NEW batch
-        # dir + manifest flip, never an in-place append — a killed write
-        # leaves only an unreferenced dir, and resume re-parses cleanly
-        # without duplicating the torn batch's rows)
-        batch_dirs = list((manifest or {}).get("data_dirs")
-                          or ([ast_dir] if manifest else []))
-        todo_docs = docs.filter(~F.col("part_id").isin(sorted(done))) if done else docs
-        if done:
-            stats["ast_resumed_parts"] = len(done)
-        if todo_docs.limit(1).count() > 0 or not done:
-            rows_new = parse_docs(todo_docs.repartition(n_parts, "doc_id")) \
-                .withColumn("part_id", part_id_col(n_parts=n_parts))
-            batch_dir = os.path.join(ast_dir, f"batch-{len(batch_dirs) + 1:05d}")
-            rows_new.write.mode("overwrite") \
-                .partitionBy("part_id", "rowtype").parquet(batch_dir)
-            batch_dirs.append(batch_dir)
-            # lineage from the written batch, not the lazy parse (which would
-            # run again); partition discovery moves the partition columns to
-            # the end, and the row checksum hashes the columns in order
-            append_lineage(spark, out_dir,
-                           spark.read.parquet(batch_dir).select(*rows_new.columns),
-                           "ast", t0)
-            all_parts = [r[0] for r in docs.select("part_id").distinct().collect()]
-            write_manifest(out_dir, "ast", all_parts, complete=True,
-                           extra={"data_dirs": batch_dirs})
-        cpg_rows = spark.read.parquet(*batch_dirs)
-    else:
-        # columnar parse barrier: the edges stage evaluates ~10 candidate
-        # branches, each re-scanning this frame — a deserialized row cache
-        # makes every scan pay all ~38 columns plus GC churn (measured FLAT
-        # 8→32), while a parquet spill gives each branch column pruning and
-        # a vectorized scan
-        # partition the spill by rowtype: the edges stage re-scans this frame
-        # from ~10 linker branches that each want only node rows (~20% of the
-        # stream) — directory-level pruning beats a rowtype filter that every
-        # scan would otherwise have to decode 100% of rows to apply
-        spill0 = SpillDir(None)
-        # 2x-core parse fan-out: the parse is a Python-cpu-bound mapInPandas,
+    # committed batch dirs (snapshot semantics: "append" = a NEW batch dir +
+    # manifest flip, never an in-place append — a killed write leaves only
+    # an unreferenced dir, and resume re-parses cleanly without duplicating
+    # the torn batch's rows)
+    manifest = (read_manifest(out_dir, "ast") if out_dir else None) or {}
+    done = sorted(manifest.get("part_ids", []))
+    batch_dirs = list(manifest.get("data_dirs", []))
+    todo = docs.filter(~F.col("part_id").isin(done)) if done else docs
+    if done:
+        stats["ast_resumed_parts"] = len(done)
+    if not done or todo.limit(1).count() > 0:
+        # 2x-core parse fan-out: the parse is a Python-cpu-bound mapInArrow,
         # so its wall is the SLOWEST partition — at exactly one partition per
         # core a single skewed doc pack idles every other core for the tail
         # (measured ~1.5x instead of 4x at 8->32). Twice the partitions
@@ -123,9 +98,29 @@ def run_pipeline(
         # spill files.
         n_parse = max(min(n_parts, 32),
                       2 * spark.sparkContext.defaultParallelism)
-        cpg_rows = spill0.write(
-            parse_docs(docs.repartition(n_parse, "doc_id")),
-            "ast_rows", partition_by="rowtype", guard_contiguity=True)
+        rows = parse_docs(todo.repartition(n_parse, "doc_id")) \
+            .withColumn("part_id", part_id_col(n_parts=n_parts))
+        # columnar parse barrier, partitioned by rowtype: the edges stage
+        # re-scans this frame from ~10 linker branches that each want only
+        # node rows (~20% of the stream) — directory-level pruning beats a
+        # rowtype filter that every scan would otherwise decode 100% of rows
+        # to apply. Each parse task writes one file per rowtype.
+        name = f"ast_rows/batch-{len(batch_dirs) + 1:05d}"
+        batch = spill.write(rows, name, partition_by="rowtype",
+                            guard_contiguity=True)
+        batch_dirs.append(os.path.join(spill.root, name))
+        if out_dir:
+            # lineage from the written batch, not the lazy parse (which would
+            # run again); partition discovery moves rowtype to the end, and
+            # the row checksum hashes the columns in order
+            append_lineage(spark, out_dir, batch.select(*rows.columns),
+                           "ast", t0)
+            parts = {r[0] for r in batch.select("part_id").distinct().collect()}
+            write_manifest(out_dir, "ast", part_ids=sorted(parts | set(done)),
+                           data_dirs=batch_dirs)
+    # one read per batch: Spark refuses several partitioned roots in one read
+    cpg_rows = reduce(DataFrame.unionByName,
+                      [spark.read.parquet(d) for d in batch_dirs])
 
     nodes0, edges0, spans = split_rows(cpg_rows)
 
@@ -133,8 +128,6 @@ def run_pipeline(
     from .operators.dims import MAX_BROADCAST_DIM, dim_fits_hint
     from .operators.method_kernels import fused_method_kernels, type_hints
     from .operators.type_recovery import field_access_linker
-
-    spill = SpillDir(out_dir)
 
     # ---- per-kind node counts: one small job whose counts bound every
     # dimension the kernel, the vocabulary and the linkers join, so the
@@ -152,8 +145,7 @@ def run_pipeline(
     # ---- kernel job (python-heavy, scales with cores)
     def kernel_job() -> DataFrame:
         _, fits = counts_f.result()
-        k = fused_method_kernels(nodes0, fits, with_dominators=with_dominators,
-                                 with_dataflow=with_dataflow)
+        k = fused_method_kernels(nodes0, fits, with_dataflow=with_dataflow)
         return spill.write(k, "kernel_rows")
 
     # ---- vocabulary + kernel-independent edges: everything except the
@@ -238,13 +230,10 @@ def run_pipeline(
             append_lineage(spark, out_dir,
                            edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
                            "edges", t2)
-            write_manifest(out_dir, "edges", list(range(n_parts)), complete=True)
             t1 = time.time()
-            nodes = spill.write(nodes, "nodes")
             append_lineage(spark, out_dir,
                            nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
                            "base_nodes", t1)
-            write_manifest(out_dir, "base", list(range(n_parts)), complete=True)
 
         # calls that no linker resolved, from the materialized call edges
         misses = link_misses(nodes, base_call.filter(F.col("kind") == "CALL"))
@@ -255,7 +244,6 @@ def run_pipeline(
         if out_dir:
             # atomic snapshot commit: fresh snap dir + manifest-pointer flip
             triples = commit_snapshot(spark, triples, out_dir, "triples",
-                                      list(range(n_parts)),
                                       partition_by="part_id")
             append_lineage(spark, out_dir, triples, "triples", t3)
 

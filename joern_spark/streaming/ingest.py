@@ -1,11 +1,11 @@
 """Incremental triple-factory ingest: docs stream → CPG triples.
 
 ``readStream`` over a docs directory; every micro-batch runs the SAME
-``run_pipeline`` the batch path uses, appending to the materialized triples
-table with per-batch lineage rows. Spark's streaming checkpoint tracks which
-input files are consumed (exactly-once per file); the pipeline's own
-manifests track per-partition completion inside a batch — together a failed
-run resumes at file granularity without recomputing finished partitions.
+in-memory ``run_pipeline`` the batch path uses, appending to the
+materialized triples table with per-batch lineage rows. Spark's streaming
+checkpoint tracks which input files are consumed (exactly-once per file), so
+a failed run resumes at file granularity: a micro-batch that did not commit
+is run again whole.
 """
 
 from __future__ import annotations
@@ -14,12 +14,10 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..lineage import append_lineage
 from ..pipeline import run_pipeline
 from ..schema import DOCS_SCHEMA
-from ..triples import part_id_col
 
 
 def stream_triple_factory(
@@ -28,7 +26,6 @@ def stream_triple_factory(
     out_dir: str,
     n_parts: int = 8,
     available_now: bool = True,
-    with_dataflow: bool = True,
 ):
     """Start (and with ``available_now`` drain) the incremental ingest.
 
@@ -42,17 +39,12 @@ def stream_triple_factory(
         if batch_df.isEmpty():
             return
         t0 = time.time()
-        res = run_pipeline(
-            spark, batch_df, out_dir=None, n_parts=n_parts,
-            with_dataflow=with_dataflow,
-        )
+        res = run_pipeline(spark, batch_df, n_parts=n_parts)
         (res.triples.write.mode("append").partitionBy("part_id")
             .parquet(os.path.join(out_dir, "triples_stream")))
-        append_lineage(
-            spark, out_dir,
-            res.triples.withColumn("part_id", part_id_col(n_parts=n_parts)),
-            f"stream_epoch_{epoch_id}", t0,
-        )
+        # triples already carry part_id (build_triples)
+        append_lineage(spark, out_dir, res.triples,
+                       f"stream_epoch_{epoch_id}", t0)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

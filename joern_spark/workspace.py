@@ -83,8 +83,7 @@ class Workspace:
         spark = res.nodes.sparkSession
         snap_ids: dict[str, int] = {}
         for stage in _RESULT_STAGES:
-            commit_snapshot(spark, getattr(res, stage), pdir, stage,
-                            part_ids=[0])
+            commit_snapshot(spark, getattr(res, stage), pdir, stage)
             snap_ids[stage] = int(read_manifest(pdir, stage)["snapshot"])
         reg = self._read_registry()
         prev = reg["projects"].get(name, {})

@@ -75,8 +75,7 @@ def test_workspace_versions(spark, cpg, tmp_path):
     # third snapshot but no version entry appears — open() must keep
     # serving the consistent second version, not mix snap-3 nodes with
     # snap-2 edges
-    commit_snapshot(spark, cpg.nodes.limit(1), ws.project_dir("p"),
-                    "nodes", part_ids=[0])
+    commit_snapshot(spark, cpg.nodes.limit(1), ws.project_dir("p"), "nodes")
     reg = json.load(open(ws._registry_path))
     assert len(reg["projects"]["p"]["versions"]) == 2
     res = ws.open(spark, "p")

@@ -8,7 +8,7 @@ test.c (crossing one call boundary, k-limit semantics of Engine.scala:322).
 
 import pytest
 
-from joern_spark.dataflow import reachable_by, reachable_by_flows
+from joern_spark.dataflow import FlowEngine, reachable_by_flows
 from joern_spark.query import Cpg
 from tests.conftest import F1, F2, F3
 
@@ -22,7 +22,7 @@ def test_param_reaches_return(cpg, q):
     sources = q.parameter("^p0$").ids()
     ret_df = q.method_return().to_df()
     flow_ret = ret_df.filter(ret_df["doc_id"] == F1).select("node_id")
-    hits = reachable_by(cpg.nodes, cpg.edges, flow_ret, sources)
+    hits = FlowEngine(cpg.nodes, cpg.edges).flow(flow_ret, sources)
     assert hits.count() >= 1
 
 
@@ -34,7 +34,7 @@ def test_identifier_chain_reaches_return(cpg, q, g):
     spark = cpg.nodes.sparkSession
     sources = spark.createDataFrame([(int(i),) for i in a_ids.index], "node_id long")
     sinks = spark.createDataFrame([(int(i),) for i in ret.index], "node_id long")
-    hits = reachable_by(cpg.nodes, cpg.edges, sinks, sources)
+    hits = FlowEngine(cpg.nodes, cpg.edges).flow(sinks, sources)
     assert hits.count() >= 1
 
 
@@ -47,7 +47,7 @@ def test_interprocedural_literal_to_callee(cpg, g):
     spark = cpg.nodes.sparkSession
     sources = spark.createDataFrame([(int(i),) for i in lit.index], "node_id long")
     sinks = spark.createDataFrame([(int(i),) for i in x_arg.index], "node_id long")
-    hits = reachable_by(cpg.nodes, cpg.edges, sinks, sources)
+    hits = FlowEngine(cpg.nodes, cpg.edges).flow(sinks, sources)
     assert hits.count() >= 1
 
 
@@ -59,7 +59,8 @@ def test_k_limit_blocks_deep_flows(cpg, g):
     spark = cpg.nodes.sparkSession
     sources = spark.createDataFrame([(int(i),) for i in lit.index], "node_id long")
     sinks = spark.createDataFrame([(int(i),) for i in x_arg.index], "node_id long")
-    hits = reachable_by(cpg.nodes, cpg.edges, sinks, sources, max_call_depth=0)
+    hits = FlowEngine(cpg.nodes, cpg.edges).flow(sinks, sources,
+                                                 max_call_depth=0)
     assert hits.count() == 0
 
 
@@ -168,12 +169,10 @@ def test_realizable_paths_no_cross_caller_flow(two_caller_cpg):
 
 
 def test_flow_engine_matches_reachable_by(cpg, q, monkeypatch):
-    """The bundle's shared engine (``Cpg.flow``) returns the exact
-    (source_id, sink_id) set of a one-off reachable_by call, under both of
-    ``frontier.expand``'s plans, including the k-limit at depth 0. The
-    reference side always runs the checkpointed loop, so the broadcast walk
-    is checked against the other plan."""
-    from joern_spark.dataflow import FlowEngine
+    """``FlowEngine.flow`` (``reachableBy``) returns the same
+    (source_id, sink_id) set under both of ``frontier.expand``'s plans,
+    including the k-limit at depth 0: the broadcast walk of one engine
+    against the checkpointed loop of an engine built over the budget."""
     from joern_spark.operators import dims
 
     sinks = q.call().argument().ids()
@@ -188,10 +187,7 @@ def test_flow_engine_matches_reachable_by(cpg, q, monkeypatch):
     monkeypatch.setattr(dims, "MAX_BROADCAST_DIM", 0)
     loop_eng = FlowEngine(cpg.nodes, cpg.edges)
     for d in (4, 0):
-        want = pairs(reachable_by(cpg.nodes, cpg.edges, sinks, sources,
-                                  max_call_depth=d))
-        assert got[d] == want, d
-        assert pairs(loop_eng.flow(sinks, sources, max_call_depth=d)) == want, d
+        assert pairs(loop_eng.flow(sinks, sources, max_call_depth=d)) == got[d], d
     assert got[4]  # non-vacuous on the fixture corpus
     assert len(got[0]) < len(got[4])  # depth 0 takes no interprocedural hop
 

@@ -2,7 +2,10 @@
 with per-partition lineage + metrics).
 """
 
+import json
+import os
 import shutil
+from collections import Counter
 
 import duckdb
 import pytest
@@ -19,15 +22,37 @@ def out_dir(tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _n_parse(spark, n_parts):
+    """The pipeline's parse fan-out: tasks of one ast batch."""
+    return max(min(n_parts, 32), 2 * spark.sparkContext.defaultParallelism)
+
+
+def _parquet_files(d):
+    return [os.path.join(p, f) for p, _dirs, files in os.walk(d)
+            for f in files if f.endswith(".parquet")]
+
+
 def test_materialize_resume_and_lineage(spark, out_dir):
     docs = fixture_docs_df(spark)
     res1 = run_pipeline(spark, docs, out_dir=out_dir, n_parts=4)
     n1 = res1.triples.count()
     assert res1.stats.get("ast_resumed_parts", 0) == 0
 
+    # one file per (parse task, rowtype) in a batch: each task writes only
+    # its own rowtype files, never one file per part_id directory
+    batch = os.path.join(out_dir, "ast_rows", "batch-00001")
+    rowtypes = {os.path.basename(os.path.dirname(f))
+                for f in _parquet_files(batch)}
+    assert all(r.startswith("rowtype=") for r in rowtypes)
+    assert 0 < len(_parquet_files(batch)) <= _n_parse(spark, 4) * len(rowtypes)
+    # the graph is not copied: no nodes spill, and only the ast stage and
+    # the triples snapshot keep a manifest
+    assert not os.path.exists(os.path.join(out_dir, "nodes"))
+    assert sorted(os.listdir(os.path.join(out_dir, "_manifests"))) == \
+        ["ast.json", "triples.json"]
+
     # second run over the same out_dir must resume every recorded partition
     # (empty hash partitions never enter the manifest)
-    import json
     with open(f"{out_dir}/_manifests/ast.json") as f:
         recorded = len(json.load(f)["part_ids"])
     res2 = run_pipeline(spark, docs, out_dir=out_dir, n_parts=4)
@@ -56,14 +81,44 @@ def test_resumed_output_identical(spark, cpg, out_dir):
     assert mem_triples == mat_triples
 
 
+def test_resume_parses_only_missing_parts(spark, cpg, tmp_path):
+    """A manifest that lacks two part_ids, as a run over fewer docs leaves
+    it: the next run parses exactly those parts into a second batch, reads
+    both batches, and yields the in-memory run's triples, row for row."""
+    from joern_spark.lineage import read_manifest
+    from joern_spark.triples import part_id_col
+
+    d = str(tmp_path / "partial")
+    docs = fixture_docs_df(spark)
+    parts = sorted(r[0] for r in docs.select(part_id_col(n_parts=4))
+                   .distinct().collect())
+    missing = parts[:2]
+    run_pipeline(spark, docs.filter(~part_id_col(n_parts=4).isin(missing)),
+                 out_dir=d, n_parts=4)
+    assert read_manifest(d, "ast")["part_ids"] == parts[2:]
+
+    res = run_pipeline(spark, docs, out_dir=d, n_parts=4)
+    assert res.stats["ast_resumed_parts"] == len(parts) - 2
+    m = read_manifest(d, "ast")
+    assert m["part_ids"] == parts
+    assert [os.path.basename(p) for p in m["data_dirs"]] == \
+        ["batch-00001", "batch-00002"]
+    batch2 = spark.read.parquet(os.path.join(d, "ast_rows", "batch-00002"))
+    assert sorted(r[0] for r in batch2.select("part_id").distinct().collect()) \
+        == missing
+    assert len(_parquet_files(m["data_dirs"][1])) <= \
+        _n_parse(spark, 4) * batch2.select("rowtype").distinct().count()
+
+    cols = ["subj", "pred", "obj", "doc_id", "part_id"]
+    assert Counter(tuple(r) for r in res.triples.select(*cols).collect()) == \
+        Counter(tuple(r) for r in cpg.triples.select(*cols).collect())
+    assert res.triples.filter(F.col("part_id").isin(missing)).count() > 0
+
+
 def test_snapshot_commit_survives_torn_write(spark, out_dir):
     """Iceberg-style commit protocol: a writer killed mid-snapshot leaves an
     unreferenced snap dir that readers never observe (the manifest pointer
     only flips after a complete write)."""
-    import json
-    import os
-
-    from joern_spark.corpus import fixture_docs_df
     from joern_spark.lineage import read_manifest, read_snapshot
 
     docs = fixture_docs_df(spark)
@@ -112,8 +167,7 @@ def test_snapshot_time_travel(spark, tmp_path):
     for version in (1, 2, 3):
         df = spark.range(version * 10).select(
             F.col("id"), F.lit(version).alias("v"))
-        commit_snapshot(spark, df, d, "tbl", part_ids=[0],
-                        keep_snapshots=2)
+        commit_snapshot(spark, df, d, "tbl", keep_snapshots=2)
 
     log = snapshot_history(d, "tbl")
     assert [s["id"] for s in log] == [1, 2, 3]
