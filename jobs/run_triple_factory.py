@@ -8,7 +8,8 @@ Usage (north-rule launch shape — BASELINE.json):
 
 With --out-dir the run builds the same graph as without it, keeps its stage
 spills there, appends per-partition lineage rows and commits the triples as
-a snapshot. Only the ast stage resumes: its manifest records the parsed
+a snapshot partitioned by part_id, one parquet file per part_id (--n-parts
+files). Only the ast stage resumes: its manifest records the parsed
 part_ids, so re-running with the same --out-dir parses only the docs of the
 part ranges no committed batch covers (kill the job mid-run to test) and
 recomputes every later stage from the ast batches.

@@ -22,7 +22,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,6 +49,20 @@ def write_manifest(out_dir: str, stage: str, **fields) -> None:
     os.replace(tmp, p)
 
 
+def clustered_writer(df: DataFrame, partition_by: str | None,
+                     mode: str) -> DataFrameWriter:
+    """The writer of a table laid out by ``partition_by``: the rows are first
+    hash-shuffled on that column, so each value's rows meet in one task and
+    land in ONE file of its ``<col>=<value>`` directory. Written unclustered,
+    every input task would write a file into every value's directory
+    (n_tasks × n_values small files, each paying its own footer and
+    dictionaries). Without ``partition_by`` the frame is written as it is."""
+    if not partition_by:
+        return df.write.mode(mode)
+    return (df.repartition(partition_by).write.mode(mode)
+            .partitionBy(partition_by))
+
+
 def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
                     stage: str, partition_by: str | None = None,
                     keep_snapshots: int = 2) -> DataFrame:
@@ -65,15 +79,18 @@ def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
     append-only-then-flip). Older snapshots beyond ``keep_snapshots`` are
     retired after the flip, so a reader that resolved the previous pointer
     mid-flight still finds its files.
+
+    Layout: with ``partition_by`` the snapshot holds one file per partition
+    value (``clustered_writer``), and the write runs at most one task per
+    value. For the triples table that value is ``part_id``, so ``n_parts``
+    sizes both the resume unit and the file. Without it the frame's own
+    partitions are written, one file each.
     """
     data_root = os.path.join(out_dir, f"{stage}_data")
     prev = read_manifest(out_dir, stage) or {}
     snap = int(prev.get("snapshot", 0)) + 1
     data_dir = os.path.join(data_root, f"snap-{snap:05d}")
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(data_dir)
+    clustered_writer(df, partition_by, "overwrite").parquet(data_dir)
     # snapshot log: Iceberg's metadata.json keeps every committed snapshot's
     # (id, timestamp) even after its data files are expired — that log is
     # what VERSION/TIMESTAMP AS OF resolves against. Same here: the manifest

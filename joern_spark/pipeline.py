@@ -22,8 +22,10 @@ there instead of in a temp dir, and three things are added: the ast stage
 resumes (each run parses only the docs whose ``part_id`` no committed
 ``ast_rows/batch-*`` covers, and the ``ast`` manifest records the part_ids
 and batch dirs), per-partition lineage rows are appended for ast, edges,
-nodes and triples, and the triples are committed as a snapshot. Only the
-ast stage resumes; every later stage is recomputed from the ast batches.
+nodes and triples, and the triples are committed as a snapshot partitioned
+by ``part_id`` with one parquet file per part_id (n_parts files, whatever
+the width of the stages before it). Only the ast stage resumes; every later
+stage is recomputed from the ast batches.
 """
 
 from __future__ import annotations
@@ -155,6 +157,7 @@ def run_pipeline(
     # long Python stage (the kernel's JVM task threads mostly wait on worker
     # sockets; FAIR scheduling shares the slots)
     def base_job():
+        t1 = time.time()  # the base_nodes stage: vocabulary + nodes union
         counts, kernel_fits = counts_f.result()
         # ONE checkpointed leaf for the six vocabulary frames: `nodes` is
         # referenced ~12 times across the candidate pool / linkers, and every
@@ -199,7 +202,7 @@ def run_pipeline(
                 "call_candidates"))
             base_norec = base_norec_f.result()
             cand = cand_f.result()
-        return nodes, fits, base_norec, cand
+        return nodes, fits, base_norec, cand, t1
 
     # 3 top-level jobs + base_job's 2 nested spill submissions (nested
     # submits need free workers or they queue behind their own parent)
@@ -208,7 +211,7 @@ def run_pipeline(
         kernel_f = pool.submit(kernel_job)
         base_f = pool.submit(base_job)
         kernel_out = kernel_f.result()
-        nodes, fits, base_norec, cand = base_f.result()
+        nodes, fits, base_norec, cand, t1 = base_f.result()
 
     # recovery events came out of the kernel as _TYPE_HINT rows
     recovered = type_hints(kernel_out)
@@ -230,7 +233,6 @@ def run_pipeline(
             append_lineage(spark, out_dir,
                            edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
                            "edges", t2)
-            t1 = time.time()
             append_lineage(spark, out_dir,
                            nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
                            "base_nodes", t1)

@@ -15,7 +15,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..lineage import append_lineage
+from ..lineage import append_lineage, clustered_writer
 from ..pipeline import run_pipeline
 from ..schema import DOCS_SCHEMA
 
@@ -30,8 +30,9 @@ def stream_triple_factory(
     """Start (and with ``available_now`` drain) the incremental ingest.
 
     Returns the StreamingQuery. Triples accumulate under
-    ``{out_dir}/triples_stream`` partitioned by part_id; lineage rows are
-    stamped per micro-batch with the epoch id in the stage name.
+    ``{out_dir}/triples_stream`` partitioned by part_id, one file per
+    part_id per micro-batch; lineage rows are stamped per micro-batch with
+    the epoch id in the stage name.
     """
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_dir)
 
@@ -40,8 +41,8 @@ def stream_triple_factory(
             return
         t0 = time.time()
         res = run_pipeline(spark, batch_df, n_parts=n_parts)
-        (res.triples.write.mode("append").partitionBy("part_id")
-            .parquet(os.path.join(out_dir, "triples_stream")))
+        clustered_writer(res.triples, "part_id", "append") \
+            .parquet(os.path.join(out_dir, "triples_stream"))
         # triples already carry part_id (build_triples)
         append_lineage(spark, out_dir, res.triples,
                        f"stream_epoch_{epoch_id}", t0)

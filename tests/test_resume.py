@@ -33,6 +33,8 @@ def _parquet_files(d):
 
 
 def test_materialize_resume_and_lineage(spark, out_dir):
+    from joern_spark.lineage import read_manifest
+
     docs = fixture_docs_df(spark)
     res1 = run_pipeline(spark, docs, out_dir=out_dir, n_parts=4)
     n1 = res1.triples.count()
@@ -50,6 +52,13 @@ def test_materialize_resume_and_lineage(spark, out_dir):
     assert not os.path.exists(os.path.join(out_dir, "nodes"))
     assert sorted(os.listdir(os.path.join(out_dir, "_manifests"))) == \
         ["ast.json", "triples.json"]
+    # the triples snapshot is clustered by its partition key: one file per
+    # part_id directory, not one per (input task, part_id)
+    snap = read_manifest(out_dir, "triples")["data_dir"]
+    part_dirs = [os.path.join(snap, p) for p in os.listdir(snap)
+                 if p.startswith("part_id=")]
+    assert part_dirs
+    assert all(len(_parquet_files(p)) == 1 for p in part_dirs)
 
     # second run over the same out_dir must resume every recorded partition
     # (empty hash partitions never enter the manifest)
@@ -79,6 +88,22 @@ def test_resumed_output_identical(spark, cpg, out_dir):
     mat = run_pipeline(spark, docs, out_dir=out_dir, n_parts=4)
     mat_triples = {tuple(r) for r in mat.triples.select("subj", "pred", "obj").collect()}
     assert mem_triples == mat_triples
+
+
+def test_triples_lineage_matches_in_memory_run(spark, cpg, out_dir):
+    """Every durable run's ``triples`` lineage rows equal the lineage of the
+    session's in-memory triples, per part_id, in count and checksum: the
+    snapshot's clustering shuffle moves no row across parts."""
+    from joern_spark.lineage import lineage_rows
+
+    run_pipeline(spark, fixture_docs_df(spark), out_dir=out_dir, n_parts=4)
+    got = {tuple(r) for r in spark.read.parquet(f"{out_dir}/lineage")
+           .filter(F.col("stage") == "triples")
+           .select("part_id", "rows_out", "checksum").collect()}
+    want = {tuple(r) for r in lineage_rows(cpg.triples, "triples", 0)
+            .select("part_id", "rows_out", "checksum").collect()}
+    assert len(want) > 1
+    assert got == want
 
 
 def test_resume_parses_only_missing_parts(spark, cpg, tmp_path):

@@ -66,6 +66,13 @@ def test_incremental_ingest_matches_batch(spark, stream_dirs):
     s = {tuple(r) for r in streamed.select("subj", "pred", "obj").collect()}
     b = {tuple(r) for r in batch.select("subj", "pred", "obj").collect()}
     assert s == b
+    # each micro-batch writes one file per part_id it holds
+    epochs = (spark.read.parquet(f"{out_dir}/lineage")
+              .filter(F.col("stage").startswith("stream_epoch_"))
+              .select("stage").distinct().count())
+    files = [f for _p, _d, fs in os.walk(f"{out_dir}/triples_stream")
+             for f in fs if f.endswith(".parquet")]
+    assert 0 < len(files) <= 4 * epochs
 
     # restart with no new files → no duplicate work, no new rows
     n_before = streamed.count()
