@@ -185,7 +185,7 @@ def cpg_type_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from joern_spark.operators.callgraph import inheritance_closure
 
     res = _cpg(spark, sf_dir)
-    return inheritance_closure(res.nodes, res.edges).select(
+    return inheritance_closure(res.nodes, res.edges, fits=False).select(
         F.col("sub").alias("sub_full_name"), F.col("sup").alias("sup_full_name"))
 
 

@@ -102,7 +102,7 @@ def type_decl_stubs(types: DataFrame, nodes: DataFrame, fits: bool) -> DataFrame
         dereference(F.col("full_name")).alias("full_name")
     ).distinct()
     missing = types.select("full_name").join(
-        budgeted_broadcast(decls, fits=fits), "full_name", "left_anti")
+        budgeted_broadcast(decls, fits), "full_name", "left_anti")
     fn = F.col("full_name")
     return _node_select(
         missing, node_id=stub_id_col("TYPE_DECL", fn), kind="TYPE_DECL",
@@ -137,7 +137,7 @@ def method_stubs(nodes: DataFrame, edges: DataFrame, fits: bool) -> DataFrame:
     methods = nodes.filter(F.col("kind") == "METHOD").select(
         F.col("full_name").alias("c_full")
     ).distinct()
-    missing = calls.join(budgeted_broadcast(methods, fits=fits),
+    missing = calls.join(budgeted_broadcast(methods, fits),
                          "c_full", "left_anti")
 
     # pure-JVM stub synthesis (round-3 profile: the Python generator here was
@@ -204,13 +204,13 @@ def dependency_pass(nodes: DataFrame) -> DataFrame:
         name=dn, full_name=dn, code=dn, is_external=True)
 
 
-def imports_linker(nodes: DataFrame, deps: DataFrame) -> DataFrame:
+def imports_linker(nodes: DataFrame, deps: DataFrame, *, fits: bool) -> DataFrame:
     """IMPORTS edges IMPORT → DEPENDENCY (jssrc2cpg
     ``AstForDeclarationsCreator.scala:333`` ``EdgeTypes.IMPORTS``).
 
     The dependency dim is vocabulary-sized (one row per distinct imported
-    name), so the join broadcasts under the budget and degrades to a shuffle
-    join above it."""
+    name), so the join broadcasts when ``fits`` and degrades to a shuffle
+    join otherwise."""
     imports = nodes.filter(F.col("kind") == "IMPORT").select(
         F.col("node_id").alias("src"), F.col("name").alias("dep_name"),
         "doc_id", "method_id",
@@ -218,7 +218,7 @@ def imports_linker(nodes: DataFrame, deps: DataFrame) -> DataFrame:
     dep_dim = deps.select(F.col("name").alias("dep_name"),
                           F.col("node_id").alias("dep_id"))
     return (
-        imports.join(budgeted_broadcast(dep_dim), "dep_name")
+        imports.join(budgeted_broadcast(dep_dim, fits), "dep_name")
         .select(
             "src", F.col("dep_id").alias("dst"),
             F.lit("IMPORTS").alias("kind"), F.lit("").alias("variable"),
@@ -292,15 +292,16 @@ def vocabulary(nodes: DataFrame, edges: DataFrame, fits: bool) -> DataFrame:
     )
 
 
-def vocabulary_edges(vocab: DataFrame, nodes: DataFrame) -> DataFrame:
+def vocabulary_edges(vocab: DataFrame, nodes: DataFrame, *,
+                     fits: bool) -> DataFrame:
     """The edges of the :func:`vocabulary` rows:
 
     - AST ``parent_id → node_id`` for every row with a parent (the method
       stubs' children and the paramOuts; TYPE, TYPE_DECL, NAMESPACE and
       DEPENDENCY rows have none);
     - PARAMETER_LINK paramIn → paramOut, on the same (parent, order);
-    - REF NAMESPACE_BLOCK → NAMESPACE, by name (budgeted broadcast of the
-      NAMESPACE dim).
+    - REF NAMESPACE_BLOCK → NAMESPACE, by name (the NAMESPACE dim
+      broadcasts when ``fits``).
     """
     ast = vocab.filter(F.col("parent_id").isNotNull()).select(
         F.col("parent_id").alias("src"), F.col("node_id").alias("dst"),
@@ -325,7 +326,7 @@ def vocabulary_edges(vocab: DataFrame, nodes: DataFrame) -> DataFrame:
         F.col("name").alias("ns_name"), F.col("node_id").alias("ns_id"))
     ns_ref = (
         nodes.filter(F.col("kind") == "NAMESPACE_BLOCK")
-        .join(budgeted_broadcast(ns_dim), F.col("name") == F.col("ns_name"))
+        .join(budgeted_broadcast(ns_dim, fits), F.col("name") == F.col("ns_name"))
         .select(
             F.col("node_id").alias("src"), F.col("ns_id").alias("dst"),
             F.lit("REF").alias("kind"), F.lit("").alias("variable"),
@@ -335,15 +336,16 @@ def vocabulary_edges(vocab: DataFrame, nodes: DataFrame) -> DataFrame:
     return ast.unionByName(param_link).unionByName(ns_ref)
 
 
-def type_ref_pass(types: DataFrame, nodes: DataFrame) -> DataFrame:
-    """TypeRefPass: REF edges TYPE → TYPE_DECL by full_name (broadcast join)."""
+def type_ref_pass(types: DataFrame, nodes: DataFrame, *, fits: bool) -> DataFrame:
+    """TypeRefPass: REF edges TYPE → TYPE_DECL by full_name (the TYPE_DECL
+    dim broadcasts when ``fits``)."""
     decls = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         dereference(F.col("full_name")).alias("fn"),
         F.col("node_id").alias("decl_id"), "doc_id",
     )
     return (
         types.select(F.col("full_name").alias("fn"), F.col("node_id").alias("type_id"))
-        .join(budgeted_broadcast(decls), "fn")
+        .join(budgeted_broadcast(decls, fits), "fn")
         .select(
             F.col("type_id").alias("src"), F.col("decl_id").alias("dst"),
             F.lit("REF").alias("kind"), F.lit("").alias("variable"),
@@ -360,11 +362,11 @@ _EVAL_KINDS = [
 ]
 
 
-def eval_type_pass(nodes: DataFrame, types: DataFrame) -> DataFrame:
+def eval_type_pass(nodes: DataFrame, types: DataFrame, *, fits: bool) -> DataFrame:
     """TypeEvalPass: EVAL_TYPE node → TYPE via dereferenced TYPE_FULL_NAME.
 
     linkToSingle pattern (``LinkingUtil.scala:42-100``): equi-join against the
-    broadcast TYPE dimension.
+    TYPE dimension, broadcast when ``fits``.
     """
     src = nodes.filter(
         F.col("kind").isin(_EVAL_KINDS)
@@ -375,7 +377,7 @@ def eval_type_pass(nodes: DataFrame, types: DataFrame) -> DataFrame:
         "doc_id", "method_id",
     )
     dim = types.select(F.col("full_name").alias("fn"), F.col("node_id").alias("type_id"))
-    return src.join(budgeted_broadcast(dim), "fn").select(
+    return src.join(budgeted_broadcast(dim, fits), "fn").select(
         F.col("src_id").alias("src"), F.col("type_id").alias("dst"),
         F.lit("EVAL_TYPE").alias("kind"), F.lit("").alias("variable"),
         "doc_id", "method_id",

@@ -42,21 +42,6 @@ def _method_dim(nodes: DataFrame) -> DataFrame:
     )
 
 
-def static_call_linker(nodes: DataFrame) -> DataFrame:
-    """CALL edges for STATIC_DISPATCH / INLINED calls.
-
-    The METHOD dimension is a budgeted broadcast: while it fits, a map-side
-    join with no shuffle of the skewed fact side (hot callee names like
-    printf/malloc); over budget, a shuffle join whose hot keys AQE's
-    skew-join splits.
-    """
-    return _static_candidates(nodes).select(
-        "src", "dst",
-        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-        "doc_id", "method_id",
-    )
-
-
 def _static_calls(nodes: DataFrame, id_alias: str = "call_id") -> DataFrame:
     """Static-dispatch calls projection — the ONE definition of which calls
     the static linker considers, shared by candidate generation and the
@@ -82,10 +67,14 @@ def _sig_conjunct():
     )
 
 
-def _static_candidates(nodes: DataFrame) -> DataFrame:
-    """Static-link candidate rows (src, dst, doc_id, method_id, m_external)."""
+def _static_candidates(nodes: DataFrame, fits: bool) -> DataFrame:
+    """Static-link candidate rows (src, dst, doc_id, method_id, m_external).
+
+    While the METHOD dim ``fits``, a map-side join with no shuffle of the
+    skewed fact side (hot callee names like printf/malloc); otherwise a
+    shuffle join whose hot keys AQE's skew-join splits."""
     joined = _static_calls(nodes).join(
-        budgeted_broadcast(_method_dim(nodes)), "m_full"
+        budgeted_broadcast(_method_dim(nodes), fits), "m_full"
     ).filter(_sig_conjunct())
     return joined.select(
         F.col("call_id").alias("src"), F.col("m_id").alias("dst"),
@@ -93,7 +82,7 @@ def _static_candidates(nodes: DataFrame) -> DataFrame:
     )
 
 
-def _static_resolved(nodes: DataFrame) -> DataFrame:
+def _static_resolved(nodes: DataFrame, fits: bool) -> DataFrame:
     """Call ids (as ``src``) that the static linker WILL resolve — the same
     join key + signature conjunct as :func:`_static_candidates`, but as a
     left-semi probe against the broadcast METHOD dim: one map-side pass that
@@ -107,13 +96,13 @@ def _static_resolved(nodes: DataFrame) -> DataFrame:
     )
     methods = _method_dim(nodes).select("m_full", "m_sig")
     return calls.join(
-        budgeted_broadcast(methods),
+        budgeted_broadcast(methods, fits),
         (F.col("c_full") == F.col("m_full")) & _sig_conjunct(),
         "left_semi",
     ).select("src")
 
 
-def method_ref_linker(nodes: DataFrame) -> DataFrame:
+def method_ref_linker(nodes: DataFrame, *, fits: bool) -> DataFrame:
     """REF edges METHOD_REF → METHOD by method full_name.
 
     Reference: ``x2cpg/.../base/MethodRefLinker.scala:12-29`` (linkToSingle on
@@ -128,7 +117,7 @@ def method_ref_linker(nodes: DataFrame) -> DataFrame:
     )
     methods = _method_dim(nodes)
     return (
-        refs.join(budgeted_broadcast(methods), "m_full")
+        refs.join(budgeted_broadcast(methods, fits), "m_full")
         .select(
             F.col("ref_id").alias("src"), F.col("m_id").alias("dst"),
             F.lit("REF").alias("kind"), F.lit("").alias("variable"),
@@ -137,13 +126,14 @@ def method_ref_linker(nodes: DataFrame) -> DataFrame:
     )
 
 
-def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def inheritance_closure(nodes: DataFrame, edges: DataFrame, *,
+                        fits: bool) -> DataFrame:
     """Transitive subclass→superclass pairs over INHERITS_FROM.
 
     Returns (sub, sup) full names, including the reflexive pair.
     ``frontier.expand`` keyed by ``sub``: rounds = class-hierarchy depth,
     which is small even at web scale; each round is an equi-join on the
-    closure frontier.
+    closure frontier. The TYPE dim broadcasts when ``fits``.
     """
     decls = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("decl_id"), F.col("full_name").alias("decl_full")
@@ -154,7 +144,7 @@ def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     base = (
         edges.filter(F.col("kind") == "INHERITS_FROM")
         .join(decls, F.col("src") == F.col("decl_id"))
-        .join(budgeted_broadcast(types), F.col("dst") == F.col("type_id"))
+        .join(budgeted_broadcast(types, fits), F.col("dst") == F.col("type_id"))
         .select(F.col("decl_full").alias("sub"), F.col("type_full").alias("sup"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -169,18 +159,15 @@ def inheritance_closure(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return expand(seed, step, ["sub"]).select("sub", F.col("node_id").alias("sup"))
 
 
-def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
+def _dynamic_candidates(nodes: DataFrame, edges: DataFrame,
+                        fits: bool) -> DataFrame:
     """CHA candidate set for DYNAMIC_DISPATCH calls: (src, dst, doc_id,
-    method_id, m_external) distinct rows, NO internal-preference pruning —
-    or None when the corpus has no dynamic dispatch (C-only inputs; the
-    reference early-exits the same way, ``DynamicCallLinker.scala:52-55``)."""
+    method_id, m_external) distinct rows, NO internal-preference pruning;
+    empty when the corpus has no dynamic dispatch (C-only inputs)."""
     calls = nodes.filter(
         (F.col("kind") == "CALL") & (F.col("dispatch_type") == "DYNAMIC_DISPATCH")
         & F.col("full_name").contains(".")
-    )
-    if calls.limit(1).count() == 0:
-        return None
-    calls = calls.select(
+    ).select(
         F.col("node_id").alias("call_id"),
         F.col("full_name").alias("c_full"),
         F.col("name").alias("c_name"),
@@ -190,16 +177,16 @@ def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
     methods = _method_dim(nodes).withColumn(
         "m_class", F.expr("substring_index(m_full, '.', 1)")
     )
-    closure = inheritance_closure(nodes, edges)
+    closure = inheritance_closure(nodes, edges, fits=fits)
 
     # subclass closure: recv_type → every sub where sub inherits recv
     subclasses = closure.select(
         F.col("sup").alias("recv_type"), F.col("sub").alias("impl_class")
     )
     down = (
-        calls.join(budgeted_broadcast(subclasses), "recv_type")
+        calls.join(budgeted_broadcast(subclasses, fits), "recv_type")
         .join(
-            budgeted_broadcast(methods),
+            budgeted_broadcast(methods, fits),
             (F.col("impl_class") == F.col("m_class"))
             & (F.col("c_name") == F.col("m_name")),
         )
@@ -211,9 +198,9 @@ def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
     )
     up = (
         calls.join(resolved_ids, "call_id", "left_anti")
-        .join(budgeted_broadcast(supers), "recv_type")
+        .join(budgeted_broadcast(supers, fits), "recv_type")
         .join(
-            budgeted_broadcast(methods),
+            budgeted_broadcast(methods, fits),
             (F.col("impl_class") == F.col("m_class"))
             & (F.col("c_name") == F.col("m_name")),
         )
@@ -226,7 +213,8 @@ def _dynamic_candidates(nodes: DataFrame, edges: DataFrame) -> DataFrame | None:
     )
 
 
-def _naive_candidates(nodes: DataFrame, resolved: DataFrame) -> DataFrame:
+def _naive_candidates(nodes: DataFrame, resolved: DataFrame,
+                      fits: bool) -> DataFrame:
     """Bare-name candidates for non-operator calls that ``resolved`` does not
     list.
 
@@ -246,7 +234,7 @@ def _naive_candidates(nodes: DataFrame, resolved: DataFrame) -> DataFrame:
     ).join(resolved.select(F.col("src").alias("call_id")), "call_id",
            "left_anti")
     methods = _method_dim(nodes).filter(~F.col("m_name").startswith("<operator>"))
-    return calls.join(budgeted_broadcast(methods), "m_name").select(
+    return calls.join(budgeted_broadcast(methods, fits), "m_name").select(
         F.col("call_id").alias("src"), F.col("m_id").alias("dst"),
         "doc_id", "method_id", "m_external",
     )
@@ -258,8 +246,8 @@ def _rank(df: DataFrame, r: int) -> DataFrame:
                      F.lit(r).alias("rank"))
 
 
-def candidate_pool(nodes: DataFrame, edges: DataFrame,
-                   barrier: bool | None = None) -> DataFrame:
+def candidate_pool(nodes: DataFrame, edges: DataFrame, *, fits: bool,
+                   barrier: bool = False) -> DataFrame:
     """The kernel-independent candidate ranks (static=0, CHA=1, naive=3) as
     one frame — the pipeline materializes this concurrently with the fused
     kernel (whose output only the rank-2 hint candidates need), hiding the
@@ -274,8 +262,9 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     over the pruned pool and keeps row-for-row identical output (a pruned
     naive row's src has f_r01 == 1, killing every rank-3 branch). CHA
     external stubs stay in the pool: :func:`link_calls` drops them when the
-    call has an internal CHA candidate or a hint link."""
-    dyn = _dynamic_candidates(nodes, edges)
+    call has an internal CHA candidate or a hint link. Every dim join
+    broadcasts when ``fits``."""
+    dyn = _dynamic_candidates(nodes, edges, fits)
     # The naive anti-join only needs set MEMBERSHIP of resolved call ids, not
     # the candidate rows — so the build side is a broadcast SEMI-join probe
     # (calls that match any method on the static key), never the full
@@ -289,14 +278,11 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     # corpus scale (caller passes barrier=True on CALL count) the CHA
     # candidate frame — a small fraction of all calls — is checkpointed
     # narrow instead of the whole pool.
-    if dyn is not None and barrier:
+    if barrier:
         dyn = dyn.localCheckpoint(eager=True)
-    resolved = _static_resolved(nodes)
-    if dyn is not None:
-        resolved = resolved.unionByName(dyn.select("src"))
-    cand = _rank(_static_candidates(nodes), 0)
-    if dyn is not None:
-        cand = cand.unionByName(_rank(dyn, 1))
+    resolved = _static_resolved(nodes, fits).unionByName(dyn.select("src"))
+    cand = _rank(_static_candidates(nodes, fits), 0) \
+        .unionByName(_rank(dyn, 1))
     # leftover-only naive: anti-join the static/CHA-resolved call ids before
     # the quadratic name join (the k²-per-name rows the arbitration would
     # drop anyway are never produced; NaiveCallLinker.scala:13-28 leftover
@@ -304,11 +290,11 @@ def candidate_pool(nodes: DataFrame, edges: DataFrame,
     # arbitration-keepable on the f_r01 axis; the final arbitration in
     # :func:`link_calls` drops the (bounded) CHA-external leftovers in its
     # single pass.
-    return cand.unionByName(_rank(_naive_candidates(nodes, resolved), 3))
+    return cand.unionByName(_rank(_naive_candidates(nodes, resolved, fits), 3))
 
 
 def link_calls(nodes: DataFrame, edges: DataFrame, recovered: DataFrame,
-               pre_candidates: DataFrame) -> DataFrame:
+               pre_candidates: DataFrame, *, fits: bool) -> DataFrame:
     """All four call linkers in ONE pass: the :func:`candidate_pool` ranks
     (``pre_candidates``) plus the type-hint candidates from ``recovered``
     (no anti-joins) arbitrated by one per-call flag aggregate.
@@ -332,7 +318,7 @@ def link_calls(nodes: DataFrame, edges: DataFrame, recovered: DataFrame,
     from .type_recovery import _hint_candidates
 
     cand = pre_candidates.unionByName(
-        _rank(_hint_candidates(nodes, edges, recovered), 2))
+        _rank(_hint_candidates(nodes, edges, recovered, fits), 2))
 
     # per-call flags as a map-side-combined aggregate joined back, NOT a
     # window: a Window(partitionBy src) would shuffle + sort the full

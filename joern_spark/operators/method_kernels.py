@@ -58,7 +58,7 @@ def _kernel_input(nodes: DataFrame, fits: bool) -> DataFrame:
     and keep the stream's doc-contiguous order, otherwise they shuffle and
     the rows are re-clustered by doc."""
     def dim(df):
-        return budgeted_broadcast(df, fits=fits)
+        return budgeted_broadcast(df, fits)
 
     typed = F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
     rets = nodes.filter(

@@ -16,8 +16,9 @@
   the MEMBER they access, key = (receiver recovered type, field name)
   (reference FieldAccessLinkerPass,
   ``x2cpg/.../typerelations/FieldAccessLinkerPass.scala:17-87``).
-- ``dynamic_type_hints`` / ``type_hint_call_linker``: CALL candidates from
-  the recovered receiver types (``XTypeHintCallLinker.scala:22-90``).
+- ``dynamic_type_hints`` / ``_hint_candidates``: CALL candidates from the
+  recovered receiver types (``XTypeHintCallLinker.scala:22-90``), which
+  ``callgraph.link_calls`` arbitrates.
 """
 
 from __future__ import annotations
@@ -196,7 +197,7 @@ def dynamic_type_hints(nodes: DataFrame, edges: DataFrame,
     )
 
 
-def _method_ref_candidates(nodes: DataFrame) -> DataFrame:
+def _method_ref_candidates(nodes: DataFrame, fits: bool) -> DataFrame:
     """Function-pointer call candidates: ``fp = someFunc; fp(...)`` links the
     call on ``fp`` to ``someFunc``.
 
@@ -205,7 +206,7 @@ def _method_ref_candidates(nodes: DataFrame) -> DataFrame:
     types calls through that variable with the ref's full name). Scoped
     per-method on (method_id, var name) — a ref assigned in one function
     never links calls in another; both join dims (method-ref assignments,
-    internal methods) are vocabulary-sized and broadcast under budget."""
+    internal methods) are vocabulary-sized and broadcast when ``fits``."""
     assigns = nodes.filter(
         (F.col("kind") == "CALL") & (F.col("name") == "<operator>.assignment")
     ).select(F.col("node_id").alias("a_id"))
@@ -236,10 +237,10 @@ def _method_ref_candidates(nodes: DataFrame) -> DataFrame:
         "method_id", "doc_id",
     )
     return (
-        calls.join(budgeted_broadcast(var_refs),
+        calls.join(budgeted_broadcast(var_refs, fits),
                    (calls["method_id"] == F.col("v_mid"))
                    & (calls["c_name"] == F.col("v_name")))
-        .join(budgeted_broadcast(methods), "ref_full")
+        .join(budgeted_broadcast(methods, fits), "ref_full")
         .select(
             "src", F.col("m_id").alias("dst"), "doc_id", "method_id",
             F.lit(False).alias("m_external"),
@@ -249,12 +250,12 @@ def _method_ref_candidates(nodes: DataFrame) -> DataFrame:
 
 
 def _hint_candidates(nodes: DataFrame, edges: DataFrame,
-                     recovered: DataFrame) -> DataFrame:
+                     recovered: DataFrame, fits: bool) -> DataFrame:
     """Hint-link candidate rows (src, dst, doc_id, method_id, m_external) for
     EVERY hinted dynamic call — internal methods only, so ``m_external`` is
     constant false; the "no other linker resolved it" condition is applied by
-    the caller (``link_calls`` arbitration window or
-    ``type_hint_call_linker``'s anti-join)."""
+    the caller (``link_calls`` arbitration). The method dims broadcast when
+    ``fits``."""
     hints = dynamic_type_hints(nodes, edges, recovered)
     # internal methods only: a hint that matches nothing but an auto-created
     # external stub is noise from the declared-type lattice (e.g. Object.f) —
@@ -265,49 +266,21 @@ def _hint_candidates(nodes: DataFrame, edges: DataFrame,
         F.col("full_name").alias("hint_full"), F.col("node_id").alias("m_id")
     )
     return (
-        hints.join(budgeted_broadcast(methods), "hint_full")
+        hints.join(budgeted_broadcast(methods, fits), "hint_full")
         .select(
             F.col("call_id").alias("src"), F.col("m_id").alias("dst"),
             "doc_id", "method_id", F.lit(False).alias("m_external"),
         )
         .distinct()
-        .unionByName(_method_ref_candidates(nodes))
-    )
-
-
-def type_hint_call_linker(nodes: DataFrame, edges: DataFrame,
-                          existing_call_edges: DataFrame,
-                          recovered: DataFrame) -> DataFrame:
-    """CALL edges from recovered dynamic type hints.
-
-    Reference ``XTypeHintCallLinker.scala:22-90``: for calls that no other
-    linker resolved, materialize CALL edges to methods whose full_name
-    matches a hint. The method dim broadcasts; unresolved-call filtering is
-    an anti-join on the already-linked call ids."""
-    candidates = _hint_candidates(nodes, edges, recovered)
-    # a call linked only to an external stub still counts as unresolved —
-    # XTypeHintCallLinker.calls requires callee.isEmpty of *real* methods
-    internal_m = nodes.filter(
-        (F.col("kind") == "METHOD") & (~F.col("is_external"))
-    ).select(F.col("node_id").alias("dst"))
-    linked = (
-        existing_call_edges.join(internal_m, "dst")
-        .select(F.col("src")).distinct()
-    )
-    return (
-        candidates.join(linked, "src", "left_anti")
-        .select(
-            "src", "dst",
-            F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-            "doc_id", "method_id",
-        )
+        .unionByName(_method_ref_candidates(nodes, fits))
     )
 
 
 def field_access_linker(nodes: DataFrame, edges: DataFrame,
-                        recovered: DataFrame) -> DataFrame:
+                        recovered: DataFrame, fits: bool) -> DataFrame:
     """REF edges: fieldAccess CALL → MEMBER (composite-key equi-join); a
-    receiver with several recovered types links to each type's member."""
+    receiver with several recovered types links to each type's member. The
+    class and member dims broadcast when ``fits``."""
     fa = nodes.filter(
         (F.col("kind") == "CALL") & F.col("name").isin(_FIELD_ACCESS_OPS)
     ).select(F.col("node_id").alias("fa_id"), "doc_id", "method_id")
@@ -335,13 +308,13 @@ def field_access_linker(nodes: DataFrame, edges: DataFrame,
     )
     members = (
         nodes.filter(F.col("kind") == "MEMBER")
-        .join(budgeted_broadcast(classes), F.col("parent_id") == F.col("c_id"))
+        .join(budgeted_broadcast(classes, fits), F.col("parent_id") == F.col("c_id"))
         .select(F.col("node_id").alias("mem_id"), F.col("c_full").alias("recv_type"),
                 F.col("name").alias("f_name"))
     )
     return (
         recv_type.join(fields, "fa_id")
-        .join(budgeted_broadcast(members), ["recv_type", "f_name"])
+        .join(budgeted_broadcast(members, fits), ["recv_type", "f_name"])
         .select(
             F.col("fa_id").alias("src"), F.col("mem_id").alias("dst"),
             F.lit("REF").alias("kind"), F.lit("").alias("variable"),

@@ -9,7 +9,10 @@ partitions (CFG, dominators/CDG, reaching-def, type recovery); its
 cross-document facts arrive as columns filled by budgeted joins
 (``method_kernels._kernel_input``): broadcast and shuffle-free under the
 budget, shuffle joins re-clustered by doc over it — degrade, don't die, on
-the same path. Stage boundaries spill to parquet (``spill.py``): columnar,
+the same path. Every dimension join's broadcast-or-shuffle choice is a
+``fits`` argument: two decisions per run, made from exact counts (the
+per-kind node counts for the kernel and the stub passes, the vocabulary
+leaf's rows for everything after it). Stage boundaries spill to parquet (``spill.py``): columnar,
 atomic-rename, column-pruned downstream — the barriers that were measured
 FLAT at 8→32 cores as deserialized localCheckpoint blocks. The six small
 vocabulary frames (TYPE rows, stubs, paramOuts, namespaces, dependencies)
@@ -126,8 +129,8 @@ def run_pipeline(
 
     nodes0, edges0, spans = split_rows(cpg_rows)
 
+    from .operators import dims
     from .operators.callgraph import candidate_pool, link_calls
-    from .operators.dims import MAX_BROADCAST_DIM, dim_fits_hint
     from .operators.method_kernels import fused_method_kernels, type_hints
     from .operators.type_recovery import field_access_linker
 
@@ -135,13 +138,18 @@ def run_pipeline(
     # dimension the kernel, the vocabulary and the linkers join, so the
     # broadcast-or-shuffle decisions cost no per-join probe jobs. METHOD +
     # TYPE_DECL + MEMBER bound the kernel's three fact dimensions and the
-    # stub passes' METHOD and TYPE_DECL anti-join dims.
+    # stub passes' METHOD and TYPE_DECL anti-join dims. The same scan counts
+    # the parse's error rows (one per document whose parse raised); the
+    # batch is partitioned by rowtype, so no edge or span file is opened.
     def counts_job():
-        counts = {r["kind"]: r["count"]
-                  for r in nodes0.groupBy("kind").count().collect()}
+        rows = (cpg_rows.filter(F.col("rowtype").isin("node", "error"))
+                .groupBy("rowtype", "kind").count().collect())
+        counts = {r["kind"]: r["count"] for r in rows if r["rowtype"] == "node"}
         fits = sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER")) \
-            <= MAX_BROADCAST_DIM
+            <= dims.MAX_BROADCAST_DIM
         stats["kind_counts"], stats["kernel_fits"] = counts, fits
+        stats["docs_failed"] = sum(r["count"] for r in rows
+                                   if r["rowtype"] == "error")
         return counts, fits
 
     # ---- kernel job (python-heavy, scales with cores)
@@ -172,37 +180,35 @@ def run_pipeline(
         # run-wide broadcast-budget decision: every dimension any downstream
         # join broadcasts is vocabulary-or-stub-sized; their union is bounded
         # by the leaf's rows (paramOuts are per-parameter, not a dimension)
-        # plus these kind counts, so one hint replaces a per-join probe job.
-        # Over budget → every dim join plans a shuffle join (degrade, not die)
+        # plus these kind counts, so this one `fits` is passed to every join
+        # after the vocabulary. Over budget → every dim join plans a shuffle
+        # join (degrade, not die)
         vocab_n = (
             vocab.filter(F.col("kind") != "METHOD_PARAMETER_OUT").count()
             + sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER",
                                              "FILE"))
         )
         stats["vocab_n"] = vocab_n
-        fits = vocab_n <= MAX_BROADCAST_DIM
+        fits = vocab_n <= dims.MAX_BROADCAST_DIM
         nodes = nodes0.unionByName(vocab)
-        with dim_fits_hint(fits):
-            # the two spills are independent — submit both to the pool so
-            # the (join-light) base union and the (join-heavy) candidate
-            # pool run as concurrent Spark jobs instead of back-to-back
-            base_norec_f = pool.submit(lambda: spill.write(
-                edges0.unionByName(vocabulary_edges(vocab, nodes0))
-                .unionByName(type_ref_pass(types, nodes0))
-                .unionByName(eval_type_pass(nodes, types))
-                .unionByName(method_ref_linker(nodes))
-                .unionByName(macro_ref_linker(nodes0))
-                .unionByName(imports_linker(nodes0, dep_nodes)),
-                "edges_base_norec"))
-            # static/CHA/naive call candidates (hint needs the kernel);
-            # the pool-internal barrier pays only at corpus scale
-            cand_barrier = counts.get("CALL", 0) > 300_000
-            cand_f = pool.submit(lambda: spill.write(
-                candidate_pool(nodes, edges0, barrier=cand_barrier),
-                "call_candidates"))
-            base_norec = base_norec_f.result()
-            cand = cand_f.result()
-        return nodes, fits, base_norec, cand, t1
+        # the two spills are independent — submit both to the pool so the
+        # (join-light) base union and the (join-heavy) candidate pool run as
+        # concurrent Spark jobs instead of back-to-back
+        base_norec_f = pool.submit(lambda: spill.write(
+            edges0.unionByName(vocabulary_edges(vocab, nodes0, fits=fits))
+            .unionByName(type_ref_pass(types, nodes0, fits=fits))
+            .unionByName(eval_type_pass(nodes, types, fits=fits))
+            .unionByName(method_ref_linker(nodes, fits=fits))
+            .unionByName(macro_ref_linker(nodes0))
+            .unionByName(imports_linker(nodes0, dep_nodes, fits=fits)),
+            "edges_base_norec"))
+        # static/CHA/naive call candidates (hint needs the kernel);
+        # the pool-internal barrier pays only at corpus scale
+        cand_barrier = counts.get("CALL", 0) > 300_000
+        cand_f = pool.submit(lambda: spill.write(
+            candidate_pool(nodes, edges0, fits=fits, barrier=cand_barrier),
+            "call_candidates"))
+        return nodes, fits, base_norec_f.result(), cand_f.result(), t1
 
     # 3 top-level jobs + base_job's 2 nested spill submissions (nested
     # submits need free workers or they queue behind their own parent)
@@ -217,38 +223,35 @@ def run_pipeline(
     recovered = type_hints(kernel_out)
     kernel_edges = kernel_out.filter(F.col("kind") != "_TYPE_HINT")
 
-    with dim_fits_hint(fits):
-        # ---- stage: the kernel-dependent edge tail — field-access linking,
-        # hint candidates, and the one-pass call arbitration over the
-        # pre-materialized candidate pool
-        call_edges = link_calls(nodes, edges0, recovered=recovered,
-                                pre_candidates=cand)
-        t2 = time.time()
-        post_lazy = field_access_linker(nodes0, edges0, recovered=recovered) \
-            .unionByName(call_edges)
-        base_call = base_norec.unionByName(
-            spill.write(post_lazy, "edges_call_fa"))
-        edges = kernel_edges.unionByName(base_call)
-        if out_dir:
-            append_lineage(spark, out_dir,
-                           edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                           "edges", t2)
-            append_lineage(spark, out_dir,
-                           nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
-                           "base_nodes", t1)
+    # ---- stage: the kernel-dependent edge tail — field-access linking, hint
+    # candidates, and the one-pass call arbitration over the pre-materialized
+    # candidate pool
+    call_edges = link_calls(nodes, edges0, recovered=recovered,
+                            pre_candidates=cand, fits=fits)
+    t2 = time.time()
+    post_lazy = field_access_linker(nodes0, edges0, recovered=recovered,
+                                    fits=fits).unionByName(call_edges)
+    base_call = base_norec.unionByName(spill.write(post_lazy, "edges_call_fa"))
+    edges = kernel_edges.unionByName(base_call)
+    if out_dir:
+        append_lineage(spark, out_dir,
+                       edges.withColumn("part_id", part_id_col(n_parts=n_parts)),
+                       "edges", t2)
+        append_lineage(spark, out_dir,
+                       nodes.withColumn("part_id", part_id_col(n_parts=n_parts)),
+                       "base_nodes", t1)
 
-        # calls that no linker resolved, from the materialized call edges
-        misses = link_misses(nodes, base_call.filter(F.col("kind") == "CALL"))
+    # calls that no linker resolved, from the materialized call edges
+    misses = link_misses(nodes, base_call.filter(F.col("kind") == "CALL"))
 
-        # ---- stage: triples
-        t3 = time.time()
-        triples = build_triples(nodes, edges, spans, n_parts=n_parts)
-        if out_dir:
-            # atomic snapshot commit: fresh snap dir + manifest-pointer flip
-            triples = commit_snapshot(spark, triples, out_dir, "triples",
-                                      partition_by="part_id")
-            append_lineage(spark, out_dir, triples, "triples", t3)
+    # ---- stage: triples
+    t3 = time.time()
+    triples = build_triples(nodes, edges, spans, n_parts=n_parts, fits=fits)
+    if out_dir:
+        # atomic snapshot commit: fresh snap dir + manifest-pointer flip
+        triples = commit_snapshot(spark, triples, out_dir, "triples",
+                                  partition_by="part_id")
+        append_lineage(spark, out_dir, triples, "triples", t3)
 
     return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
                      link_misses=misses, stats=stats)
-

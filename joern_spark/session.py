@@ -48,14 +48,6 @@ def get_spark(
         os.makedirs(ev_dir, exist_ok=True)
         builder = (builder.config("spark.eventLog.enabled", "true")
                    .config("spark.eventLog.dir", f"file://{ev_dir}"))
-    # A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" injects ad-hoc conf into
-    # any entry point (scaling_run, bench, tests) without code edits —
-    # used for codec/serialization experiments on the bandwidth-walled host
-    for pair in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF",
-                                            "").split(";")):
-        k, _, v = pair.partition("=")
-        if k and v:
-            builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.dims import budgeted_broadcast
 from .operators.frontier import expand
 
 SLICE_DEPTH_DEFAULT = 20  # DataFlowConfig.sliceDepth default
@@ -50,7 +49,7 @@ def data_flow_slice(nodes: DataFrame, edges: DataFrame,
     )
     slice_nodes = (
         visited.join(nodes, "node_id")
-        .join(budgeted_broadcast(methods), "method_id", "left")
+        .join(methods, "method_id", "left")
         .select(
             "node_id", "kind", "code",
             F.coalesce("parent_method", F.lit("")).alias("parent_method"),

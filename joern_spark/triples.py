@@ -30,7 +30,9 @@ def part_id_col(doc_col="doc_id", n_parts: int = N_PARTS_DEFAULT):
 
 
 def build_triples(nodes: DataFrame, edges: DataFrame, spans: DataFrame,
-                  n_parts: int = N_PARTS_DEFAULT) -> DataFrame:
+                  n_parts: int = N_PARTS_DEFAULT, *, fits: bool) -> DataFrame:
+    """(subj, pred, obj, doc_id, part_id) rows; the FILE dim of the media
+    join broadcasts when ``fits``."""
     pid = part_id_col(n_parts=n_parts)
 
     # node-kind + property triples in one scan: explode (pred, obj) pairs
@@ -66,7 +68,7 @@ def build_triples(nodes: DataFrame, edges: DataFrame, spans: DataFrame,
     )
     media_t = (
         spans.filter(F.col("kind") == "media")
-        .join(budgeted_broadcast(files), F.col("doc_id") == F.col("f_doc"))
+        .join(budgeted_broadcast(files, fits), F.col("doc_id") == F.col("f_doc"))
         .select(
             F.col("file_id").cast("string").alias("subj"),
             F.lit("media_ref").alias("pred"),

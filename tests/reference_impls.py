@@ -4,11 +4,13 @@
   DataFrame joins. Production recovers types per method inside the fused
   kernel (``type_recovery.recover_types_for_method``);
   test_fused_recovery.py asserts the two produce the same event set.
-- ``dynamic_call_linker``, ``naive_call_linker``,
+- ``static_call_linker``, ``dynamic_call_linker``,
+  ``type_hint_call_linker``, ``naive_call_linker``,
   ``prefer_internal_call_edges``: the sequential static → CHA → hint → naive
   linker chain with window-based prefer-internal pruning. Production
   arbitrates all candidates in one aggregate (``callgraph.link_calls``);
-  test_dims.py asserts the two link the same calls.
+  test_dims.py asserts the two link the same calls. Each linker takes the
+  ``fits`` broadcast decision of the candidate frames it wraps.
 """
 
 from __future__ import annotations
@@ -17,9 +19,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from joern_spark.operators.callgraph import _dynamic_candidates, _naive_candidates
-from joern_spark.operators.dims import budgeted_broadcast
-from joern_spark.operators.type_recovery import _FIELD_ACCESS_OPS, ITERATIONS
+from joern_spark.operators.callgraph import (
+    _dynamic_candidates,
+    _naive_candidates,
+    _static_candidates,
+)
+from joern_spark.operators.type_recovery import (
+    _FIELD_ACCESS_OPS,
+    ITERATIONS,
+    _hint_candidates,
+)
 
 
 def _declared(nodes: DataFrame) -> DataFrame:
@@ -44,7 +53,7 @@ def _members_dim(nodes: DataFrame) -> DataFrame:
             (F.col("kind") == "MEMBER")
             & F.col("type_full_name").isNotNull() & (F.col("type_full_name") != "")
         )
-        .join(budgeted_broadcast(classes), F.col("parent_id") == F.col("c_id"))
+        .join(classes, F.col("parent_id") == F.col("c_id"))
         .select(F.col("mc_full").alias("recv_type"), F.col("name").alias("f_name"),
                 F.col("type_full_name").alias("member_type"))
     )
@@ -99,7 +108,7 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
     this_types = (
         idents.filter(F.col("name") == "this")
         .join(methods, idents["method_id"] == methods["m_id"])
-        .join(budgeted_broadcast(classes), F.col("m_parent") == F.col("c_id"))
+        .join(classes, F.col("m_parent") == F.col("c_id"))
         .select("node_id", F.col("c_full").alias("recovered_type"))
     )
     rec = rec.unionByName(this_types)
@@ -151,7 +160,7 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
                          F.col("full_name").alias("callee_full")),
             "rhs_call",
         )
-        .join(budgeted_broadcast(method_ret), "callee_full")
+        .join(method_ret, "callee_full")
         .select("a_id", F.col("ret_type").alias("rhs_type"))
     )
     alloc_rhs = alloc_rhs.unionByName(call_ret_rhs)
@@ -186,7 +195,7 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
             .join(rec_d.withColumnRenamed("node_id", "recv_id"), "recv_id")
             .select("fa_id", deref.alias("recv_type"))
             .join(fa_fields, "fa_id")
-            .join(budgeted_broadcast(members), ["recv_type", "f_name"])
+            .join(members, ["recv_type", "f_name"])
             .select("fa_id", F.col("member_type").alias("rhs_type"))
         )
         member_rhs = (
@@ -210,7 +219,21 @@ def type_recovery_events(nodes: DataFrame, iterations: int = ITERATIONS) -> Data
     return _distribute(rec, idents).distinct()
 
 
-def dynamic_call_linker(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def _call_edges(candidates: DataFrame) -> DataFrame:
+    return candidates.select(
+        "src", "dst",
+        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
+        "doc_id", "method_id",
+    )
+
+
+def static_call_linker(nodes: DataFrame, fits: bool) -> DataFrame:
+    """CALL edges for STATIC_DISPATCH / INLINED calls."""
+    return _call_edges(_static_candidates(nodes, fits))
+
+
+def dynamic_call_linker(nodes: DataFrame, edges: DataFrame,
+                        fits: bool) -> DataFrame:
     """CHA resolution for DYNAMIC_DISPATCH calls.
 
     call full_name = ``Recv.m`` → candidates = methods ``C.m`` for every C in
@@ -218,11 +241,7 @@ def dynamic_call_linker(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     (``DynamicCallLinker.scala:142-167``); prefer internal methods over
     external stubs (``:187-196``).
     """
-    candidates = _dynamic_candidates(nodes, edges)
-    if candidates is None:
-        return nodes.sparkSession.createDataFrame(
-            [], schema="src long, dst long, kind string, variable string, "
-                       "doc_id string, method_id long")
+    candidates = _dynamic_candidates(nodes, edges, fits)
     # prefer-internal pruning: if any internal candidate exists for a call,
     # drop the external stubs (window over call id).
     w = W.partitionBy("src")
@@ -232,20 +251,35 @@ def dynamic_call_linker(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         )
         .filter((F.col("has_internal") == 0) | (~F.col("m_external")))
     )
-    return candidates.select(
-        "src", "dst",
-        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-        "doc_id", "method_id",
-    ).distinct()
+    return _call_edges(candidates).distinct()
 
 
-def naive_call_linker(nodes: DataFrame, call_edges: DataFrame) -> DataFrame:
-    """Leftover calls linked by bare name against non-operator methods."""
-    return _naive_candidates(nodes, call_edges).select(
-        "src", "dst",
-        F.lit("CALL").alias("kind"), F.lit("").alias("variable"),
-        "doc_id", "method_id",
+def type_hint_call_linker(nodes: DataFrame, edges: DataFrame,
+                          existing_call_edges: DataFrame,
+                          recovered: DataFrame, fits: bool) -> DataFrame:
+    """CALL edges from recovered dynamic type hints.
+
+    Reference ``XTypeHintCallLinker.scala:22-90``: for calls that no other
+    linker resolved, materialize CALL edges to methods whose full_name
+    matches a hint; unresolved-call filtering is an anti-join on the
+    already-linked call ids."""
+    candidates = _hint_candidates(nodes, edges, recovered, fits)
+    # a call linked only to an external stub still counts as unresolved —
+    # XTypeHintCallLinker.calls requires callee.isEmpty of *real* methods
+    internal_m = nodes.filter(
+        (F.col("kind") == "METHOD") & (~F.col("is_external"))
+    ).select(F.col("node_id").alias("dst"))
+    linked = (
+        existing_call_edges.join(internal_m, "dst")
+        .select(F.col("src")).distinct()
     )
+    return _call_edges(candidates.join(linked, "src", "left_anti"))
+
+
+def naive_call_linker(nodes: DataFrame, call_edges: DataFrame,
+                      fits: bool) -> DataFrame:
+    """Leftover calls linked by bare name against non-operator methods."""
+    return _call_edges(_naive_candidates(nodes, call_edges, fits))
 
 
 def prefer_internal_call_edges(call_edges: DataFrame, nodes: DataFrame) -> DataFrame:

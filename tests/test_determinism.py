@@ -19,10 +19,8 @@ def test_identical_across_partition_counts(spark):
 
 def test_identical_across_runs(spark, cpg, monkeypatch):
     """A second run gives the session run's triples. It builds the
-    vocabulary from one checkpointed leaf (plus the TYPE rows the leaf reads)
-    and decides every broadcast from its kind counts, so no
-    ``budgeted_broadcast`` probe job runs."""
-    from joern_spark.operators import dims
+    vocabulary from one checkpointed leaf (plus the TYPE rows the leaf
+    reads)."""
     from joern_spark.schema import NODE_COLUMNS
 
     cls = type(spark.range(1))
@@ -35,13 +33,9 @@ def test_identical_across_runs(spark, cpg, monkeypatch):
         return checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", spy_checkpoint)
-    # every probe that runs leaves its verdict in the (emptied) memo
-    probes = {}
-    monkeypatch.setattr(dims, "_PROBE_MEMO", probes)
     b = _triples(run_pipeline(spark, fixture_docs_df(spark), n_parts=4))
     assert _triples(cpg) == b
     assert len(node_checkpoints) == 2
-    assert probes == {}
 
 
 def test_doc_subset_is_sub_multiset(spark, cpg):
@@ -61,3 +55,28 @@ def test_doc_subset_is_sub_multiset(spark, cpg):
         .select("subj", "pred", "obj").collect()
     )
     assert part_sub == full_sub
+
+
+def test_failed_parse_is_counted(spark, cpg):
+    """A document whose parse raises (here a RecursionError from 5,000
+    nested parentheses) is counted in ``stats["docs_failed"]`` and costs the
+    run nothing else: every other document's triples are the session
+    run's."""
+    from collections import Counter
+
+    from joern_spark.corpus import docs_df, fixture_docs, split_code_spans
+
+    src = "int f() { return " + "(" * 5000 + "1" + ")" * 5000 + "; }\n"
+    docs = fixture_docs() + [
+        {"doc_id": "hostile/deep.c", "spans": split_code_spans(src, 1)}]
+    res = run_pipeline(spark, docs_df(spark, docs), n_parts=4)
+
+    assert res.stats["docs_failed"] == 1
+    assert cpg.stats["docs_failed"] == 0
+    assert res.stats["kind_counts"] == cpg.stats["kind_counts"]
+
+    def triples(r):
+        return Counter(tuple(t) for t in
+                       r.triples.select("subj", "pred", "obj").collect())
+
+    assert triples(res) == triples(cpg)

@@ -1,6 +1,7 @@
 """Broadcast-budget dispatch (operators/dims.py): every dim join must flip
-to a shuffle join when the dimension exceeds the budget — degrade, don't die
-(VERDICT round-2 'unconditional broadcast' anti-pattern)."""
+to a shuffle join when the run decides the dimensions exceed the budget —
+degrade, don't die (VERDICT round-2 'unconditional broadcast'
+anti-pattern)."""
 
 from collections import Counter
 
@@ -19,61 +20,46 @@ from joern_spark.operators.callgraph import (
     candidate_pool,
     link_calls,
     method_ref_linker,
-    static_call_linker,
 )
 from joern_spark.operators.type_recovery import field_access_linker
 from tests.conftest import kernel_hints
-from tests.reference_impls import naive_call_linker
+from tests.reference_impls import naive_call_linker, static_call_linker
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_budgeted_broadcast_probe_flips(spark, no_auto_broadcast):
-    dim = spark.range(100).select(F.col("id").alias("k"), F.lit("v").alias("v"))
-    fact = spark.range(1000).select(F.col("id").alias("k"))
-    small = fact.join(dims.budgeted_broadcast(dim, budget=1000), "k")
-    big = fact.join(dims.budgeted_broadcast(dim, budget=10), "k")
-    assert "BroadcastHashJoin" in _plan(small)
-    assert "BroadcastHashJoin" not in _plan(big)
-
-
-def test_hint_overrides_probe(spark, no_auto_broadcast):
+@pytest.mark.parametrize("fits", [True, False])
+def test_budgeted_broadcast_follows_fits(spark, no_auto_broadcast, fits):
     dim = spark.range(5).select(F.col("id").alias("k"))
     fact = spark.range(50).select(F.col("id").alias("k"))
-    with dims.dim_fits_hint(False):
-        j = fact.join(dims.budgeted_broadcast(dim), "k")
-    assert "BroadcastHashJoin" not in _plan(j)
-    with dims.dim_fits_hint(True):
-        j = fact.join(dims.budgeted_broadcast(dim), "k")
-    assert "BroadcastHashJoin" in _plan(j)
+    j = fact.join(dims.budgeted_broadcast(dim, fits), "k")
+    assert ("BroadcastHashJoin" in _plan(j)) == fits
 
 
-def _linkers(nodes, edges, hints) -> dict:
-    static = static_call_linker(nodes)
+def _linkers(nodes, edges, hints, fits) -> dict:
+    static = static_call_linker(nodes, fits)
+    pool = candidate_pool(nodes, edges, fits=fits)
     return {
         "static": static,
-        "naive": naive_call_linker(nodes, static),
-        "method_ref": method_ref_linker(nodes),
-        "field_access": field_access_linker(nodes, edges, hints),
-        "link_calls": link_calls(nodes, edges, hints,
-                                 candidate_pool(nodes, edges)),
+        "naive": naive_call_linker(nodes, static, fits),
+        "method_ref": method_ref_linker(nodes, fits=fits),
+        "field_access": field_access_linker(nodes, edges, hints, fits=fits),
+        "link_calls": link_calls(nodes, edges, hints, pool, fits=fits),
     }
 
 
 @pytest.mark.parametrize("fits", [True, False])
 def test_linkers_respect_budget(cpg_nodes_edges, skew_nodes_edges,
                                 no_auto_broadcast, fits):
-    """Each linker's dim join follows the run-wide hint: broadcast when the
-    vocabulary fits, shuffle join when it doesn't — and produces the SAME
-    rows either way, on the fixture corpus and on the hot-key skew corpus
-    (printf/malloc called from every document)."""
+    """Each linker's dim join follows the run's ``fits`` decision: broadcast
+    when the vocabulary fits, shuffle join when it doesn't — and produces
+    the SAME rows either way, on the fixture corpus and on the hot-key skew
+    corpus (printf/malloc called from every document)."""
     for graph in (cpg_nodes_edges, skew_nodes_edges):
-        with dims.dim_fits_hint(fits):
-            frames = _linkers(*graph)
-        with dims.dim_fits_hint(not fits):
-            other = _linkers(*graph)
+        frames = _linkers(*graph, fits)
+        other = _linkers(*graph, not fits)
         for name, df in frames.items():
             p = _plan(df)
             if fits:
@@ -91,21 +77,22 @@ def test_link_calls_matches_sequential_chain(cpg_nodes_edges,
     pruning) produces, on the fixture corpus and on the arbitration corpus
     (a CHA external stub beside an internal CHA candidate; a hint-linked
     call with naive matches other than the hint's target)."""
-    from joern_spark.operators.type_recovery import type_hint_call_linker
     from tests.reference_impls import (
         dynamic_call_linker,
         prefer_internal_call_edges,
+        type_hint_call_linker,
     )
 
     for nodes, edges, hints in (cpg_nodes_edges, arbitration_nodes_edges):
-        static = static_call_linker(nodes)
-        ambiguous = dynamic_call_linker(nodes, edges)
+        static = static_call_linker(nodes, True)
+        ambiguous = dynamic_call_linker(nodes, edges, True)
         ambiguous = ambiguous.unionByName(type_hint_call_linker(
-            nodes, edges, static.unionByName(ambiguous), hints))
+            nodes, edges, static.unionByName(ambiguous), hints, True))
         ambiguous = ambiguous.unionByName(
-            naive_call_linker(nodes, static.unionByName(ambiguous)))
+            naive_call_linker(nodes, static.unionByName(ambiguous), True))
         chain = static.unionByName(prefer_internal_call_edges(ambiguous, nodes))
-        fused = link_calls(nodes, edges, hints, candidate_pool(nodes, edges))
+        fused = link_calls(nodes, edges, hints,
+                           candidate_pool(nodes, edges, fits=True), fits=True)
         a = {tuple(r) for r in chain.collect()}
         b = {tuple(r) for r in fused.collect()}
         assert a == b
@@ -139,7 +126,8 @@ def arbitration_nodes_edges(spark):
     nodes, edges, _ = split_rows(rows)
     vocab = vocabulary(nodes, edges, fits=True)
     graph = (nodes.unionByName(vocab).localCheckpoint(),
-             edges.unionByName(vocabulary_edges(vocab, nodes)).localCheckpoint(),
+             edges.unionByName(vocabulary_edges(vocab, nodes, fits=True))
+             .localCheckpoint(),
              kernel_hints(nodes).localCheckpoint())
     rows.unpersist()
     return graph
@@ -159,7 +147,8 @@ def skew_nodes_edges(spark):
     nodes, edges, _ = split_rows(rows)
     stubs = method_stubs(nodes, edges, fits=True)
     graph = (nodes.unionByName(stubs).localCheckpoint(),
-             edges.unionByName(vocabulary_edges(stubs, nodes)).localCheckpoint(),
+             edges.unionByName(vocabulary_edges(stubs, nodes, fits=True))
+             .localCheckpoint(),
              kernel_hints(nodes).localCheckpoint())
     rows.unpersist()
     return graph

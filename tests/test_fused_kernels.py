@@ -105,8 +105,7 @@ def test_over_budget_shuffle_joins_end_to_end(spark, cpg, monkeypatch,
     orig = mk.fused_method_kernels
     monkeypatch.setattr(mk, "fused_method_kernels", spy)
     monkeypatch.setattr(dims, "MAX_BROADCAST_DIM", 0)
-    with dims.dim_fits_hint(False):
-        res = run_pipeline(spark, fixture_docs_df(spark), n_parts=4)
+    res = run_pipeline(spark, fixture_docs_df(spark), n_parts=4)
 
     assert res.stats["kernel_fits"] is False
     [plan] = plans

@@ -60,11 +60,15 @@ def test_fused_kernels_shuffle_free(spark):
     assert k.rdd.getNumPartitions() == nodes.rdd.getNumPartitions()
 
 
-def test_static_linker_broadcasts_method_dim(spark, cpg):
-    from joern_spark.operators.callgraph import static_call_linker
+def test_static_linker_broadcasts_method_dim(spark, cpg, no_auto_broadcast):
+    """The static-dispatch candidates of the call pool join the METHOD dim
+    map-side when the run decides it fits, with Catalyst's own size-based
+    broadcast off."""
+    from joern_spark.operators.callgraph import _static_candidates
 
-    plan = _plan(static_call_linker(cpg.nodes))
+    plan = _plan(_static_candidates(cpg.nodes, fits=True))
     assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_partial_aggregation_present(spark):
@@ -101,7 +105,7 @@ def test_fallback_callgraph_plan_no_window(spark, cpg, cpg_hints):
     aggregate arbitration is the only acceptable plan at 100x scale."""
     from joern_spark.operators.callgraph import candidate_pool, link_calls
 
-    plan = _plan(link_calls(cpg.nodes, cpg.edges, cpg_hints,
-                            candidate_pool(cpg.nodes, cpg.edges)))
+    pool = candidate_pool(cpg.nodes, cpg.edges, fits=True)
+    plan = _plan(link_calls(cpg.nodes, cpg.edges, cpg_hints, pool, fits=True))
     assert "Window" not in plan, f"arbitration planned a window:\n{plan}"
 

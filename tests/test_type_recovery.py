@@ -67,7 +67,7 @@ def test_this_type_is_enclosing_class(graph):
 
 def test_field_access_links_to_member(graph):
     nodes, edges, hints = graph
-    refs = field_access_linker(nodes, edges, hints)
+    refs = field_access_linker(nodes, edges, hints, fits=True)
     n = nodes.toPandas().set_index("node_id")
     pairs = {
         (n.loc[r["src"], "code"], n.loc[r["dst"], "name"])
@@ -80,7 +80,7 @@ def test_field_access_links_to_member(graph):
 def test_alloc_propagation_links_q(graph):
     """q = new Point(); q.y — type flows through the assignment round."""
     nodes, edges, hints = graph
-    refs = field_access_linker(nodes, edges, hints)
+    refs = field_access_linker(nodes, edges, hints, fits=True)
     n = nodes.toPandas().set_index("node_id")
     pairs = {
         (n.loc[r["src"], "code"], n.loc[r["dst"], "name"])
@@ -97,7 +97,7 @@ def test_c_struct_member_linking(spark):
     docs = docs_df(spark, [{"doc_id": "tr/list.c", "spans": split_code_spans(src, 1)}])
     rows = parse_docs(docs).persist()
     nodes, edges, _ = split_rows(rows)
-    refs = field_access_linker(nodes, edges, kernel_hints(nodes))
+    refs = field_access_linker(nodes, edges, kernel_hints(nodes), fits=True)
     n = nodes.select("node_id", "code", "name", "kind").toPandas().set_index("node_id")
     pairs = {(n.loc[r["src"], "code"], n.loc[r["dst"], "name"]) for r in refs.collect()}
     rows.unpersist()
@@ -136,7 +136,7 @@ def test_no_cross_method_type_leak(spark):
 def test_no_cross_class_false_links(graph):
     """Members only link within the receiver's class (no name-only match)."""
     nodes, edges, hints = graph
-    refs = field_access_linker(nodes, edges, hints)
+    refs = field_access_linker(nodes, edges, hints, fits=True)
     classes = nodes.filter(F.col("kind") == "TYPE_DECL").select(
         F.col("node_id").alias("c_id"), F.col("full_name").alias("c_full")
     )
