@@ -6,13 +6,17 @@ Usage (north-rule launch shape — BASELINE.json):
         jobs/run_triple_factory.py --sf-dir /root/testdata/sf0.1 [--out-dir D]
     spark-submit --master local[32] --py-files /tmp/joern_spark.zip ... (4N run)
 
-With --out-dir the run builds the same graph as without it, keeps its stage
-spills there, appends per-partition lineage rows and commits the triples as
-a snapshot partitioned by part_id, one parquet file per part_id (--n-parts
-files). Only the ast stage resumes: its manifest records the parsed
-part_ids, so re-running with the same --out-dir parses only the docs of the
-part ranges no committed batch covers (kill the job mid-run to test) and
-recomputes every later stage from the ast batches.
+With --out-dir the run builds the same graph as without it, writes its ast
+batches there, appends per-partition lineage rows and commits the triples
+as a snapshot partitioned by part_id, one sorted parquet file per part_id
+(--n-parts files); --out-dir then holds only ast_rows, triples_data,
+lineage and _manifests. Stage spills go to the run's scratch temp dir in
+both modes, removed at exit: on a cluster, point TMPDIR at storage every
+executor shares, because spills are committed with os.rename. Only the ast
+stage resumes: its manifest records the parsed part_ids, so re-running with
+the same --out-dir parses only the docs of the part ranges no committed
+batch covers (kill the job mid-run to test) and recomputes every later
+stage from the ast batches.
 Prints one JSON metrics line on success.
 """
 

@@ -183,13 +183,3 @@ def neo4j_csv(nodes: DataFrame, edges: DataFrame):
     )
     return n, e
 
-
-def export_dir(nodes: DataFrame, edges: DataFrame, spans: DataFrame,
-               out_dir: str, representation: str = "ALL", fmt: str = "dot") -> None:
-    """Write the per-method export table + Neo4j CSVs under out_dir."""
-    method_subgraphs(nodes, edges, representation, fmt).write.mode(
-        "overwrite"
-    ).partitionBy("doc_id").parquet(f"{out_dir}/subgraphs_{fmt}_{representation}")
-    ncsv, ecsv = neo4j_csv(nodes, edges)
-    ncsv.write.mode("overwrite").option("header", True).csv(f"{out_dir}/neo4j_nodes")
-    ecsv.write.mode("overwrite").option("header", True).csv(f"{out_dir}/neo4j_edges")

@@ -53,14 +53,22 @@ def clustered_writer(df: DataFrame, partition_by: str | None,
                      mode: str) -> DataFrameWriter:
     """The writer of a table laid out by ``partition_by``: the rows are first
     hash-shuffled on that column, so each value's rows meet in one task and
-    land in ONE file of its ``<col>=<value>`` directory. Written unclustered,
-    every input task would write a file into every value's directory
-    (n_tasks × n_values small files, each paying its own footer and
-    dictionaries). Without ``partition_by`` the frame is written as it is."""
+    land in ONE file of its ``<col>=<value>`` directory, and each task then
+    sorts its rows by that column and then by every other column in frame
+    order. Written unclustered, every input task would write a file into
+    every value's directory (n_tasks × n_values small files, each paying its
+    own footer and dictionaries). The sort makes a file's bytes a function
+    of its rows alone, not of the order the shuffle fetched them in, and
+    puts equal values next to each other for the encoder. The partition
+    column must lead the sort: the write plans its own sort by that column
+    and replaces any sort it is not a prefix of. Without ``partition_by``
+    the frame is written as it is."""
     if not partition_by:
         return df.write.mode(mode)
-    return (df.repartition(partition_by).write.mode(mode)
-            .partitionBy(partition_by))
+    rest = [c for c in df.columns if c != partition_by]
+    return (df.repartition(partition_by)
+            .sortWithinPartitions(partition_by, *rest)
+            .write.mode(mode).partitionBy(partition_by))
 
 
 def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -81,10 +89,12 @@ def commit_snapshot(spark: SparkSession, df: DataFrame, out_dir: str,
     mid-flight still finds its files.
 
     Layout: with ``partition_by`` the snapshot holds one file per partition
-    value (``clustered_writer``), and the write runs at most one task per
+    value, its rows sorted by that column and then by every other column in
+    frame order (``clustered_writer``), so the same rows give the same
+    bytes whatever order they arrive in; the write runs at most one task per
     value. For the triples table that value is ``part_id``, so ``n_parts``
     sizes both the resume unit and the file. Without it the frame's own
-    partitions are written, one file each.
+    partitions are written, one file each, in the frame's row order.
     """
     data_root = os.path.join(out_dir, f"{stage}_data")
     prev = read_manifest(out_dir, stage) or {}

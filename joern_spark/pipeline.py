@@ -20,15 +20,20 @@ are one union leaf, checkpointed once (after the TYPE rows it reads)
 concurrently with the kernel job; the wide nodes union is never copied — it
 stays a lazy union of the parse nodes and that leaf.
 
-The graph is the same in both run modes. With ``out_dir`` the spills land
-there instead of in a temp dir, and three things are added: the ast stage
-resumes (each run parses only the docs whose ``part_id`` no committed
-``ast_rows/batch-*`` covers, and the ``ast`` manifest records the part_ids
-and batch dirs), per-partition lineage rows are appended for ast, edges,
-nodes and triples, and the triples are committed as a snapshot partitioned
-by ``part_id`` with one parquet file per part_id (n_parts files, whatever
-the width of the stages before it). Only the ast stage resumes; every later
-stage is recomputed from the ast batches.
+The graph is the same in both run modes. Every run writes its stage spills
+to its own scratch ``SpillDir()``, a temp dir removed at process exit (or
+by ``spill.remove_scratch(result.scratch)``); the result's lazy frames read
+from it (a durable run's ``edges`` and ``link_misses``). On a cluster the
+scratch must sit on storage the executors share (``TMPDIR``), because
+``SpillDir`` commits with ``os.rename``. With ``out_dir`` three things are
+added, and ``out_dir`` holds only what a later run reads: the ast stage's
+batches are written there and resume (each run parses only the docs whose
+``part_id`` no committed ``ast_rows/batch-*`` covers, and the ``ast``
+manifest records the part_ids and batch dirs), per-partition lineage rows
+are appended for ast, edges, nodes and triples, and the triples are
+committed as a snapshot partitioned by ``part_id`` with one sorted parquet
+file per part_id (``lineage.clustered_writer``). Only the ast stage
+resumes; every later stage is recomputed from the ast batches.
 """
 
 from __future__ import annotations
@@ -69,6 +74,8 @@ class CpgResult:
     triples: DataFrame
     link_misses: DataFrame
     stats: dict = field(default_factory=dict)
+    # the run's scratch SpillDir root (None for a result read from storage)
+    scratch: str | None = None
 
 
 def run_pipeline(
@@ -82,7 +89,8 @@ def run_pipeline(
 
     # ---- stage: ast (resumable per partition with out_dir) ---------------
     t0 = time.time()
-    spill = SpillDir(out_dir)
+    spill = SpillDir()
+    batches = SpillDir(out_dir) if out_dir else spill
     docs = docs.withColumn("part_id", part_id_col(n_parts=n_parts))
     # committed batch dirs (snapshot semantics: "append" = a NEW batch dir +
     # manifest flip, never an in-place append — a killed write leaves only
@@ -111,9 +119,9 @@ def run_pipeline(
         # rowtype filter that every scan would otherwise decode 100% of rows
         # to apply. Each parse task writes one file per rowtype.
         name = f"ast_rows/batch-{len(batch_dirs) + 1:05d}"
-        batch = spill.write(rows, name, partition_by="rowtype",
-                            guard_contiguity=True)
-        batch_dirs.append(os.path.join(spill.root, name))
+        batch = batches.write(rows, name, partition_by="rowtype",
+                              guard_contiguity=True)
+        batch_dirs.append(os.path.join(batches.root, name))
         if out_dir:
             # lineage from the written batch, not the lazy parse (which would
             # run again); partition discovery moves rowtype to the end, and
@@ -254,4 +262,4 @@ def run_pipeline(
         append_lineage(spark, out_dir, triples, "triples", t3)
 
     return CpgResult(nodes=nodes, edges=edges, spans=spans, triples=triples,
-                     link_misses=misses, stats=stats)
+                     link_misses=misses, stats=stats, scratch=spill.root)

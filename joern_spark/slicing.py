@@ -1,4 +1,4 @@
-"""JSON slice sinks — the ``joern-slice`` tool re-expressed Spark-first.
+"""Program slices — the ``joern-slice`` tool re-expressed Spark-first.
 
 Reference:
 - ``dataflowengineoss/.../slicing/DataFlowSlicing.scala:20-66`` — per call
@@ -162,10 +162,3 @@ def usage_slices(nodes: DataFrame, edges: DataFrame,
         F.size("invoked_calls") + F.size("arg_to_calls") >= min_num_calls
     )
 
-
-def write_slices(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    """joern-slice sink: JSON files for both slice flavors."""
-    sn, se = data_flow_slice(nodes, edges)
-    sn.write.mode("overwrite").json(f"{out_dir}/dataflow_slice_nodes")
-    se.write.mode("overwrite").json(f"{out_dir}/dataflow_slice_edges")
-    usage_slices(nodes, edges).write.mode("overwrite").json(f"{out_dir}/usage_slices")

@@ -12,6 +12,13 @@ Writes are atomic-by-rename at the directory level: data lands in
 ``<name>.tmp-<token>`` and is renamed to ``<name>`` only after the write
 job completes, so a killed write can never leave a half-visible stage
 (SURVEY.md §1.3 snapshot-as-layer; the Iceberg-commit proxy).
+
+A run's stage spills go to its own scratch ``SpillDir()``: a fresh temp dir,
+removed at process exit or earlier by ``remove_scratch``, in both run modes,
+so no run reads or replaces another run's spills. A durable run writes only
+its resumable ast batches to a ``SpillDir(out_dir)``. The rename is an
+``os.rename`` on the driver, so on a cluster the scratch, like any root,
+must sit on storage every executor shares: point ``TMPDIR`` there.
 """
 
 from __future__ import annotations
@@ -35,17 +42,24 @@ def _cleanup() -> None:
 atexit.register(_cleanup)
 
 
-class SpillDir:
-    """A per-run stage-spill directory (a temp dir, or the user's out_dir)."""
+def remove_scratch(root: str) -> None:
+    """Delete a scratch root now instead of at exit. Every frame that reads
+    from it (a result's lazy ``edges``, say) is unreadable afterwards."""
+    shutil.rmtree(root, ignore_errors=True)
+    if root in _CLEANUP_DIRS:
+        _CLEANUP_DIRS.remove(root)
 
-    def __init__(self, out_dir: str | None = None):
-        if out_dir:
-            self.root = out_dir
-            self._ephemeral = False
+
+class SpillDir:
+    """A directory of atomically renamed parquet writes: ``root``, or without
+    it a fresh scratch temp dir that is removed at process exit."""
+
+    def __init__(self, root: str | None = None):
+        if root:
+            self.root = root
         else:
             self.root = tempfile.mkdtemp(prefix="joern_spark_spill_")
             _CLEANUP_DIRS.append(self.root)
-            self._ephemeral = True
 
     def write(self, df: DataFrame, name: str, partition_by: str | None = None,
               guard_contiguity: bool = False) -> DataFrame:

@@ -12,6 +12,12 @@ safety and VERSION/TIMESTAMP AS OF time travel the pipeline's own
 checkpoints have (lineage.py), and ``open`` is a pure parquet read: no
 recompute, valid across Spark sessions.
 
+The triples are stored in the pipeline snapshot's layout: partitioned by
+``part_id``, one file per part_id, its rows sorted by ``part_id`` and then
+by every other column (``lineage.clustered_writer``). The other four frames
+are written as they are. ``open`` reads either layout, so versions saved
+unpartitioned stay openable.
+
     ws = Workspace(root)
     res = ws.import_code(spark, docs, name="proj1")   # run pipeline + save
     res2 = ws.open(spark, "proj1")                    # later / new session
@@ -83,7 +89,9 @@ class Workspace:
         spark = res.nodes.sparkSession
         snap_ids: dict[str, int] = {}
         for stage in _RESULT_STAGES:
-            commit_snapshot(spark, getattr(res, stage), pdir, stage)
+            commit_snapshot(spark, getattr(res, stage), pdir, stage,
+                            partition_by="part_id" if stage == "triples"
+                            else None)
             snap_ids[stage] = int(read_manifest(pdir, stage)["snapshot"])
         reg = self._read_registry()
         prev = reg["projects"].get(name, {})

@@ -5,8 +5,10 @@ The reference's Console binds `cpg` + workspace helpers into a REPL
 Spark twin builds the same bindings and evaluates traversals one-shot.
 """
 
+import os
 import subprocess
 import sys
+from collections import Counter
 
 
 def test_console_objects_over_fixture_corpus(cpg):
@@ -26,6 +28,7 @@ def test_workspace_roundtrip(spark, cpg, tmp_path):
     query results. Loads are pure snapshot reads, so they are valid in a
     brand-new Spark session too (exercised via the spawned-console test
     below using --workspace)."""
+    from joern_spark.lineage import read_manifest
     from joern_spark.query import Cpg
     from joern_spark.workspace import Workspace
 
@@ -37,7 +40,17 @@ def test_workspace_roundtrip(spark, cpg, tmp_path):
     ws2 = Workspace(str(tmp_path / "ws"))
     res = ws2.open(spark, "proj1")
     assert res.nodes.count() == cpg.nodes.count()
-    assert res.triples.count() == cpg.triples.count()
+    # the triples are stored in the pipeline snapshot's layout: one file
+    # per part_id, and the same rows as the in-memory result
+    snap = read_manifest(ws2.project_dir("proj1"), "triples")["data_dir"]
+    part_dirs = [os.path.join(snap, p) for p in os.listdir(snap)
+                 if p.startswith("part_id=")]
+    assert len(part_dirs) > 1
+    assert all(len([f for f in os.listdir(p) if f.endswith(".parquet")]) == 1
+               for p in part_dirs)
+    cols = ["subj", "pred", "obj", "doc_id", "part_id"]
+    assert Counter(tuple(r) for r in res.triples.select(*cols).collect()) == \
+        Counter(tuple(r) for r in cpg.triples.select(*cols).collect())
     q0 = Cpg(nodes=cpg.nodes, edges=cpg.edges)
     q1 = Cpg(nodes=res.nodes, edges=res.edges)
     want = sorted(r["name"] for r in q0.method().is_external(False).l())
@@ -54,22 +67,33 @@ def test_workspace_roundtrip(spark, cpg, tmp_path):
         ws2.open(spark, "proj1")
 
 
-def test_workspace_versions(spark, cpg, tmp_path):
+def test_workspace_versions(spark, cpg, tmp_path, monkeypatch):
     """Re-saving a project commits a NEW atomic version (the five stage
     snapshot ids recorded as one registry entry); older versions stay
     openable by number, and an interrupted save — stage manifests advanced
     but no version entry written — is invisible to open()."""
     import json
 
+    from joern_spark import lineage
     from joern_spark.lineage import commit_snapshot
     from joern_spark.workspace import Workspace
 
     ws = Workspace(str(tmp_path / "wsv"))
-    ws.save("p", cpg)
-    ws.save("p", cpg)  # second version
+    # version 1 in the older layout: every stage written unpartitioned
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "commit_snapshot",
+                  lambda *a, partition_by=None, **kw: commit_snapshot(*a, **kw))
+        ws.save("p", cpg)
+    ws.save("p", cpg)  # second version, triples partitioned by part_id
     res_v1 = ws.open(spark, "p", version=1)
     res_v2 = ws.open(spark, "p", version=2)
     assert res_v1.nodes.count() == res_v2.nodes.count() == cpg.nodes.count()
+    v1_snap = lineage.read_snapshot(spark, ws.project_dir("p"), "triples",
+                                    snapshot_id=1)
+    assert not v1_snap.inputFiles()[0].split("/")[-2].startswith("part_id=")
+    cols = ["subj", "pred", "obj", "doc_id", "part_id"]
+    assert Counter(tuple(r) for r in res_v1.triples.select(*cols).collect()) \
+        == Counter(tuple(r) for r in res_v2.triples.select(*cols).collect())
 
     # simulate a save killed after ONE stage commit: nodes advances to a
     # third snapshot but no version entry appears — open() must keep

@@ -47,9 +47,11 @@ def test_materialize_resume_and_lineage(spark, out_dir):
                 for f in _parquet_files(batch)}
     assert all(r.startswith("rowtype=") for r in rowtypes)
     assert 0 < len(_parquet_files(batch)) <= _n_parse(spark, 4) * len(rowtypes)
-    # the graph is not copied: no nodes spill, and only the ast stage and
-    # the triples snapshot keep a manifest
-    assert not os.path.exists(os.path.join(out_dir, "nodes"))
+    # out_dir holds only what a later run reads: the stage spills live in
+    # the run's scratch, and only the ast stage and the triples snapshot
+    # keep a manifest
+    assert set(os.listdir(out_dir)) == \
+        {"ast_rows", "triples_data", "lineage", "_manifests"}
     assert sorted(os.listdir(os.path.join(out_dir, "_manifests"))) == \
         ["ast.json", "triples.json"]
     # the triples snapshot is clustered by its partition key: one file per
@@ -78,6 +80,49 @@ def test_materialize_resume_and_lineage(spark, out_dir):
     assert {"ast", "base_nodes", "triples"} <= stages
     assert "edges" in stages or "edges_pre_ddg" in stages
     assert all(r[1] > 0 for r in rows)
+
+
+def test_second_run_keeps_first_result_readable(spark, tmp_path):
+    """A resumed run over the same out_dir writes its spills to its own
+    scratch, so the first run's lazy frames, which read the first run's
+    spills, still count, and equal the second run's."""
+    d = str(tmp_path / "twice")
+    docs = fixture_docs_df(spark)
+    r1 = run_pipeline(spark, docs, out_dir=d, n_parts=4)
+    r2 = run_pipeline(spark, docs, out_dir=d, n_parts=4)
+    assert r2.stats["ast_resumed_parts"] > 0
+    assert r1.edges.count() == r2.edges.count() > 0
+    assert r1.link_misses.count() == r2.link_misses.count()
+
+
+def test_clustered_snapshot_bytes_independent_of_row_order(spark, cpg,
+                                                           tmp_path):
+    """The same rows committed from two input orders give byte-identical
+    files per part_id: each file is sorted by part_id and then by every
+    other column, so its bytes depend only on its rows."""
+    from joern_spark.lineage import commit_snapshot, read_manifest
+
+    def files_by_part(d, df):
+        commit_snapshot(spark, df, d, "triples", partition_by="part_id")
+        snap = read_manifest(d, "triples")["data_dir"]
+        out = {}
+        for p in sorted(os.listdir(snap)):
+            if p.startswith("part_id="):
+                [f] = _parquet_files(os.path.join(snap, p))
+                with open(f, "rb") as fh:
+                    out[p] = (os.path.getsize(f), fh.read())
+        return out
+
+    # checkpointed, so the optimizer cannot drop either order in front of
+    # the writer's own shuffle
+    df = cpg.triples
+    a = files_by_part(str(tmp_path / "a"), df.repartition(7).localCheckpoint())
+    b = files_by_part(str(tmp_path / "b"),
+                      df.orderBy(F.desc("subj")).localCheckpoint())
+    assert len(a) > 1
+    assert {p: size for p, (size, _) in a.items()} == \
+        {p: size for p, (size, _) in b.items()}
+    assert a == b
 
 
 def test_resumed_output_identical(spark, cpg, out_dir):

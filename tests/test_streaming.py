@@ -3,6 +3,7 @@ watermarked windows, stateful sessionization vs its batch oracle."""
 
 import os
 import shutil
+import tempfile
 import time
 
 import pytest
@@ -55,11 +56,18 @@ def test_incremental_ingest_matches_batch(spark, stream_dirs):
     docs_df(spark, all_docs[:4]).write.mode("append").parquet(docs_dir)
     docs_df(spark, all_docs[4:]).write.mode("append").parquet(docs_dir)
 
+    def spill_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir())
+                if d.startswith("joern_spark_spill_")}
+
+    before = spill_dirs()
     q = stream_triple_factory(spark, docs_dir, out_dir, n_parts=4)
     try:
         q.awaitTermination(300)
     finally:
         q.stop()
+    # every micro-batch deleted its run's scratch spills
+    assert spill_dirs() <= before
 
     streamed = spark.read.parquet(f"{out_dir}/triples_stream")
     batch = run_pipeline(spark, docs_df(spark, all_docs), n_parts=4).triples
