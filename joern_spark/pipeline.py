@@ -85,7 +85,9 @@ def run_pipeline(
     n_parts: int = 32,
     with_dataflow: bool = True,
 ) -> CpgResult:
-    stats: dict = {}
+    # the run's decisions the triples are built with; Workspace.save records
+    # them, so an opened project derives the same triples
+    stats: dict = {"n_parts": n_parts}
 
     # ---- stage: ast (resumable per partition with out_dir) ---------------
     t0 = time.time()
@@ -196,8 +198,8 @@ def run_pipeline(
             + sum(counts.get(k, 0) for k in ("METHOD", "TYPE_DECL", "MEMBER",
                                              "FILE"))
         )
-        stats["vocab_n"] = vocab_n
         fits = vocab_n <= dims.MAX_BROADCAST_DIM
+        stats["vocab_n"], stats["fits"] = vocab_n, fits
         nodes = nodes0.unionByName(vocab)
         # the two spills are independent — submit both to the pool so the
         # (join-light) base union and the (join-heavy) candidate pool run as

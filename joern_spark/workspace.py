@@ -4,19 +4,20 @@ Reference: the console's workspace handling —
 ``console/src/main/scala/io/joern/console/workspacehandling/
 WorkspaceManager.scala`` (importCode / open / close / delete over a
 ``workspace/<project>/`` directory of serialized CPGs) and
-``Console.scala``'s ``importCode`` starter. The Spark twin keeps one
-directory per project, each holding the five result frames
-(nodes / edges / spans / triples / link_misses) as atomic
-``commit_snapshot`` stages — so every project gets the same torn-write
-safety and VERSION/TIMESTAMP AS OF time travel the pipeline's own
-checkpoints have (lineage.py), and ``open`` is a pure parquet read: no
-recompute, valid across Spark sessions.
+``Console.scala``'s ``importCode`` starter. Like Joern's workspace, which
+keeps only the graph (``cpg.bin``) and exports on demand, the Spark twin
+keeps one directory per project holding the CPG's three frames (nodes /
+edges / spans) as atomic ``commit_snapshot`` stages — so every project gets
+the same torn-write safety and VERSION/TIMESTAMP AS OF time travel the
+pipeline's own checkpoints have (lineage.py), and ``open`` needs no
+pipeline recompute, in any Spark session.
 
-The triples are stored in the pipeline snapshot's layout: partitioned by
-``part_id``, one file per part_id, its rows sorted by ``part_id`` and then
-by every other column (``lineage.clustered_writer``). The other four frames
-are written as they are. ``open`` reads either layout, so versions saved
-unpartitioned stay openable.
+The two exports are derived on ``open`` from the stored frames: ``triples``
+by ``build_triples`` with the ``n_parts`` and ``fits`` the version entry
+records, and ``link_misses`` from the CALL edges. So an opened project's
+``triples`` is a lazy build over the CPG, not a read. A version saved when
+the exports were stored too lists ``triples`` and ``link_misses`` among
+its stages and opens from those stored frames.
 
     ws = Workspace(root)
     res = ws.import_code(spark, docs, name="proj1")   # run pipeline + save
@@ -33,8 +34,10 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_RESULT_STAGES = ["nodes", "edges", "spans", "triples", "link_misses"]
+# the CPG; the exports (triples, link_misses) are derived from it on open
+_STORED_STAGES = ["nodes", "edges", "spans"]
 
 
 class Workspace:
@@ -72,15 +75,16 @@ class Workspace:
 
     # ---- save / load ------------------------------------------------------
     def save(self, name: str, res) -> str:
-        """Commit a CpgResult's frames as a new project VERSION.
+        """Commit a CpgResult's CPG frames as a new project VERSION.
 
-        Each frame goes through ``commit_snapshot`` (fresh snap dir +
-        manifest-pointer flip); the registry then records the five stage
-        snapshot ids as ONE atomic version entry. A save killed between
-        stage commits never writes that entry, so ``open`` can never serve
-        a mixed-version project (stage manifests alone are per-stage
-        atomic, not mutually consistent — the version entry is the commit
-        point).
+        Each of nodes / edges / spans goes through ``commit_snapshot``
+        (fresh snap dir + manifest-pointer flip); the registry then records
+        the three stage snapshot ids, with the run's ``n_parts`` and
+        ``fits`` (``res.stats``) that ``open`` derives the triples with, as
+        ONE atomic version entry. A save killed between stage commits never
+        writes that entry, so ``open`` can never serve a mixed-version
+        project (stage manifests alone are per-stage atomic, not mutually
+        consistent — the version entry is the commit point).
         """
         from .lineage import commit_snapshot, read_manifest
 
@@ -88,15 +92,15 @@ class Workspace:
         os.makedirs(pdir, exist_ok=True)
         spark = res.nodes.sparkSession
         snap_ids: dict[str, int] = {}
-        for stage in _RESULT_STAGES:
-            commit_snapshot(spark, getattr(res, stage), pdir, stage,
-                            partition_by="part_id" if stage == "triples"
-                            else None)
+        for stage in _STORED_STAGES:
+            commit_snapshot(spark, getattr(res, stage), pdir, stage)
             snap_ids[stage] = int(read_manifest(pdir, stage)["snapshot"])
         reg = self._read_registry()
         prev = reg["projects"].get(name, {})
         versions = list(prev.get("versions", []))
         versions.append({"stages": snap_ids,
+                         "n_parts": res.stats["n_parts"],
+                         "fits": res.stats["fits"],
                          "saved_ms": int(time.time() * 1000)})
         reg["projects"][name] = {
             "dir": pdir,
@@ -109,15 +113,18 @@ class Workspace:
 
     def open(self, spark: SparkSession, name: str,
              version: int | None = None, as_of_ms: int | None = None):
-        """Load a saved project into a CpgResult — a pure snapshot read
-        (works in a fresh Spark session; no pipeline recompute).
+        """Load a saved project into a CpgResult: a snapshot read of the
+        CPG plus the lazily derived exports (works in a fresh Spark session;
+        no pipeline recompute).
 
         ``version`` (1-based) / ``as_of_ms`` open an older save. Every open
-        resolves through ONE registry version entry — the five stage
-        snapshot ids recorded together at save time — so stages can never
-        mix across saves even if a later save was killed mid-commit."""
+        resolves through ONE registry version entry — the stage snapshot ids
+        recorded together at save time — so stages can never mix across
+        saves even if a later save was killed mid-commit."""
         from .lineage import read_snapshot
+        from .operators.callgraph import link_misses
         from .pipeline import CpgResult
+        from .triples import build_triples
 
         reg = self._read_registry()
         if name not in reg["projects"]:
@@ -141,14 +148,23 @@ class Workspace:
         else:
             entry = versions[-1]
         frames: dict[str, DataFrame] = {}
-        for stage in _RESULT_STAGES:
-            df = read_snapshot(spark, pdir, stage,
-                               snapshot_id=entry["stages"][stage])
+        for stage, snap in entry["stages"].items():
+            df = read_snapshot(spark, pdir, stage, snapshot_id=snap)
             if df is None:
                 raise ValueError(f"project {name!r}: stage {stage} has no "
                                  f"committed snapshot")
             frames[stage] = df
-        res = CpgResult(**frames, stats={"workspace": name})
+        stats = {"workspace": name}
+        if "triples" not in frames:
+            # a version that stores only the CPG: derive the exports
+            n_parts, fits = entry["n_parts"], entry["fits"]
+            nodes, edges = frames["nodes"], frames["edges"]
+            frames["triples"] = build_triples(nodes, edges, frames["spans"],
+                                              n_parts=n_parts, fits=fits)
+            frames["link_misses"] = link_misses(
+                nodes, edges.filter(F.col("kind") == "CALL"))
+            stats.update(n_parts=n_parts, fits=fits)
+        res = CpgResult(**frames, stats=stats)
         self._open[name] = res
         return res
 
@@ -192,8 +208,8 @@ class Workspace:
     # ---- lifecycle --------------------------------------------------------
     def close(self, name: str) -> None:
         """Reference ``cpg.close()``: drop the in-session handle (frames are
-        plain snapshot reads, so there is nothing pinned beyond the session;
-        reopen with :meth:`open`)."""
+        lazy over snapshot reads, so there is nothing pinned beyond the
+        session; reopen with :meth:`open`)."""
         self._open.pop(name, None)
 
     def delete(self, name: str) -> None:

@@ -9,6 +9,8 @@ drop into a Python REPL with the same objects the Scala console binds:
     cpg    joern_spark.query.Cpg over the nodes/edges frames
            (cpg.method("^flow$").ast_children().l(), cpg.call("malloc")...)
     res    CpgResult — nodes / edges / spans / triples / link_misses frames
+           (for a project opened from --workspace, triples and link_misses
+           are derived from the stored CPG: a build, not a read)
     spark  the SparkSession
     F      pyspark.sql.functions
     run_scan(res.nodes, res.edges)   joern-scan analog (findings DataFrame)
@@ -46,7 +48,7 @@ def build(sf_dir: str | None = None, out_dir: str | None = None,
     """Build the session + pipeline objects the console binds.
 
     With ``workspace``: open ``project`` from the named workspace when it is
-    already saved there (a pure snapshot read — no pipeline run, the
+    already saved there (a snapshot read of the CPG — no pipeline run, the
     reference's ``open``), else ``importCode`` the corpus into it and save.
     """
     from pyspark.sql import functions as F  # noqa: N812
